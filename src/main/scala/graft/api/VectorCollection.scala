@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.search.TopK
 import graft.index.Sink
 
@@ -95,21 +96,34 @@ class VectorCollection private (
     val path: String,
     val config: CollectionConfig) {
 
-  private[api] def table: DataFrame = spark.read.parquet(path)
+  // Read path: the collection's schema is resolved once per handle
+  // (parquet schema inference is a Spark job on every bare
+  // `spark.read.parquet`), while the file listing stays per read, so
+  // rows another handle or a stream appended are visible to the next
+  // request. An append through this handle keeps the schema when it
+  // writes the same columns; every rewrite through it drops it. A
+  // schema change made through another handle is seen after reopen.
+  private val data = new SchemaMemo(spark, path)
+  private val ivf = new SchemaMemo(spark, ivfPath)
+
+  private[api] def table: DataFrame = data.read
 
   /** C2: synchronous batch upsert. Returns the number of rows written
     * by this call; the reference's `processed == points_count` parity
     * check is `count` (kept separate so per-batch writes don't pay an
     * O(collection) scan). */
-  def upsert(points: DataFrame): Long =
-    Sink.append(points, path, config.shardCol.toSeq)
+  def upsert(points: DataFrame): Long = appendRows(points)
 
   /** Incremental upsert: skip ids already present (fixes the
     * reference's duplicate-on-reindex; SURVEY.md §7.6). Returns rows
     * actually written (0 when everything already existed). */
-  def upsertIncremental(points: DataFrame): Long = {
-    val fresh = Sink.incremental(points, table, config.idCol)
-    Sink.append(fresh, path, config.shardCol.toSeq)
+  def upsertIncremental(points: DataFrame): Long =
+    appendRows(Sink.incremental(points, table, config.idCol))
+
+  private def appendRows(points: DataFrame): Long = {
+    val n = Sink.append(points, path, config.shardCol.toSeq)
+    data.keepIfSame(points.schema, config.shardCol.toSeq)
+    n
   }
 
   /** True Qdrant upsert: REPLACE points whose id already exists, append
@@ -123,7 +137,7 @@ class VectorCollection private (
     require(config.shardCol.isEmpty,
       "upsertReplace on a sharded collection is not supported; " +
         "delete+upsert within the shard instead")
-    Sink.upsertReplace(spark, points, path, config.idCol)
+    data.rewrite(Sink.upsertReplace(spark, points, path, config.idCol))
   }
 
   /** points_count. */
@@ -138,17 +152,14 @@ class VectorCollection private (
     require(!config.multiVector, "dense search on a multi-vector collection")
     require(queryVec.length == config.dim,
       s"query dim ${queryVec.length} != collection dim ${config.dim}")
-    val q = spark.range(1).select(typedlit(queryVec).as("q"))
-    TopK.dense(table, q, config.idCol, config.vectorCol, k,
-      payloadFilter = filter, scoreThreshold = scoreThreshold,
-      metric = config.distance)
+    TopK.dense(table, typedlit(queryVec), config.idCol, config.vectorCol, k,
+      filter, scoreThreshold, config.distance)
   }
 
   /** D2: MaxSim late-interaction top-k for multi-vector collections. */
   def searchMaxSim(queryVecs: Seq[Seq[Float]], k: Int = 5): DataFrame = {
     require(config.multiVector, "maxsim search on a dense collection")
-    val q = spark.range(1).select(typedlit(queryVecs).as("q"))
-    TopK.maxSim(table, q, config.idCol, config.vectorCol, k)
+    TopK.maxSim(table, typedlit(queryVecs), config.idCol, config.vectorCol, k)
   }
 
   /** [[searchMaxSim]] for N query matrices in ONE collection pass —
@@ -189,10 +200,8 @@ class VectorCollection private (
           config.namedVectors.keys.toSeq.sorted.mkString(", ")))
     require(queryVec.length == dim,
       s"query dim ${queryVec.length} != '$name' vector dim $dim")
-    val q = spark.range(1).select(typedlit(queryVec).as("q"))
-    TopK.dense(table, q, config.idCol, vecCol, k,
-      payloadFilter = filter, scoreThreshold = scoreThreshold,
-      metric = config.distance)
+    TopK.dense(table, typedlit(queryVec), config.idCol, vecCol, k,
+      filter, scoreThreshold, config.distance)
   }
 
   /** Qdrant Universal Query API's by-id form
@@ -343,13 +352,13 @@ class VectorCollection private (
     * File-granular rewrite; see [[graft.index.Sink.deleteMatching]]. */
   def delete(ids: Seq[Long]): Long = {
     requireUnsharded("delete")
-    Sink.deleteMatching(spark, path, col(config.idCol).isInCollection(ids))
+    data.rewrite(Sink.deleteMatching(spark, path, col(config.idCol).isInCollection(ids)))
   }
 
   /** Qdrant `client.delete` with a payload filter. */
   def deleteByFilter(filter: Column): Long = {
     requireUnsharded("deleteByFilter")
-    Sink.deleteMatching(spark, path, filter)
+    data.rewrite(Sink.deleteMatching(spark, path, filter))
   }
 
   /** Collection rows under the (vec_id, embedding) names the query-API
@@ -655,7 +664,7 @@ class VectorCollection private (
       .orderBy(col("_h").asc, col("vec_id").asc)
       .limit(nClusters)
       .collect().zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Float](1).toArray) }
+      .map { case (r, i) => (i.toLong, r.getSeq[Number](1).map(_.floatValue).toArray) }
       .toSeq
     // the empty-aggregate class: zero seeds would fail deep inside the
     // centroid argmax with an opaque error instead of naming the cause
@@ -671,8 +680,8 @@ class VectorCollection private (
     // fragments each cluster into one file per input task, and probes
     // pay listing+open per fragment; one build-time range shuffle
     // yields ≤ shuffle.partitions sized files, cluster-contiguous
-    idx.repartitionByRange(col("cluster_id"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(ivfPath)
+    ivf.rewrite(idx.repartitionByRange(col("cluster_id"), col("vec_id"))
+      .write.mode("overwrite").partitionBy("cluster_id").parquet(ivfPath))
     val sidecar = trained
       .map { case (id, v) => s"$id,${v.mkString(",")}" }
       .mkString("\n")
@@ -719,7 +728,7 @@ class VectorCollection private (
     // filter written against exact search's schema (col(idCol) …)
     // works unchanged here; the rename is a projection, filters still
     // push through it to the scan
-    spark.read.parquet(ivfPath)
+    ivf.read
       .withColumnRenamed("vec_id", config.idCol)
       .filter(col("cluster_id").isInCollection(probes) && filter)
       .select(col(config.idCol),
@@ -751,18 +760,12 @@ class VectorCollection private (
       .filterNot(c => c == config.idCol || c == config.vectorCol)
     val pts = points.select(Seq(col(config.idCol).as("vec_id"),
       col(config.vectorCol).as("embedding")) ++ others.map(col).toSeq: _*)
-    val existingIds = spark.read.parquet(ivfPath).select(col("vec_id"))
-    val fresh = pts.join(existingIds, Seq("vec_id"), "left_anti")
-      .select(pts.columns.map(col).toSeq: _*)
-      .cache()
-    val n = fresh.count()
-    if (n > 0) {
-      fresh
-        .select(col("*"),
-          graft.ops.Similarity.ivfClusterId(col("embedding"), centCols).as("cluster_id"))
-        .write.mode("append").partitionBy("cluster_id").parquet(ivfPath)
-    }
-    fresh.unpersist()
+    val fresh = pts.join(ivf.read.select(col("vec_id")), Seq("vec_id"), "left_anti")
+      .select(col("*"),
+        graft.ops.Similarity.ivfClusterId(col("embedding"), centCols).as("cluster_id"))
+    val n = Sink.countedWrite(fresh)(
+      _.write.mode("append").partitionBy("cluster_id").parquet(ivfPath))
+    ivf.keepIfSame(fresh.schema, Seq("cluster_id"))
     n
   }
 
@@ -773,24 +776,24 @@ class VectorCollection private (
     * would silently no-op while still reporting the row as updated. */
   def setPayload(filter: Column, payloadCol: String, key: String, value: String): Long = {
     requireUnsharded("setPayload")
-    Sink.updatePayload(spark, path, filter, payloadCol,
+    data.rewrite(Sink.updatePayload(spark, path, filter, payloadCol,
       p => map_concat(
         map_filter(coalesce(p, map().cast("map<string,string>")), (k, _) => k =!= key),
-        map(lit(key), lit(value))))
+        map(lit(key), lit(value)))))
   }
 
   /** Qdrant `delete_payload`: drop one key from matching points. */
   def deletePayloadKey(filter: Column, payloadCol: String, key: String): Long = {
     requireUnsharded("deletePayloadKey")
-    Sink.updatePayload(spark, path, filter, payloadCol,
-      p => map_filter(coalesce(p, map().cast("map<string,string>")), (k, _) => k =!= key))
+    data.rewrite(Sink.updatePayload(spark, path, filter, payloadCol,
+      p => map_filter(coalesce(p, map().cast("map<string,string>")), (k, _) => k =!= key)))
   }
 
   /** Qdrant `clear_payload`: empty the payload of matching points. */
   def clearPayload(filter: Column, payloadCol: String): Long = {
     requireUnsharded("clearPayload")
-    Sink.updatePayload(spark, path, filter, payloadCol,
-      _ => map().cast("map<string,string>"))
+    data.rewrite(Sink.updatePayload(spark, path, filter, payloadCol,
+      _ => map().cast("map<string,string>")))
   }
 
   /** Qdrant `update_vectors`: replace the stored vector of each named
@@ -826,8 +829,8 @@ class VectorCollection private (
     val replacement = coalesce(
       try_element_at(lookup, col(config.idCol)).cast(dt),
       col(config.vectorCol))
-    Sink.updatePayload(spark, path, col(config.idCol).isInCollection(ids),
-      config.vectorCol, _ => replacement)
+    data.rewrite(Sink.updatePayload(spark, path, col(config.idCol).isInCollection(ids),
+      config.vectorCol, _ => replacement))
   }
 
   /** Qdrant `get_collection`: declared config + live counters. Cheap
@@ -869,8 +872,8 @@ class VectorCollection private (
     require(ids.nonEmpty, "delete_vectors needs at least one point id")
     // null in the COLUMN'S stored type — see the updateVectors note
     val dt = table.schema(vecCol).dataType.catalogString
-    Sink.updatePayload(spark, path, col(config.idCol).isInCollection(ids),
-      vecCol, _ => lit(null).cast(dt))
+    data.rewrite(Sink.updatePayload(spark, path, col(config.idCol).isInCollection(ids),
+      vecCol, _ => lit(null).cast(dt)))
   }
 
   /** Qdrant `batch_update_points`: a SEQUENCE of mutations applied in
@@ -899,7 +902,7 @@ class VectorCollection private (
     * range disjointness spec-asserted). Returns files written. */
   def createPayloadIndex(field: String, targetRowsPerFile: Long = 1L << 20): Int = {
     requireUnsharded("createPayloadIndex")
-    Sink.indexPayload(spark, path, field, targetRowsPerFile)
+    data.rewrite(Sink.indexPayload(spark, path, field, targetRowsPerFile))
   }
 
   /** `create_payload_index` over TWO fields: Z-order (Morton) layout so
@@ -908,16 +911,17 @@ class VectorCollection private (
   def createPayloadIndexZ(
       fieldA: String, fieldB: String,
       targetRowsPerFile: Long = 1L << 20): Int =
-    Sink.indexPayloadZ(spark, path, fieldA, fieldB, targetRowsPerFile)
+    data.rewrite(Sink.indexPayloadZ(spark, path, fieldA, fieldB, targetRowsPerFile))
 
   /** Maintenance: compact accumulated small part files into
     * `targetRowsPerFile`-sized ones (Qdrant's segment optimizer).
     * Unsharded collections rewrite the whole directory; sharded ones
     * compact each shard subtree independently, preserving the
     * directory-encoded shard column and its routed-search pruning. */
-  def compact(targetRowsPerFile: Long = 1L << 20): Int =
+  def compact(targetRowsPerFile: Long = 1L << 20): Int = data.rewrite {
     if (config.shardCol.isDefined) Sink.compactShards(spark, path, targetRowsPerFile)
     else Sink.compact(spark, path, targetRowsPerFile)
+  }
 
   /** Qdrant `create_snapshot`: point-in-time file-level copy. Returns
     * files copied. */
@@ -926,7 +930,7 @@ class VectorCollection private (
   /** Qdrant `recover_snapshot`: replace contents from a snapshot
     * (crash-safe rename-aside swap). */
   def restoreSnapshot(snapPath: String): Unit =
-    Sink.restoreSnapshot(spark, snapPath, path)
+    data.rewrite(Sink.restoreSnapshot(spark, snapPath, path))
 
   /** D3: hit projection with 'Unknown' defaults. */
   def formatResults(hits: DataFrame, payloadCols: Seq[String]): DataFrame =
@@ -1203,5 +1207,36 @@ object VectorCollection {
       field("dim").toInt, field("multiVector").toBoolean, shard, named, dist,
       sparse)
     new VectorCollection(spark, path, cfg)
+  }
+}
+
+/** A parquet directory read with its schema resolved once: the first
+  * read infers it (one Spark job), later reads pass it to
+  * `spark.read.schema(...)` and only list files. */
+private final class SchemaMemo(spark: SparkSession, path: String) {
+  @volatile private var schema: Option[StructType] = None
+
+  def read: DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(path)
+    case None =>
+      val df = spark.read.parquet(path)
+      schema = Some(df.schema)
+      df
+  }
+
+  /** Run a rewrite of the directory's files; the next read resolves
+    * the schema afresh. */
+  def rewrite[T](body: => T): T =
+    try body finally schema = None
+
+  /** After appending `written` (partitioned by `partitionCols`): keep
+    * the schema only if the append wrote the same data columns.
+    * Partition column types are inferred from directory names, so they
+    * are left out of the comparison. */
+  def keepIfSame(written: StructType, partitionCols: Seq[String]): Unit = {
+    def cols(st: StructType) = st.fields.collect {
+      case f if !partitionCols.contains(f.name) => f.name -> f.dataType.catalogString
+    }.toSet
+    if (schema.exists(s => cols(s) != cols(written))) schema = None
   }
 }

@@ -1,7 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, floor, greatest, least, lit, max, min, shiftleft, shiftright}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, floor, greatest, least, lit, max, min, shiftleft, shiftright}
 
 /** Collection DDL + sink operators (SURVEY.md §2 C1–C2).
   *
@@ -381,7 +381,8 @@ object Sink {
   }
 
   /** C2: batch upsert — append semantics (reference ids are always
-    * fresh). Returns the count of rows written in THIS call; the
+    * fresh). Returns the count of rows written in THIS call, observed
+    * on the write's own pass (one Spark job, no cache); the
     * reference's `processed == points_count` parity check is a
     * separate full-collection count the caller runs when wanted —
     * doing it here would make every streaming micro-batch pay an
@@ -393,29 +394,31 @@ object Sink {
     * directory-encoded partition columns (Qdrant's custom sharding —
     * `shard_key_selector` routing), so a shard-routed read prunes to
     * the shard's subtree without touching other shards' bytes. */
-  def append(points: DataFrame, path: String, shardCols: Seq[String]): Long = {
-    val staged = points.cache()
-    val written = staged.count()
+  def append(points: DataFrame, path: String, shardCols: Seq[String]): Long =
     withPathLock(path) {
-      val w = staged.write.mode(SaveMode.Append)
-      (if (shardCols.nonEmpty) w.partitionBy(shardCols: _*) else w).parquet(path)
+      countedWrite(points) { df =>
+        val w = df.write.mode(SaveMode.Append)
+        (if (shardCols.nonEmpty) w.partitionBy(shardCols: _*) else w).parquet(path)
+      }
     }
-    staged.unpersist()
-    written
-  }
 
   /** Export a collection/table as JSON Lines — the interchange shape
     * the JSON source (A5) reads back and downstream tokenizer/training
     * jobs consume. Vector columns serialize as JSON arrays; each task
     * writes one shard of lines, so the export parallelizes like any
     * write and never funnels through the driver. Returns rows written
-    * (counted on the cached input, not by re-reading the sink). */
-  def exportJsonl(points: DataFrame, path: String): Long = {
-    val staged = points.cache()
-    val written = staged.count()
-    staged.write.mode(SaveMode.Overwrite).json(path)
-    staged.unpersist()
-    written
+    * (observed on the write's own pass, not by re-reading the sink). */
+  def exportJsonl(points: DataFrame, path: String): Long =
+    countedWrite(points)(_.write.mode(SaveMode.Overwrite).json(path))
+
+  /** Run `write` over `df` and return the rows it wrote, counted by a
+    * `Dataset.observe` metric on the write's own pass — the write is
+    * the only job (the r19 clusters loop reads its probe the same
+    * way). An empty input observes 0. */
+  private[graft] def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("n")))
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** Incremental re-ingest: drop rows whose id already exists in the

@@ -149,10 +149,14 @@ private[graft] object Sizing {
     * forced-OFF on every gated family. The system property exists for
     * exactly that A/B (force off with a huge value / on with 0) — a
     * dev measurement knob, not a production switch; unset, the pinned
-    * default applies. */
-  val MaterializeRowsMin: Long =
-    sys.props.get("graft.materializeRowsMin").map(_.toLong)
-      .getOrElse(1L << 17)
+    * default applies. Read per call, so a malformed value fails the
+    * gated operator with an error naming the property instead of
+    * poisoning this object's initialization. */
+  def MaterializeRowsMin: Long =
+    sys.props.get("graft.materializeRowsMin").fold(1L << 17) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"-Dgraft.materializeRowsMin must be a whole number of rows, got '$v'"))
+    }
 
   def approxRows(df: DataFrame): Long = {
     val plan = df.queryExecution.optimizedPlan

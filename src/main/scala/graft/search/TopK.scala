@@ -10,9 +10,11 @@ import graft.vector.Kernels
   * (`with_vdr-2b-multi-v1/query_vdr_2b_multi_v1.py:78-83`,
   * `with_colpali_v1.3/qdrant_query_with_colpali.py:106-116`).
   *
-  * Scale design: the query vector is a one-row broadcast (no shuffle);
-  * scoring is a codegen'd projection over the scan; `ORDER BY score
-  * DESC LIMIT k` is planned by Catalyst as TakeOrderedAndProject —
+  * Scale design: the query vector is a plan literal (no shuffle, no
+  * broadcast job — the frame-query forms cross-join a one-row
+  * broadcast and delegate to the same body); scoring is a codegen'd
+  * projection over the scan; `ORDER BY score DESC LIMIT k` is
+  * planned by Catalyst as TakeOrderedAndProject —
   * per-partition top-k heaps merged on the driver, so no global sort
   * and no shuffle of the scored table even at 10^9 rows. Payload
   * filters (E4) sit below the projection and push down to parquet.
@@ -34,9 +36,10 @@ object TopK {
       s"unknown distance metric '$other' (cosine|dot|euclid|manhattan)")
   }
 
-  /** Dense top-k (D1): score every row of `points` against the single
-    * query vector in the one-row `query` frame, return best k.
-    * Deterministic total order: score DESC, id ASC tiebreak.
+  /** Dense top-k (D1): score every row of `points` against the query
+    * vector `query` — a literal (`typedlit(vec)`) or a column of
+    * `points` — and return the best k. Deterministic total order:
+    * score DESC, id ASC tiebreak.
     *
     * `metric` selects the Qdrant Distance: `cosine` / `dot` rank
     * similarity DESC; `euclid` / `manhattan` are distances and rank
@@ -47,21 +50,19 @@ object TopK {
     */
   def dense(
       points: DataFrame,
-      query: DataFrame,
+      query: Column,
       idCol: String,
       vecCol: String,
       k: Int,
-      queryVecCol: String = "q",
-      payloadFilter: Column = lit(true),
-      scoreThreshold: Option[Double] = None,
-      metric: String = "cosine"): DataFrame = {
+      payloadFilter: Column,
+      scoreThreshold: Option[Double],
+      metric: String): DataFrame = {
     val (scoreOf, asc) = metricFn(metric)
     val scored = points
       .filter(payloadFilter)
-      .crossJoin(broadcast(query))
       .select(
         col(idCol),
-        round(scoreOf(col(vecCol), col(queryVecCol)), 6).as("score"))
+        round(scoreOf(col(vecCol), query), 6).as("score"))
     // Qdrant score_threshold: drop hits past the floor (similarity) /
     // ceiling (distance) BEFORE the cut — fewer than k rows may
     // return. The filter sits inside the same projection stage, so it
@@ -72,23 +73,47 @@ object TopK {
       .limit(k)
   }
 
-  /** Multi-vector top-k (D2): MaxSim late interaction against a one-row
-    * broadcast frame holding the query token-matrix. */
+  /** [[dense]] against the single query vector in the one-row `query`
+    * frame: the frame broadcasts onto the filtered scan and its
+    * `queryVecCol` is the query column. */
+  def dense(
+      points: DataFrame,
+      query: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      queryVecCol: String = "q",
+      payloadFilter: Column = lit(true),
+      scoreThreshold: Option[Double] = None,
+      metric: String = "cosine"): DataFrame =
+    dense(points.filter(payloadFilter).crossJoin(broadcast(query)),
+      col(queryVecCol), idCol, vecCol, k, lit(true), scoreThreshold, metric)
+
+  /** Multi-vector top-k (D2): MaxSim late interaction against the query
+    * token-matrix `query` — a literal or a column of `docs`. */
+  def maxSim(
+      docs: DataFrame,
+      query: Column,
+      idCol: String,
+      vecsCol: String,
+      k: Int): DataFrame =
+    docs
+      .select(
+        col(idCol),
+        round(Kernels.maxsim(query, col(vecsCol)), 6).as("score"))
+      .orderBy(col("score").desc, col(idCol).asc)
+      .limit(k)
+
+  /** [[maxSim]] against the one-row broadcast frame holding the query
+    * token-matrix in `queryVecsCol`. */
   def maxSim(
       docs: DataFrame,
       query: DataFrame,
       idCol: String,
       vecsCol: String,
       k: Int,
-      queryVecsCol: String = "q"): DataFrame = {
-    docs
-      .crossJoin(broadcast(query))
-      .select(
-        col(idCol),
-        round(Kernels.maxsim(col(queryVecsCol), col(vecsCol)), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+      queryVecsCol: String = "q"): DataFrame =
+    maxSim(docs.crossJoin(broadcast(query)), col(queryVecsCol), idCol, vecsCol, k)
 
   /** Result projection (D3): per-hit output with 'Unknown' defaults for
     * missing payload keys, mirroring `format_results`

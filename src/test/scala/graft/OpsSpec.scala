@@ -441,6 +441,18 @@ class OpsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
+  test("a malformed -Dgraft.materializeRowsMin fails with an error naming the property") {
+    val key = "graft.materializeRowsMin"
+    val prev = sys.props.get(key)
+    sys.props(key) = "128k"
+    try {
+      val e = intercept[IllegalArgumentException](graft.ops.Sizing.MaterializeRowsMin)
+      assert(e.getMessage.contains(key) && e.getMessage.contains("128k"), e.getMessage)
+      sys.props(key) = "4096"
+      assert(graft.ops.Sizing.MaterializeRowsMin === 4096L)
+    } finally prev.fold(sys.props.remove(key))(v => sys.props.put(key, v))
+  }
+
   test("gramWiden: zero jobs at operator-construction on a derived input; memoized bare-table count") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {

@@ -44,6 +44,20 @@ class VectorCollectionSpec extends SparkSpec {
     assert(e2.getMessage.contains("nClusters"))
   }
 
+  test("buildIvfIndex on a buildPoints (array<double>) collection serves searchAnn") {
+    val dir = s"${tmp()}/col"
+    val pts = Ingest.buildPoints(Ingest.tolerantDecode(
+      Ingest.withPaths(t(spark, sf, "documents")))).cache()
+    assert(pts.schema("embedding").dataType.catalogString === "array<double>")
+    val c = VectorCollection.ensure(spark, dir, pts,
+      CollectionConfig("point_id", "embedding", 64, multiVector = false))
+    c.upsert(pts)
+    c.buildIvfIndex(nClusters = 4, lloydIters = 1)
+    val q = pts.head.getSeq[Double](pts.schema.fieldIndex("embedding")).map(_.toFloat)
+    assert(c.searchAnn(q, k = 5, nprobe = 4).count() === math.min(5L, pts.count()))
+    pts.unpersist()
+  }
+
   test("get_collections / collection_exists / delete_collection lifecycle") {
     val root = tmp()
     val pts = points.limit(20).cache()

@@ -103,41 +103,8 @@ object Bench {
     // FOREIGN load — the thing the flag exists to detect.
     val loadAtEntry = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Streaming-run scratch (checkpoints, fixture sources, sinks — all
-    // throwaway per-run state) goes to tmpfs when the box has one:
-    // the offset/commit-log and state-snapshot fsyncs were a fixed
-    // ~0.2-0.5 s disk tax inside every timed streaming query. A real
-    // deployment's checkpointLocation is durable storage by definition;
-    // this knob only moves the bounded-fixture scaffolding.
-    val shm = new java.io.File("/dev/shm")
-    sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
-      .orElse(if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft_stream") else None)
-      .foreach { d =>
-        // per-run subdir + delete-on-exit: tmpfs is RAM — leaked
-        // checkpoint/sink dirs would otherwise accumulate across reps
-        // and runs until /dev/shm (and with it, memory) fills
-        val runDir = s"$d/run_${java.lang.ProcessHandle.current.pid}"
-        spark.conf.set("spark.graft.stream.scratchDir", runDir)
-        java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          val p = java.nio.file.Paths.get(runDir)
-          if (java.nio.file.Files.exists(p)) {
-            val walk = java.nio.file.Files.walk(p)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => java.nio.file.Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        }, "graft-bench-scratch-clean"))
-      }
+    val spark = GraftSession.local()
+    GraftSession.tmpfsStreamScratch(spark)
     // SPARK_GRAFT_ONLY restricts to a comma-separated query subset
     // (local-dev knob). Each query is timed SPARK_GRAFT_REPS times and
     // the MINIMUM is reported: the steady-state number — what a

@@ -1,11 +1,12 @@
 package graft
 
-/** One JSON string-escaper for every measurement main that hand-emits
-  * its one-line JSON (Bench detail forensics, SemDedupAudit plan-mode
-  * refusals, CkptDrill error legs). The r17 review found three
-  * divergent inline replace-chains, each missing a different control
-  * character — a message containing e.g. an ANSI escape would have
-  * made the very file written for failure forensics unparseable. */
+/** One JSON string-escaper for every main that hand-emits JSON (Bench
+  * detail forensics, CkptDrill error legs, Verify's oracle_sql.json).
+  * Divergent inline replace-chains, each missing a different control
+  * character, were consolidated here (BENCH_NOTES "r17 review pass:
+  * the drill's own validity hardened") — a message containing e.g. an
+  * ANSI escape would have made the very file written for failure
+  * forensics unparseable. */
 object JsonOut {
   /** `s` as a quoted JSON string literal: backslash, quote, and EVERY
     * control character below 0x20 escaped (\n\r\t named, the rest as

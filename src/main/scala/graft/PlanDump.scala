@@ -1,25 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, SimpleMode}
 
-/** Dev tool: dump formatted physical plans of representative queries
-  * to PLANS.md — the evidence that the plans have the right shape for
-  * scale (pushdown, TakeOrderedAndProject, broadcast joins, exchange
-  * reuse) without having to run the engine. */
+/** Dev tool: physical-plan evidence without running the engine.
+  *
+  * With no arguments (or `[sfDir] [out]`), writes the simple plans of
+  * representative queries to PLANS.md — the evidence that the plans
+  * have the right shape for scale (pushdown, TakeOrderedAndProject,
+  * broadcast joins, exchange reuse). The session is pinned to
+  * `local[4]` so the committed file's exchange widths do not depend on
+  * the machine that regenerates it.
+  *
+  * With `<tag> <outDir> q1,q2,...`, writes the formatted plan of each
+  * named suite query to `<outDir>/<name>_<tag>.txt` — the before/after
+  * plan receipts an optimization note points at (sf dir via
+  * SPARK_GRAFT_SF_DIR, default sf0.01; bench-shaped `local[cpus]`
+  * session). */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = args match {
+    case Array(tag, outDir, names) =>
+      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+      val spark = GraftSession.local()
+      Files.createDirectories(Paths.get(outDir))
+      names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
+        Files.writeString(Paths.get(s"$outDir/${n}_$tag.txt"),
+          plan(spark, n, sfDir, FormattedMode))
+        println(s"[plandump] wrote $outDir/${n}_$tag.txt")
+      }
+      spark.stop()
+    case _ =>
+      val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
+      val out = args.lift(1).getOrElse("PLANS.md")
+      val spark = GraftSession.local(cpus = 4)
+      Files.writeString(Paths.get(out), plansMd(spark, sfDir))
+      spark.stop()
+  }
+
+  private def plan(spark: SparkSession, name: String, sfDir: String,
+      mode: ExplainMode): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(mode)
+
+  private def plansMd(spark: SparkSession, sfDir: String): String = {
     val picks = Seq(
       "d1_topk_dense" -> "dense top-k: scan → codegen'd cosine projection → TakeOrderedAndProject (no global sort, no shuffle)",
       "e4_topk_filtered" -> "payload filter pushed into the parquet scan below scoring",
@@ -89,13 +112,10 @@ object PlanDump {
     sb.append(s"Generated by `graft.PlanDump` on `$sfDir`. Regenerate: ")
     sb.append("`sbt \"runMain graft.PlanDump\"`.\n")
     picks.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$why\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode))
+      sb.append(plan(spark, name, sfDir, SimpleMode))
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    spark.stop()
+    sb.toString
   }
 }

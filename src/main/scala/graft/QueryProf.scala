@@ -25,27 +25,15 @@ object QueryProf {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val names = args.headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("x_dedup_clusters_star"))
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     // A/B knob: SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").map(_.trim).filter(_.contains("=")))
-      .getOrElse(Array.empty[String])
-      .foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";").map(_.trim).filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = GraftSession.local(extra = extra)
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
@@ -90,11 +78,19 @@ object QueryProf {
         "op_kn_logprob" -> ((s, dir) =>
           graft.ops.TextAnalysis.knLogprob(Tables.t(s, dir, "documents"))
             .orderBy(org.apache.spark.sql.functions.col("doc_id"))))
+    // listener events arrive async: both edges of a recording window
+    // wait for the bus to drain, so the window holds exactly its own
+    // rep's events (a fixed sleep raced a backlogged bus)
+    def drain(): Unit =
+      if (!org.apache.spark.GraftListenerBridge.drained(spark.sparkContext, 30000))
+        System.err.println(
+          "[prof] listener bus not drained in 30 s - stage tables may be incomplete")
     names.foreach { n =>
       val q = devFrames.getOrElse(n, SparkEntry.queries(n))
       // warm-up (untimed, small sf)
       try q(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count()
       catch { case _: Throwable => }
+      drain()
       var last = 0.0
       (1 to reps).foreach { r =>
         stages.clear(); jobs.clear(); jobStart.clear()
@@ -113,6 +109,7 @@ object QueryProf {
         df.queryExecution.toRdd.count()
         val t3 = System.nanoTime()
         last = (t3 - t0) / 1e9
+        drain()
         record = false
         println(f"[prof] $n rep $r: $last%.3f s " +
           f"(build ${(t1 - t0) / 1e9}%.3f, plan ${(t2 - t1) / 1e9}%.3f, " +
@@ -121,8 +118,6 @@ object QueryProf {
           println(s"== $n executed plan ==\n" +
             df.queryExecution.executedPlan.toString)
       }
-      // give listener events a moment to drain
-      Thread.sleep(300)
       println(f"== $n: last rep $last%.3f s, ${jobs.size} jobs, ${stages.size} stages ==")
       import scala.jdk.CollectionConverters._
       val js = jobs.asScala.toSeq.sortBy(_._1)

@@ -82,8 +82,10 @@ object ScaleBench {
     "x_dedup_minhash_auto" -> "documents",
     "x_dedup_ngram_wide" -> "documents",
     "x_semdedup_scaled" -> "embeddings",
-    // the r14 prunable-top re-measurement class (ForcingAudit ratio
-    // >= 1.3 at sf0.1: their historical exponents were count-pruned)
+    // the r14 prunable-top re-measurement class (count-vs-toRdd ratio
+    // >= 1.3 at sf0.1: their historical exponents were count-pruned;
+    // BENCH_NOTES "r14: the remaining prunable-top curves, audited
+    // mechanically and re-measured")
     "x_interp_logprob" -> "documents",
     "x_dsir_weights" -> "documents",
     "x_chunk_embed" -> "documents",
@@ -208,20 +210,8 @@ object ScaleBench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queries = DefaultQueries.filter { case (n, _) => qsel.forall(_.contains(n)) }
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "4").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      spark.conf.set("spark.graft.stream.scratchDir",
-        s"/dev/shm/graft_scale_${java.lang.ProcessHandle.current.pid}")
+    val spark = GraftSession.local()
+    GraftSession.tmpfsStreamScratch(spark)
     // warm-up at the smallest fixture: JIT + codegen, untimed
     queries.foreach { case (n, _) =>
       try queryFn(n)(spark, "/root/testdata/sf0.001")
@@ -315,7 +305,8 @@ object ScaleBench {
     def fexp(e: Double): String = if (e.isNaN) "null" else f3(e)
     val expsJson = obj(exps.map { case (n, segs) =>
       n -> segs.map(fexp).mkString("[", ",", "]") })
-    val topJson = obj(exps.map { case (n, segs) => n -> fexp(segs.last) })
+    // a one-dir sweep has no segment: its top exponent is null
+    val topJson = obj(exps.map { case (n, segs) => n -> segs.lastOption.fold("null")(fexp) })
     val stateJson = obj(stateRows.keys.map(_._1).toSeq.distinct.sorted.map { n =>
       n -> obj(dirs.flatMap(d =>
         stateRows.get((n, d)).map(r => d -> r.toString)))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes the ~K× corpus for the out-of-suite scale-curve
@@ -145,15 +145,7 @@ object ScaleData {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale/x10")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // optional table subset (SPARK_GRAFT_SCALE_TABLES, comma list):
     // the deepest decades are built per-family — a 1000×-events corpus
     // for the stateful-streaming curves has no use for 1000× documents

@@ -24,7 +24,7 @@ object Tables {
     *
     * All conversions are exact: integer arithmetic for the long
     * encodings, and NTZ↔LTZ casts that are identities under the UTC
-    * session timezone pinned in Verify/Bench/PlanDump/specs.
+    * session timezone that [[GraftSession]] pins for every entry point.
     */
   sealed trait TsCodec {
     /** raw `ts` → session TimestampType (epoch µs under UTC). */

@@ -409,7 +409,8 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("lshvol pricing: bucket-population arithmetic equals the banded join's candidate volume") {
-    // the r17 exact-pre-pass pricer (SemDedupAudit lshvol) must agree
+    // the r17 exact-pre-pass pricer (BENCH_NOTES "r17: cap·p
+    // validation — the third decade, from the capped side") must agree
     // with the join it prices: sum over (band, bucket) of
     // pop*(pop-1)/2 == the per-band equi-join's i<j pair count. A
     // drift here would let a config be priced against a different
@@ -436,7 +437,8 @@ class SemDedupSpec extends SparkSpec {
     // sampleRows (5000) >= n (sf0.01), so p = 1: the sampled truth IS
     // the full exact pair set and the audited recall must equal the
     // fixture-pinned fast==census parity (1.0). At scale the same
-    // code runs with p << 1 — the curve legs in SemDedupAudit.
+    // code runs with p << 1 — the curve in BENCH_NOTES "r15: semDedup
+    // drop-set recall at the 3rd/4th decade".
     val r = Similarity.semDedupRecallAudit(t(spark, sf01, "embeddings"))
     assert(r === 1.0, s"exact-sample audit must read 1.0, got $r")
   }

@@ -5,15 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(cpus = 4)
 
   val sf: String = "/root/testdata/sf0.001"
 

@@ -6,6 +6,29 @@ import org.apache.spark.sql.functions._
   * spark.sql(...) call and agree with the DataFrame kernels. */
 class SqlSurfaceSpec extends SparkSpec {
 
+  test("the suite session carries GraftSession's settings") {
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.extensions") === "graft.GraftExtensions")
+  }
+
+  test("GraftSession is the only main-code file that builds a SparkSession") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    val builders =
+      try walk.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          Files.readString(p).contains("SparkSession.builder"))
+        .map(root.relativize(_).toString).toList
+      finally walk.close()
+    assert(builders === List("graft/GraftSession.scala"))
+  }
+
   test("cosine_sim / dot_product / max_sim resolve in SQL and match kernels") {
     val r = spark.sql(
       """SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,

@@ -1,8 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, GraftResidentBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import graft.search.TopK
 import graft.index.Sink
 
@@ -96,17 +98,44 @@ class VectorCollection private (
     val path: String,
     val config: CollectionConfig) {
 
-  // Read path: the collection's schema is resolved once per handle
+  // Read path. The collection's schema is resolved once per handle
   // (parquet schema inference is a Spark job on every bare
-  // `spark.read.parquet`), while the file listing stays per read, so
-  // rows another handle or a stream appended are visible to the next
-  // request. An append through this handle keeps the schema when it
-  // writes the same columns; every rewrite through it drops it. A
-  // schema change made through another handle is seen after reopen.
-  private val data = new SchemaMemo(spark, path)
+  // `spark.read.parquet`); an append through this handle keeps it when
+  // it writes the same columns, every rewrite through it drops it, and
+  // a schema change made through another handle is seen after reopen.
+  //
+  // `search` (every filter form) and `searchMaxSim` on an unsharded
+  // collection scan the handle's resident copy: the data files decoded
+  // once into in-memory column batches, so a repeat request skips the
+  // parquet decode that dominated its cost. Each request still lists
+  // the files, and a changed (path, length) set — another handle's or a
+  // stream's append, a rewrite anywhere — rebuilds the copy from
+  // exactly the listed files inside that request's job. The copy leaves
+  // out named vectors, so a filter naming one reads parquet.
+  //
+  // Every other read stays on parquet (`table`): sharded collections
+  // and `searchShard` (the shard predicate prunes directories),
+  // `searchUsing` (column-pruned to one named vector), `searchAnn`
+  // (prunes to the probed clusters), `count`/`retrieve`/`scroll`
+  // (pushed filters and metadata counts), the id side of
+  // `upsertIncremental`, `buildIvfIndex`, `searchBatch` and the other
+  // `asPoints` APIs, and every write and rewrite. The copy is not a
+  // `Dataset.cache()`: the CacheManager would substitute it into those
+  // parquet reads of the same directory (a file index compares by root
+  // path), handing them rows that a rewrite has since retired.
+  private val data = new SchemaMemo(spark, path,
+    config.namedVectors.values.map(_._1).toSet - config.vectorCol)
   private val ivf = new SchemaMemo(spark, ivfPath)
 
   private[api] def table: DataFrame = data.read
+
+  /** The rows `search` and `searchMaxSim` score: the resident copy,
+    * unless the collection is partitioned or `filter` names a column
+    * the copy leaves out. */
+  private def scanned(filter: Column): DataFrame =
+    if (config.shardCol.nonEmpty ||
+        GraftColumnBridge.referencedNames(spark, filter).exists(data.leavesOut)) table
+    else data.resident.getOrElse(table)
 
   /** C2: synchronous batch upsert. Returns the number of rows written
     * by this call; the reference's `processed == points_count` parity
@@ -152,14 +181,14 @@ class VectorCollection private (
     require(!config.multiVector, "dense search on a multi-vector collection")
     require(queryVec.length == config.dim,
       s"query dim ${queryVec.length} != collection dim ${config.dim}")
-    TopK.dense(table, typedlit(queryVec), config.idCol, config.vectorCol, k,
+    TopK.dense(scanned(filter), typedlit(queryVec), config.idCol, config.vectorCol, k,
       filter, scoreThreshold, config.distance)
   }
 
   /** D2: MaxSim late-interaction top-k for multi-vector collections. */
   def searchMaxSim(queryVecs: Seq[Seq[Float]], k: Int = 5): DataFrame = {
     require(config.multiVector, "maxsim search on a dense collection")
-    TopK.maxSim(table, typedlit(queryVecs), config.idCol, config.vectorCol, k)
+    TopK.maxSim(scanned(lit(true)), typedlit(queryVecs), config.idCol, config.vectorCol, k)
   }
 
   /** [[searchMaxSim]] for N query matrices in ONE collection pass —
@@ -309,8 +338,7 @@ class VectorCollection private (
     require(!config.multiVector, "formula query on a multi-vector collection")
     require(queryVec.length == config.dim,
       s"query dim ${queryVec.length} != collection dim ${config.dim}")
-    val q = spark.range(1).select(typedlit(queryVec).as("qv"))
-    graft.search.Formula.formulaQuery(table, q, config.idCol,
+    graft.search.Formula.formulaQuery(table, typedlit(queryVec), config.idCol,
       config.vectorCol, formula, carry, prefetchN, k, config.distance)
   }
 
@@ -1212,9 +1240,28 @@ object VectorCollection {
 
 /** A parquet directory read with its schema resolved once: the first
   * read infers it (one Spark job), later reads pass it to
-  * `spark.read.schema(...)` and only list files. */
-private final class SchemaMemo(spark: SparkSession, path: String) {
+  * `spark.read.schema(...)` and only list files.
+  *
+  * It also holds the handle's resident copy of the directory: an
+  * in-memory columnar copy of its data files minus the `leftOut`
+  * columns, built through [[GraftResidentBridge]] so the session's
+  * CacheManager never substitutes it into another read of the same
+  * directory. Every [[resident]] call lists the data files; the copy
+  * is scanned only while the (path, length) set equals the one it was
+  * built from, otherwise it is freed and rebuilt from exactly the
+  * listed files, filled inside the scanning request's own job. At most
+  * one copy per memo; [[rewrite]] frees it too. MEMORY_AND_DISK: a copy
+  * too large for the block manager's memory spills instead of failing.
+  */
+private final class SchemaMemo(
+    spark: SparkSession, path: String, leftOut: Set[String] = Set.empty) {
   @volatile private var schema: Option[StructType] = None
+  private var copy: Option[(Set[(String, Long)], GraftResidentBridge.Resident)] = None
+  private val leftOutLower = leftOut.map(_.toLowerCase)
+
+  /** Whether the resident copy lacks column `name` (matched without
+    * case, as Spark resolves names). */
+  def leavesOut(name: String): Boolean = leftOutLower(name.toLowerCase)
 
   def read: DataFrame = schema match {
     case Some(s) => spark.read.schema(s).parquet(path)
@@ -1224,10 +1271,54 @@ private final class SchemaMemo(spark: SparkSession, path: String) {
       df
   }
 
+  /** The resident copy of the listed data files, or None when a
+    * visible subdirectory (a partitioned layout) leaves the directory
+    * to partition-pruned parquet reads. */
+  def resident: Option[DataFrame] = synchronized {
+    dataFiles().map { files =>
+      val listed = files.map(f => f.getPath.toString -> f.getLen).toSet
+      copy match {
+        case Some((built, r)) if built == listed => r.frame
+        case _ =>
+          free()
+          val s = schema.getOrElse(read.schema)
+          // one partition per core, not per file: a scan of the copy
+          // runs no more tasks than the cores it can use. With the
+          // schema given, no listed file reads as an empty collection.
+          val src = spark.read.schema(s).parquet(files.map(_.getPath.toString): _*)
+            .coalesce(spark.sparkContext.defaultParallelism)
+          val r = GraftResidentBridge.resident(
+            src.drop(s.fieldNames.filter(leavesOut): _*),
+            StorageLevel.MEMORY_AND_DISK)
+          copy = Some(listed -> r)
+          r.frame
+      }
+    }
+  }
+
+  /** The directory's data files by Spark's hidden-name rule (a name
+    * starting with `.`, or with `_` and holding no `=`, or ending in
+    * `._COPYING_` is not data); None if a visible entry is a
+    * directory. */
+  private def dataFiles(): Option[Seq[FileStatus]] = {
+    val root = new Path(path)
+    val visible = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) || n.endsWith("._COPYING_")
+      }
+    if (visible.exists(_.isDirectory)) None else Some(visible)
+  }
+
+  private def free(): Unit = synchronized {
+    copy.foreach(_._2.free())
+    copy = None
+  }
+
   /** Run a rewrite of the directory's files; the next read resolves
-    * the schema afresh. */
+    * the schema afresh and the resident copy is freed. */
   def rewrite[T](body: => T): T =
-    try body finally schema = None
+    try body finally { schema = None; free() }
 
   /** After appending `written` (partitioned by `partitionCols`): keep
     * the schema only if the append wrote the same data columns.

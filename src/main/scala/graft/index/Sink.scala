@@ -423,9 +423,11 @@ object Sink {
 
   /** Incremental re-ingest: drop rows whose id already exists in the
     * collection (left anti join — broadcast when the existing-id side
-    * is small, shuffle-hash otherwise; AQE picks at runtime). */
+    * is small, shuffle-hash otherwise; AQE picks at runtime). An anti
+    * join's output does not depend on duplicate keys on its right
+    * side, so the existing ids are not deduplicated first. */
   def incremental(incoming: DataFrame, existing: DataFrame, idCol: String): DataFrame =
-    incoming.join(existing.select(idCol).distinct(), Seq(idCol), "left_anti")
+    incoming.join(existing.select(idCol), Seq(idCol), "left_anti")
 
   /** C2 with true Qdrant upsert semantics: a point whose id already
     * exists is REPLACED by the incoming row

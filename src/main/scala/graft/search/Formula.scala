@@ -207,26 +207,26 @@ object Formula {
     * `carry` ride through the cut), stage 2 evaluates `formula` over
     * the candidates and re-cuts to `k`. Both stage scores are rounded
     * to 6 before use so the oracle's arithmetic sees identical inputs.
+    * `query` is the query vector: a literal or a column of `points`.
     */
   def formulaQuery(
       points: DataFrame,
-      queryVec: DataFrame, // 1 row, column `qv`
+      query: Column,
       idCol: String,
       vecCol: String,
       formula: FormulaExpr,
       carry: Seq[String],
       prefetchN: Int,
       k: Int,
-      metric: String = "cosine"): DataFrame = {
+      metric: String): DataFrame = {
     // similarity metrics rank DESC, distance metrics ASC — Qdrant's
     // $score carries whichever the collection is configured with (the
     // ONE mapping in TopK.metricFn; the formula's own output always
     // ranks DESC — score boosting is bigger-is-better by definition)
     val (scoreOf, asc) = TopK.metricFn(metric)
     val cands = points
-      .crossJoin(broadcast(queryVec))
       .select(col(idCol) +: carry.map(col) :+
-        round(scoreOf(col(vecCol), col("qv")), 6).as("prefetch_score"): _*)
+        round(scoreOf(col(vecCol), query), 6).as("prefetch_score"): _*)
       .orderBy(if (asc) col("prefetch_score").asc else col("prefetch_score").desc,
         col(idCol).asc)
       .limit(prefetchN)
@@ -236,6 +236,21 @@ object Formula {
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
+
+  /** [[formulaQuery]] against the query vector in the one-row
+    * `queryVec` frame (column `qv`), broadcast onto the scan. */
+  def formulaQuery(
+      points: DataFrame,
+      queryVec: DataFrame,
+      idCol: String,
+      vecCol: String,
+      formula: FormulaExpr,
+      carry: Seq[String],
+      prefetchN: Int,
+      k: Int,
+      metric: String = "cosine"): DataFrame =
+    formulaQuery(points.crossJoin(broadcast(queryVec)), col("qv"), idCol, vecCol,
+      formula, carry, prefetchN, k, metric)
 
   /** DuckDB twin of [[formulaQuery]] over the embeddings fixture with
     * query = stored vector `qid` — same two rounded stages. */

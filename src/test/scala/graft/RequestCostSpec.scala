@@ -3,16 +3,21 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.api.{CollectionConfig, VectorCollection}
+import graft.search.{FScore, Filter, MatchValue}
 import graft.Tables.t
 
-/** What one collection request costs in Spark jobs, and that the
-  * per-handle schema memo behind it never serves stale rows: appends
-  * by another handle stay visible, rewrites through the handle are
-  * re-read, and observed write counts are exact on partitioned
+/** What one collection request costs in Spark jobs and file bytes, and
+  * that the per-handle schema memo and resident copy behind it never
+  * serve stale rows: appends by another handle stay visible, rewrites
+  * through the handle are re-read, the copy never reaches the
+  * CacheManager, and observed write counts are exact on partitioned
   * writes. */
 class RequestCostSpec extends SparkSpec {
 
@@ -38,6 +43,29 @@ class RequestCostSpec extends SparkSpec {
       (r, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Bytes read from any Hadoop FileSystem while `body` runs, with the
+    * listener bus drained on both sides. Task `inputMetrics.bytesRead`
+    * would not do: Spark adds to it the size of every cached block a
+    * task reads (`RDD.getOrCompute`), so a scan of the resident copy
+    * reports bytes too. */
+  private def fileBytesOf[T](body: => T): (T, Long) = {
+    def read(): Long = FileSystem.getGlobalStorageStatistics.iterator.asScala
+      .map(st => Option(st.getLong("bytesRead")).fold(0L)(_.longValue)).sum
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+    val before = read()
+    val r = body
+    org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+    (r, read() - before)
+  }
+
+  /** Other suites in this JVM leave cached plans behind; the tests
+    * that assert none is added start from an empty CacheManager. */
+  private def clearCachedPlans(): Unit = spark.catalog.clearCache()
+
+  private def noCachedPlans(): Unit =
+    assert(spark.sharedState.cacheManager.isEmpty, "a plan reached the CacheManager")
 
   private def cosine(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -95,7 +123,10 @@ class RequestCostSpec extends SparkSpec {
       .select((col("vec_id") + 800000L).as("vec_id"), col("embedding"), col("label"))
     val (n, jobs) = jobsOf(c.upsertIncremental(fresh))
     assert(n === 20L)
-    assert(jobs < 7, s"upsertIncremental ran $jobs Spark jobs")
+    assert(jobs === 2, s"upsertIncremental ran $jobs Spark jobs")
+    // the query vector is a literal, not a broadcast frame
+    val (_, formulaJobs) = jobsOf(c.queryFormula(q, FScore, prefetchN = 20, k = 5).collect())
+    assert(formulaJobs === 1, s"queryFormula ran $formulaJobs Spark jobs")
     // every request above still answered exactly
     assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
   }
@@ -131,6 +162,87 @@ class RequestCostSpec extends SparkSpec {
     c.compact(targetRowsPerFile = 128)
     assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
     assert(c.count === embeddings.count())
+  }
+
+  test("a warm handle's repeat search scans its resident copy: one job, no file bytes") {
+    import spark.implicits._
+    clearCachedPlans()
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(13)
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
+    val requests = Seq[(String, () => Any)](
+      "dense search" -> (() => c.search(q, 5).collect()),
+      "filtered search" -> (() => c.search(q, 5, col("label") === 3).collect()),
+      "Filter-DSL search" -> (() =>
+        c.search(q, 5, Filter(must = Seq(MatchValue("label", 3)))).collect()))
+    requests.foreach { case (what, run) =>
+      val ((_, jobs), bytes) = fileBytesOf(jobsOf(run()))
+      assert(jobs === 1, s"$what ran $jobs Spark jobs")
+      assert(bytes === 0L, s"$what read $bytes file bytes")
+    }
+    noCachedPlans()
+    // another handle's append changes the listing: the next request
+    // rebuilds the copy from the files, inside its own single job
+    val b = VectorCollection.open(spark, dir)
+    assert(b.upsert(Seq((700002L, q.map(_ * 2f), 1)).toDF("vec_id", "embedding", "label")) === 1L)
+    val ((got, jobs), bytes) = fileBytesOf(jobsOf(ids(c.search(q, 5))))
+    assert(jobs === 1, s"the rebuilding search ran $jobs Spark jobs")
+    assert(bytes > 0L, "the first search after the append read no file")
+    assert(got.contains(700002L), s"handle A missed handle B's append: $got")
+    assert(got === bruteTopK(dir, q, 5))
+    assert(fileBytesOf(c.search(q, 5).collect())._2 === 0L)
+    noCachedPlans()
+  }
+
+  test("rewrites through a handle cache no plan; plain parquet reads of the directory stay exact") {
+    import spark.implicits._
+    clearCachedPlans()
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(9)
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
+    noCachedPlans()
+    def plainVec(id: Long): Seq[Float] =
+      spark.read.parquet(dir).filter(col("vec_id") === id).head.getSeq[Float](1).toSeq
+    val moved = q.map(_ * 3f)
+    assert(c.upsertReplace(Seq((41L, moved, 2)).toDF("vec_id", "embedding", "label")) === 1L)
+    noCachedPlans()
+    assert(plainVec(41L) === moved)
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
+    assert(ids(c.search(q, 5)).take(2).toSet === Set(9L, 41L))
+    c.compact(targetRowsPerFile = 128)
+    noCachedPlans()
+    assert(spark.read.parquet(dir).count() === embeddings.count())
+    assert(plainVec(41L) === moved)
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
+    noCachedPlans()
+  }
+
+  test("append→search cycles on one handle keep at most one resident copy") {
+    import spark.implicits._
+    clearCachedPlans()
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(21)
+    val sc = spark.sparkContext
+    val persistent = sc.getPersistentRDDs.size
+    val withBlocks = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc)
+    (1 to 5).foreach { i =>
+      assert(c.upsert(Seq((600000L + i, q.map(_ * i.toFloat), 4)).toDF(
+        "vec_id", "embedding", "label")) === 1L)
+      val got = ids(c.search(q, 10))
+      assert(got.contains(600000L + i), s"cycle $i missed its append: $got")
+      assert(got === bruteTopK(dir, q, 10))
+    }
+    assert(sc.getPersistentRDDs.size <= persistent + 1)
+    // a superseded copy's blocks are dropped, not left to the cleaner
+    val added = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) -- withBlocks
+    assert(added.size <= 1, s"RDDs still holding blocks: $added")
+    noCachedPlans()
   }
 
   // the empty case (upsertIncremental of ids already present observes

@@ -325,6 +325,37 @@ class VectorCollectionSpec extends SparkSpec {
     assert((p1 ++ p2).distinct.length === 200)
   }
 
+  test("an emptied collection, or one with no data file, answers search and searchMaxSim empty") {
+    val dense = VectorCollection.ensure(spark, s"${tmp()}/dense", points,
+      CollectionConfig("point_id", "embedding", 64, multiVector = false))
+    dense.upsert(points)
+    val mv = Tables.multiVectorDocs(t(spark, sf, "embeddings"))
+    val multi = VectorCollection.ensure(spark, s"${tmp()}/multi", mv,
+      CollectionConfig("doc_id", "vecs", 64, multiVector = true))
+    multi.upsert(mv)
+    val q = Seq.fill(64)(0.125f)
+    val qm = Seq(q, q.map(-_))
+    assert(dense.search(q, 5).count() === 5L)
+    assert(multi.searchMaxSim(qm, 5).count() === 5L)
+    def searchesEmpty(): Unit = {
+      assert(dense.search(q, 5).count() === 0L)
+      assert(dense.search(q, 5, col("folder") === "src0").count() === 0L)
+      assert(multi.searchMaxSim(qm, 5).count() === 0L)
+    }
+    assert(dense.deleteByFilter(lit(true)) > 0L)
+    assert(multi.deleteByFilter(lit(true)) > 0L)
+    searchesEmpty()
+    // the zero-row files a delete leaves behind removed too: the
+    // listing holds no data file at all
+    Seq(dense.path, multi.path).foreach { dir =>
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .foreach(fs.delete(_, false))
+    }
+    searchesEmpty()
+  }
+
   test("dimension mismatch is rejected at the API boundary") {
     val dir = s"${tmp()}/col"
     val pts = points
@@ -764,6 +795,32 @@ class VectorCollectionSpec extends SparkSpec {
     assert(!row.isNullAt(row.fieldIndex("embedding")), "default vector stays")
     assert(c.count === pts.count(), "the point itself is NOT deleted")
     intercept[IllegalArgumentException] { c.deleteVectors("nope", Seq(victim)) }
+  }
+
+  test("the resident copy leaves named vectors out; a filter naming one reads parquet") {
+    val dir = s"${tmp()}/col"
+    val pts = points
+      .select(col("point_id"), col("embedding"),
+        col("embedding").as("v_full"),
+        slice(col("embedding"), 1, 32).as("v_head"))
+    val c = VectorCollection.ensure(spark, dir, pts,
+      CollectionConfig("point_id", "embedding", 64, multiVector = false,
+        namedVectors = Map("full" -> ("v_full", 64), "head" -> ("v_head", 32))))
+    c.upsert(pts)
+    val anchor = pts.orderBy(col("point_id")).head
+    val victim = anchor.getLong(0)
+    assert(c.deleteVectors("head", Seq(victim)) === 1L)
+    val q = anchor.getSeq[Float](1).toSeq
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSeq
+    val plain = c.search(q, 6)
+    val plan = plain.queryExecution.executedPlan.toString
+    assert(plan.contains("InMemoryRelation") && !plan.contains("v_full") &&
+      !plan.contains("v_head"), s"the copy must not hold named vectors:\n$plan")
+    assert(ids(plain).head === victim)
+    val withHead = c.search(q, 5, graft.search.Filter(
+      must = Seq(graft.search.HasVectorCond("v_head"))))
+    assert(!withHead.queryExecution.executedPlan.toString.contains("InMemoryRelation"))
+    assert(ids(withHead) === ids(plain).filterNot(_ == victim).take(5))
   }
 
   test("batch_update_points applies mixed operations in order") {

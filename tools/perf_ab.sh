@@ -1,0 +1,97 @@
+#!/usr/bin/env bash
+# Interleaved A/B of the perfbench end-to-end metrics between two
+# checkouts of this repository.
+#
+#   tools/perf_ab.sh <parent-checkout> <change-checkout> <workload> <seed>...
+#
+# For each seed it runs `python3 perfbench/run.py --workload <workload>
+# --seed <seed> --seconds 8 --trace 0` once in each checkout (each builds
+# from its own sources), alternating which side runs first: the parent
+# leads on the 1st, 3rd, ... seed, the change on the others. Then it
+# prints, per end-to-end metric, each side's median and quartiles and how
+# many seed pairs the change won (its value better than the parent's in
+# the metric's direction, taken from the parent's BENCHMARK.json), plus
+# each run's correct/failed counts. Raw result lines are kept in a
+# temporary directory whose path is printed first. A run that fails is
+# reported and its pair is left out of the tally.
+set -u
+
+if [ "$#" -lt 4 ]; then
+  sed -n '2,17p' "$0" | sed 's/^# \{0,1\}//'
+  exit 2
+fi
+parent=$(cd "$1" && pwd) || exit 2
+change=$(cd "$2" && pwd) || exit 2
+workload=$3
+shift 3
+out=$(mktemp -d -t perf_ab.XXXXXX)
+echo "raw results: $out"
+
+run_side() { # side seed
+  local dir
+  if [ "$1" = parent ]; then dir=$parent; else dir=$change; fi
+  (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$2" \
+    --seconds 8 --trace 0) >"$out/$1-$2.out" 2>"$out/$1-$2.err"
+  local code=$?
+  tail -n 1 "$out/$1-$2.out" >"$out/$1-$2.json"
+  echo "seed $2 $1: exit $code $(head -c 160 "$out/$1-$2.json")"
+}
+
+i=0
+for seed in "$@"; do
+  if [ $((i % 2)) -eq 0 ]; then
+    run_side parent "$seed"; run_side change "$seed"
+  else
+    run_side change "$seed"; run_side parent "$seed"
+  fi
+  i=$((i + 1))
+done
+
+python3 - "$out" "$parent/BENCHMARK.json" "$@" <<'EOF'
+import json, os, sys
+
+out, bench, seeds = sys.argv[1], sys.argv[2], sys.argv[3:]
+with open(bench) as f:
+    metrics = [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+
+
+def load(side, seed):
+    try:
+        with open(os.path.join(out, "%s-%s.json" % (side, seed))) as f:
+            return json.loads(f.read())
+    except (OSError, ValueError):
+        return None
+
+
+def quantile(xs, p):  # linear between closest ranks, as perfbench/stats.py
+    xs = sorted(xs)
+    pos = (len(xs) - 1) * p
+    lo = int(pos)
+    hi = min(lo + 1, len(xs) - 1)
+    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
+
+
+runs = {s: (load("parent", s), load("change", s)) for s in seeds}
+pairs = {s: r for s, r in runs.items() if r[0] is not None and r[1] is not None}
+for s, (p, c) in runs.items():
+    for side, r in (("parent", p), ("change", c)):
+        if r is None:
+            print("seed %s %s: no result" % (s, side))
+        else:
+            print("seed %s %s: correct=%s attempted=%s failed=%s" % (
+                s, side, r["correct"], r["attempted"], r["failed"]))
+print("%d complete pairs" % len(pairs))
+if not pairs:
+    sys.exit(1)
+print("%-20s %28s %28s %8s %10s" % (
+    "metric", "parent median [q1, q3]", "change median [q1, q3]", "won", "change"))
+for name, better in metrics:
+    pv = [p["metrics"][name]["value"] for p, _ in pairs.values()]
+    cv = [c["metrics"][name]["value"] for _, c in pairs.values()]
+    won = sum((c < p) if better == "lower" else (c > p) for p, c in zip(pv, cv))
+    pm, cm = quantile(pv, 0.5), quantile(cv, 0.5)
+    print("%-20s %10.1f [%7.1f, %7.1f] %10.1f [%7.1f, %7.1f] %5d/%-2d %+9.1f%%" % (
+        name, pm, quantile(pv, 0.25), quantile(pv, 0.75),
+        cm, quantile(cv, 0.25), quantile(cv, 0.75), won, len(pairs),
+        100.0 * (cm - pm) / pm if pm else 0.0))
+EOF

@@ -870,20 +870,12 @@ class VectorCollection private (
     // Hadoop FileSystem, not java.io.File — the same API every other
     // maintenance op (compact/snapshot/updatePayload) goes through, so
     // segments_count works on HDFS/S3 paths too instead of silently
-    // reporting 0 off an empty local-disk lookup
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val segs =
-      if (config.shardCol.isDefined)
-        // sharded layout: parquet files live under shard=… subtrees
-        fs.listStatus(root).filter(_.isDirectory)
-          .map(d => parquetFiles(d.getPath)).sum
-      else parquetFiles(root)
-    CollectionInfo(count, segs, config)
+    // reporting 0 off an empty local-disk lookup. Data files by Spark's
+    // hidden-name rule: a sharded layout's live in its visible shard=…
+    // subtrees, never in rewrite staging
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CollectionInfo(count, Sink.visibleFiles(fs, root).size, config)
   }
 
   /** Qdrant `delete_vectors`: clear ONE NAMED vector from the given
@@ -956,7 +948,7 @@ class VectorCollection private (
   def snapshot(snapPath: String): Int = Sink.snapshot(spark, path, snapPath)
 
   /** Qdrant `recover_snapshot`: replace contents from a snapshot
-    * (crash-safe rename-aside swap). */
+    * (crash-safe: see [[graft.index.Sink.restoreSnapshot]]). */
   def restoreSnapshot(snapPath: String): Unit =
     data.rewrite(Sink.restoreSnapshot(spark, snapPath, path))
 
@@ -1181,29 +1173,20 @@ object VectorCollection {
   }
 
   /** Qdrant `delete_collection`: remove the collection directory and
-    * EVERY derived sidecar — the IVF index plus all maintenance
-    * staging/retired dirs. Deleting the sidecars is a correctness
-    * requirement, not tidiness: a shard stranded under
-    * `_compact_retired` by a crashed compaction would otherwise be
-    * resurrected by compactShards' self-heal into a NEW collection
-    * later created at the same path, bringing deleted points back from
-    * the dead. Does NOT touch alias pointers — Qdrant aliases dangle
-    * too, and [[openAlias]] of a dangling alias fails loudly at open,
-    * not silently at query. */
+    * its IVF index sidecar (`<path>_ivf`). Every rewrite stages inside
+    * the collection directory ([[graft.index.Sink]]'s rewrite
+    * protocol), so deleting the root takes any pending staging and
+    * commit marker with it — nothing outside it can be resurrected into
+    * a collection later created at the same path. Does NOT touch alias
+    * pointers — Qdrant aliases dangle too, and [[openAlias]] of a
+    * dangling alias fails loudly at open, not silently at query. */
   def drop(spark: SparkSession, path: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existed = fs.exists(p)
-    // sidecars FIRST, root LAST: a crash mid-drop must never leave a
-    // _compact_retired shard behind with the root already gone — a new
-    // collection at the same path would have the dead shard healed
-    // back in by compactShards' recovery. Root-last means a partial
-    // drop is just an undropped collection. Keep the suffix list in
-    // sync with Sink's staging-dir names.
-    Seq("_ivf", "_compact_retired", "_compact_staging", "_compacting",
-        "_indexing", "_restoring", "_retired")
-      .foreach(s => fs.delete(new org.apache.hadoop.fs.Path(path + s), true))
+    // the index FIRST, root LAST: a partial drop is just an undropped
+    // collection, never an index outliving its collection
+    fs.delete(new Path(path + "_ivf"), true)
     fs.delete(p, true)
     existed
   }
@@ -1296,17 +1279,12 @@ private final class SchemaMemo(
     }
   }
 
-  /** The directory's data files by Spark's hidden-name rule (a name
-    * starting with `.`, or with `_` and holding no `=`, or ending in
-    * `._COPYING_` is not data); None if a visible entry is a
-    * directory. */
+  /** The directory's data files by Spark's hidden-name rule
+    * ([[Sink.isVisible]]); None if a visible entry is a directory. */
   private def dataFiles(): Option[Seq[FileStatus]] = {
     val root = new Path(path)
     val visible = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(root).toSeq.filterNot { st =>
-        val n = st.getPath.getName
-        n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) || n.endsWith("._COPYING_")
-      }
+      .listStatus(root).toSeq.filter(st => Sink.isVisible(st.getPath.getName))
     if (visible.exists(_.isDirectory)) None else Some(visible)
   }
 

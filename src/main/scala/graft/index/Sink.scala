@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, floor, greatest, least, lit, max, min, shiftleft, shiftright}
 
@@ -16,6 +17,34 @@ import org.apache.spark.sql.functions.{col, count, floor, greatest, least, lit, 
   * "incremental" indexing silently duplicates re-scanned files
   * (SURVEY.md §7.6). We deviate deliberately: deterministic content
   * ids + anti-join makes re-ingest idempotent ([[incremental]]).
+  *
+  * '''The rewrite protocol.''' Every operation that replaces a
+  * collection's files ([[upsertReplace]], [[deleteMatching]],
+  * [[updatePayload]], [[compact]], [[compactShards]],
+  * [[indexPayload]], [[indexPayloadZ]], [[restoreSnapshot]]) commits
+  * the same way, through [[commitStaged]]:
+  *  1. stage the new data files inside the collection under
+  *     `_payload_staging` (nested as `_payload_staging/k=v/…` for a
+  *     partition subtree) — Spark's hidden-name rule ([[isVisible]])
+  *     keeps the underscore directory out of every read and out of
+  *     partition discovery;
+  *  1. write `_payload_commit` listing the data files the new ones
+  *     replace — exactly the files the operation read. The marker write
+  *     is the commit point and the lease fence
+  *     ([[verifyLeaseForCommit]]);
+  *  1. finish: move the staged files to the same relative path under
+  *     the root, delete the listed files, clear staging and marker.
+  *
+  * Staged names are fresh (Spark's job-unique part names, a per-restore
+  * prefix for copied snapshot files), so a moved file never carries a
+  * name the marker retires. A crash before the marker leaves only
+  * hidden staging debris: the collection reads exactly as before, and
+  * the next rewrite or [[repairPayloadUpdate]] discards it. A crash
+  * after the marker leaves a pending commit that the next rewrite or
+  * [[repairPayloadUpdate]] finishes; until then a reader can see both
+  * the old and the new copy of the rewritten rows. The collection path
+  * itself never disappears, and no data moves outside it — on an
+  * object store only the newly written files are renamed.
   */
 object Sink {
 
@@ -26,9 +55,9 @@ object Sink {
     * is a genuine serialization point — it turns the documented
     * "single-writer" contract from a caller obligation into an
     * enforced property (a compact racing an upsertReplace would
-    * otherwise lose the upsert's rows to the compact's stale-read
-    * swap; IngestSinkSpec drills the race). Monitors are reentrant,
-    * so ops composing repair/heal steps self-nest safely.
+    * otherwise retire the upsert's files from a stale read;
+    * IngestSinkSpec drills the race). Monitors are reentrant, so ops
+    * composing repair steps self-nest safely.
     *
     * A SECOND driver is made LOUD (not silently interleaved) by a
     * create-exclusive lease marker beside the collection directory
@@ -103,9 +132,7 @@ object Sink {
     * r16) is the holder-clock create time the takeover skew check
     * compares against the marker's filesystem mtime; a legacy 2-field
     * marker carries no skew evidence and skips the check. */
-  private def readLease(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): (String, Long, Option[Long]) =
+  private def readLease(fs: FileSystem, p: Path): (String, Long, Option[Long]) =
     try {
       val in = fs.open(p)
       val txt = try new String(in.readAllBytes(),
@@ -118,7 +145,7 @@ object Sink {
     } catch { case _: Throwable => ("unreadable", Long.MinValue, None) }
 
   private def acquireLease(key: String): Unit = {
-    val leasePath = new org.apache.hadoop.fs.Path(key + LeaseSuffix)
+    val leasePath = new Path(key + LeaseSuffix)
     val fs = leasePath.getFileSystem(hadoopConf)
     def tryCreate(): Boolean =
       try {
@@ -173,7 +200,7 @@ object Sink {
 
   private def releaseLease(key: String): Unit =
     try {
-      val leasePath = new org.apache.hadoop.fs.Path(key + LeaseSuffix)
+      val leasePath = new Path(key + LeaseSuffix)
       val fs = leasePath.getFileSystem(hadoopConf)
       // delete only OUR lease: if this write outlived its TTL and a
       // second driver legitimately took over, their marker stays — and
@@ -192,25 +219,24 @@ object Sink {
   /** Commit-point fence (r12 verdict #2): the lease is acquired once
     * at [[withPathLock]] entry, so a write outliving its TTL could be
     * legitimately broken by a second driver while the first is
-    * mid-rewrite — and the first's commit renames would then proceed
-    * against the takeover writer's files. Every commit-point rename
-    * ([[swapInStaged]], [[restoreSnapshot]], the [[writeCommitMarker]]
-    * protocol, each [[compactShards]] shard swap) re-reads the lease
-    * IMMEDIATELY before renaming: a foreign or missing holder aborts
-    * loudly with nothing retired (staging debris is the next repair's
-    * to discard). On success the TTL is re-extended best-effort —
-    * the expensive staging write precedes each fence, so a healthy
-    * long write renews between stages instead of aging toward expiry.
-    * The renewal overwrite is reached only by the verified UNEXPIRED
-    * holder — a self-owned but TTL-expired lease aborts exactly like
-    * a foreign one (r13 advisor: renewing an expired self-lease races
-    * a takeover driver sitting between its readLease and its
-    * delete+create break — both would then believe they hold it).
-    * With the expiry check, the double-writer window shrinks to the
-    * read→rename microseconds already documented. */
+    * mid-rewrite — and the first's commit would then proceed against
+    * the takeover writer's files. The one commit point, the
+    * [[writeCommitMarker]] rename (once per [[compactShards]] shard),
+    * re-reads the lease IMMEDIATELY before it: a foreign or missing
+    * holder aborts loudly with nothing retired (staging debris is the
+    * next repair's to discard). On success the TTL is re-extended
+    * best-effort — the expensive staging write precedes each fence, so
+    * a healthy long write renews between stages instead of aging
+    * toward expiry. The renewal overwrite is reached only by the
+    * verified UNEXPIRED holder — a self-owned but TTL-expired lease
+    * aborts exactly like a foreign one (r13 advisor: renewing an
+    * expired self-lease races a takeover driver sitting between its
+    * readLease and its delete+create break — both would then believe
+    * they hold it). With the expiry check, the double-writer window
+    * shrinks to the read→rename microseconds already documented. */
   private def verifyLeaseForCommit(path: String): Unit = {
-    val key = new org.apache.hadoop.fs.Path(path).toString
-    val leasePath = new org.apache.hadoop.fs.Path(key + LeaseSuffix)
+    val key = new Path(path).toString
+    val leasePath = new Path(key + LeaseSuffix)
     val fs = leasePath.getFileSystem(hadoopConf)
     val (holder, expires, _) = readLease(fs, leasePath)
     if (holder != holderId)
@@ -253,9 +279,9 @@ object Sink {
     // where the sidecar is MISSING, and a crash mid-write leaves the
     // OLD sidecar intact (only the hidden .tmp is orphaned, harmless:
     // the next write truncates it).
-    val p0 = new org.apache.hadoop.fs.Path(path)
+    val p0 = new Path(path)
     val qp = p0.getFileSystem(hadoopConf).makeQualified(p0)
-    val tmp = new org.apache.hadoop.fs.Path(qp.getParent, s".${qp.getName}.tmp")
+    val tmp = new Path(qp.getParent, s".${qp.getName}.tmp")
     val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     if (qp.toUri.getScheme == "file") {
       // local FS: the whole write rides java.nio — Hadoop's local
@@ -306,7 +332,7 @@ object Sink {
   }
 
   private[graft] def readSidecar(path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(hadoopConf)
     // brief missing-file retry: writeSidecar's replace is atomic on
     // local FS (nio ATOMIC_MOVE) and HDFS (rename2), but an object
@@ -344,12 +370,12 @@ object Sink {
   }
 
   private[graft] def sidecarExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(hadoopConf).exists(p)
   }
 
   private[graft] def withPathLock[T](path: String)(body: => T): T = {
-    val key = new org.apache.hadoop.fs.Path(path).toString
+    val key = new Path(path).toString
     val lock = pathLocks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
       val depth = lockDepth.getOrDefault(key, 0)
@@ -371,9 +397,7 @@ object Sink {
     // Hadoop FS, not java.io.File: a java.io existence probe is always
     // false for non-local paths (s3a://, hdfs://), which would turn
     // the documented no-op second call into an ErrorIfExists throw
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) false
+    if (fsOf(spark, path).exists(new Path(path))) false
     else {
       like.limit(0).write.mode(SaveMode.ErrorIfExists).parquet(path)
       true
@@ -445,13 +469,10 @@ object Sink {
     * LIST (bounded by file count). Single-writer, like the reference's
     * synchronous `wait=True` upsert.
     *
-    * Crash safety: the touched branch runs the shared staged
-    * commit-marker protocol ([[updatePayload]]'s) — survivors+incoming
-    * stage invisibly under `_payload_staging`, the marker makes the
-    * merge logically durable, and [[repairPayloadUpdate]] (run here
-    * and by every other rewrite op) finishes an interrupted merge
-    * instead of leaving duplicated or resurrected rows. Returns rows
-    * upserted. */
+    * Crash safety: the touched branch commits through the rewrite
+    * protocol (object doc), so an interrupted merge is finished by the
+    * next rewrite instead of leaving duplicated or resurrected rows.
+    * Returns rows upserted. */
   def upsertReplace(
       spark: SparkSession,
       incoming: DataFrame,
@@ -482,12 +503,8 @@ object Sink {
       val survivors = spark.read.parquet(touched: _*)
         .join(incIds, Seq(idCol), "left_anti")
         .select(cols.map(col): _*)
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = fsOf(spark, path)
-      survivors.unionByName(staged).write.mode(SaveMode.Overwrite)
-        .parquet(new org.apache.hadoop.fs.Path(root, PayloadStagingDir).toString)
-      writeCommitMarker(fs, root, touched)
-      finishPayloadUpdate(fs, root)
+      commitStaged(spark, path, touched.toSeq)(
+        survivors.unionByName(staged).write.mode(SaveMode.Overwrite).parquet(_))
     }
     staged.unpersist()
     written
@@ -497,11 +514,10 @@ object Sink {
     * points selector / filter). Same file-granular MERGE shape as
     * [[upsertReplace]]: only parquet files that CONTAIN a matching row
     * are rewritten (their non-matching survivors re-staged), so the
-    * cost is O(touched files), not O(collection). Runs the shared
-    * staged commit-marker protocol, so an interruption between the
-    * survivor write and the touched-file retirement is FINISHED by
-    * [[repairPayloadUpdate]] instead of resurrecting deleted rows
-    * beside duplicated survivors. Returns the number of rows deleted.
+    * cost is O(touched files), not O(collection). Commits through the
+    * rewrite protocol (object doc), so an interruption is FINISHED by
+    * the next rewrite instead of resurrecting deleted rows beside
+    * duplicated survivors. Returns the number of rows deleted.
     * Single-writer, like the upsert path. */
   def deleteMatching(
       spark: SparkSession,
@@ -529,15 +545,12 @@ object Sink {
           org.apache.spark.sql.functions.lit(false)))
         .select(cols.map(col): _*)
       val nKept = survivors.count()
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = fsOf(spark, path)
       // stage even the zero-survivor case: empty part files are valid,
       // and the marker must exist before any original is dropped
-      survivors.write.mode(SaveMode.Overwrite)
-        .parquet(new org.apache.hadoop.fs.Path(root, PayloadStagingDir).toString)
-      touchedData.unpersist()
-      writeCommitMarker(fs, root, touched)
-      finishPayloadUpdate(fs, root)
+      commitStaged(spark, path, touched.toSeq) { staging =>
+        survivors.write.mode(SaveMode.Overwrite).parquet(staging)
+        touchedData.unpersist()
+      }
       total - nKept
     }
   }
@@ -548,73 +561,69 @@ object Sink {
     * 100 TB this is a storage-layer parallel copy (distcp shape), and
     * because parquet part files are immutable between maintenance
     * operations, the copy is consistent under concurrent reads.
-    * Returns the number of files copied. Single-writer with respect to
-    * upsert/compact, like the rest of the maintenance surface. */
+    *
+    * A pending commit is finished first ([[repairPayloadUpdate]]): a
+    * copy taken mid-commit would hold the old and the new rows side by
+    * side, plus a marker naming the SOURCE's files — the restored
+    * copy's first rewrite would then delete them from under the
+    * source. Returns the number of data files copied. Single-writer
+    * with respect to upsert/compact, like the rest of the maintenance
+    * surface. */
   def snapshot(spark: SparkSession, path: String, snapPath: String): Int = withPathLock(path) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(path)
-    val fs = src.getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(snapPath)
+    repairPayloadUpdate(spark, path)
+    val fs = fsOf(spark, path)
+    val dst = new Path(snapPath)
     require(!fs.exists(dst), s"snapshot target $snapPath already exists")
     fs.mkdirs(dst)
     // recursive: a collection written partitionBy(...) keeps its data
     // under partition SUBDIRECTORIES — a file-only copy would silently
     // snapshot nothing but the sidecars
-    val entries = fs.listStatus(src)
-    entries.foreach { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new org.apache.hadoop.fs.Path(dst, st.getPath.getName), false, conf)
+    fs.listStatus(new Path(path)).foreach { st =>
+      FileUtil.copy(fs, st.getPath, fs,
+        new Path(dst, st.getPath.getName), false, spark.sparkContext.hadoopConfiguration)
     }
-    // the documented contract is DATA files copied — count *.parquet
-    // recursively (a sharded collection would otherwise report its
-    // shard-DIRECTORY count, and counting sidecars/_SUCCESS/.crc would
-    // inflate the number relative to compact/swapInStaged, which count
-    // parquet files only)
-    val it = fs.listFiles(dst, true)
-    var n = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
+    visibleFiles(fs, dst).size
   }
 
   /** Qdrant `recover_snapshot`: replace the collection's contents with
-    * a snapshot's. Staged copy + the same rename-aside swap as
-    * [[compact]]. Crash-safe (the original survives at `path_retired`
-    * until the restored copy is in place, so recovery always has one
-    * complete copy by name), but NOT concurrent-reader-safe: the path
-    * is briefly absent between the two renames — restore is a
-    * maintenance operation, single-writer and reader-quiesced like
-    * compact. */
+    * a snapshot's, through the rewrite protocol (object doc). The
+    * snapshot's data files are copied into staging under a fresh
+    * per-restore name prefix — a restore straight after the snapshot
+    * would otherwise stage names equal to the files it retires — and
+    * the marker lists every current data file. The finish moves each
+    * copy to its relative path, so a partitioned snapshot restores into
+    * its subtrees; a subtree the snapshot lacks is removed once empty.
+    * The snapshot's sidecars (`_graft_meta.json`) are written after the
+    * data commit through [[writeSidecar]]'s atomic replace; a crash
+    * between the two leaves the current sidecars. A target that does
+    * not exist is created. */
   def restoreSnapshot(spark: SparkSession, snapPath: String, path: String): Unit = withPathLock(path) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val staging = new org.apache.hadoop.fs.Path(path + "_restoring")
-    fs.delete(staging, true)
-    fs.mkdirs(staging)
-    val snap = new org.apache.hadoop.fs.Path(snapPath)
-    // recursive for the same partition-subdirectory reason as snapshot
-    fs.listStatus(snap).foreach { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new org.apache.hadoop.fs.Path(staging, st.getPath.getName), false, conf)
+    val root = new Path(path)
+    val fs = fsOf(spark, path)
+    fs.mkdirs(root)
+    repairPayloadUpdate(spark, path)
+    val prefix = s"restored-${java.util.UUID.randomUUID.toString.take(8)}-"
+    def copyIn(from: Path, to: Path): Unit =
+      fs.listStatus(from).filter(st => isVisible(st.getPath.getName)).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) copyIn(st.getPath, new Path(to, name))
+        else FileUtil.copy(fs, st.getPath, fs,
+          new Path(to, prefix + name.replaceFirst("^restored-[0-9a-f]{8}-", "")),
+          false, spark.sparkContext.hadoopConfiguration)
+      }
+    commitStaged(spark, path, visibleFiles(fs, root).map(_.getPath.toUri.toString))(
+      staging => copyIn(new Path(snapPath), new Path(staging)))
+    fs.listStatus(root).filter(st => st.isDirectory && isVisible(st.getPath.getName) &&
+      visibleFiles(fs, st.getPath).isEmpty).foreach(st => fs.delete(st.getPath, true))
+    // sidecars: the snapshot's top-level hidden files, less Spark's
+    // job marker and the protocol's own
+    fs.listStatus(new Path(snapPath)).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !isVisible(n) && !n.startsWith(".") && n != "_SUCCESS" &&
+        n != PayloadCommitMarker
+    }.foreach { st =>
+      writeSidecar(new Path(root, st.getPath.getName).toString, readSidecar(st.getPath.toString))
     }
-    // checked renames (Hadoop reports failure by returning false):
-    // an unchecked failure followed by the cleanup delete would
-    // destroy the only copy of the collection
-    verifyLeaseForCommit(path)
-    val retired = new org.apache.hadoop.fs.Path(path + "_retired")
-    fs.delete(retired, true)
-    if (fs.exists(dst))
-      require(fs.rename(dst, retired),
-        s"restore failed: could not retire $dst — collection left intact")
-    if (!fs.rename(staging, dst)) {
-      val restored = fs.exists(retired) && fs.rename(retired, dst)
-      throw new java.io.IOException(
-        s"restore failed: could not move $staging into place; original " +
-          (if (restored) s"restored at $dst" else s"left at $retired (if it existed)"))
-    }
-    fs.delete(retired, true)
   }
 
   /** Qdrant `set_payload` / `delete_payload` / `clear_payload`:
@@ -624,17 +633,8 @@ object Sink {
     * map — the facade provides these). Same file-granular MERGE shape
     * as [[deleteMatching]]: only parquet files CONTAINING a matching
     * row are rewritten, so cost is O(touched files), not
-    * O(collection). Returns rows updated. Single-writer.
-    *
-    * Crash safety: the rewrite stages under `_payload_staging`
-    * (underscore prefix — invisible to parquet readers), then writes a
-    * `_payload_commit` marker listing the superseded originals, then
-    * moves the staged files in and deletes the originals. A crash
-    * before the marker leaves only invisible staging debris; a crash
-    * after it leaves at worst transiently duplicated rows WITH the
-    * marker naming exactly which originals to drop — either state is
-    * detected and finished/aborted by [[repairPayloadUpdate]], which
-    * also runs automatically at the start of the next update. */
+    * O(collection). Commits through the rewrite protocol (object doc).
+    * Returns rows updated. Single-writer. */
   def updatePayload(
       spark: SparkSession,
       path: String,
@@ -661,17 +661,10 @@ object Sink {
           when(coalesce(cond, lit(false)), update(col(c))).otherwise(col(c)).as(c)
         else col(c)
       }: _*)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      rewritten.write.mode(SaveMode.Overwrite)
-        .parquet(new org.apache.hadoop.fs.Path(root, PayloadStagingDir).toString)
-      touchedData.unpersist()
-      // commit point: once the marker exists the update is logically
-      // durable — any interruption from here is FINISHED by repair,
-      // not rolled back
-      writeCommitMarker(fs, root, touched)
-      finishPayloadUpdate(fs, root)
+      commitStaged(spark, path, touched.toSeq) { staging =>
+        rewritten.write.mode(SaveMode.Overwrite).parquet(staging)
+        touchedData.unpersist()
+      }
       nUpd
     }
   }
@@ -679,20 +672,46 @@ object Sink {
   private val PayloadStagingDir = "_payload_staging"
   private val PayloadCommitMarker = "_payload_commit"
 
+  /** Spark's hidden-name rule (`HadoopFSUtils.shouldFilterOutPathName`):
+    * a name starting with `.`, or with `_` and holding no `=`, or
+    * ending in `._COPYING_` is not data. The one rule that tells a
+    * collection's data files and partition subtrees from its sidecars,
+    * staging directory, marker and checksums. */
+  private[graft] def isVisible(name: String): Boolean =
+    !(name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_"))
+
+  /** The data files under `dir`, descending into its visible
+    * subdirectories (partition subtrees). */
+  private[graft] def visibleFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(st => isVisible(st.getPath.getName)).flatMap { st =>
+      if (st.isDirectory) visibleFiles(fs, st.getPath) else Seq(st)
+    }
+
+  /** The rewrite protocol (object doc): `stage` writes the new data
+    * files under the staging path it is given, the marker retires
+    * `retire` (qualified path URIs), and the finish moves the staged
+    * files in. Returns the data files moved in. */
+  private def commitStaged(spark: SparkSession, path: String, retire: Seq[String])(
+      stage: String => Unit): Int = {
+    val root = new Path(path)
+    val fs = fsOf(spark, path)
+    stage(new Path(root, PayloadStagingDir).toString)
+    writeCommitMarker(fs, root, retire)
+    finishPayloadUpdate(fs, root)
+  }
+
   /** Atomic commit-marker write: temp file + rename, so a crash
     * mid-write leaves only an invisible dot-file and never a TRUNCATED
     * marker — repair acting on a partial file list would drop only a
     * subset of the superseded originals, permanently duplicating the
     * rows of every unlisted one. */
-  private def writeCommitMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      touched: Seq[String]): Unit = {
-    // the marker rename IS the logical commit of a staged merge —
-    // fence it like the directory swaps
+  private def writeCommitMarker(fs: FileSystem, root: Path, touched: Seq[String]): Unit = {
+    // the marker rename IS the commit point of every rewrite — the
+    // lease fence runs here and nowhere else
     verifyLeaseForCommit(root.toString)
-    val marker = new org.apache.hadoop.fs.Path(root, PayloadCommitMarker)
-    val tmp = new org.apache.hadoop.fs.Path(root, s".$PayloadCommitMarker.tmp")
+    val marker = new Path(root, PayloadCommitMarker)
+    val tmp = new Path(root, s".$PayloadCommitMarker.tmp")
     val out = fs.create(tmp, true)
     try out.write(touched.mkString("\n").getBytes("UTF-8")) finally out.close()
     fs.delete(marker, false)
@@ -700,50 +719,49 @@ object Sink {
       s"failed to commit the rewrite marker $marker — nothing was retired")
   }
 
-  /** Detect and resolve an interrupted [[updatePayload]]: with the
+  /** Detect and resolve an interrupted rewrite (object doc): with the
     * commit marker present the staged rewrite is complete, so finish it
     * (move staged files in, drop the superseded originals it lists);
     * without the marker any staging debris is a pre-commit abort, so
     * discard it. Idempotent; returns whether anything needed repair. */
   def repairPayloadUpdate(spark: SparkSession, path: String): Boolean = withPathLock(path) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val marker = new org.apache.hadoop.fs.Path(root, PayloadCommitMarker)
-    val staging = new org.apache.hadoop.fs.Path(root, PayloadStagingDir)
+    val root = new Path(path)
+    val fs = fsOf(spark, path)
+    val marker = new Path(root, PayloadCommitMarker)
+    val staging = new Path(root, PayloadStagingDir)
     if (fs.exists(marker)) { finishPayloadUpdate(fs, root); true }
     else if (fs.exists(staging)) { fs.delete(staging, true); true }
     else false
   }
 
-  /** Post-commit half of [[updatePayload]]: move staged data files
-    * into the collection, delete the originals the marker lists, then
-    * clear staging + marker. Every step is idempotent (skip-if-moved,
-    * delete-if-present) so a repair can itself be interrupted. */
-  private def finishPayloadUpdate(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(root, PayloadCommitMarker)
-    val staging = new org.apache.hadoop.fs.Path(root, PayloadStagingDir)
-    if (fs.exists(staging)) {
-      fs.listStatus(staging).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".") &&
-            !fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root, name)))
-          throw new java.io.IOException(
-            s"payload update: failed to move staged file ${st.getPath} into $root")
-      }
-    }
+  /** Post-commit half of the rewrite protocol: move each staged data
+    * file to the same relative path under the root, delete the files
+    * the marker lists, then clear staging + marker. Every step is
+    * idempotent (a moved file has left staging; delete-if-present), so
+    * a repair can itself be interrupted. Returns the files moved. */
+  private def finishPayloadUpdate(fs: FileSystem, root: Path): Int = {
+    val marker = new Path(root, PayloadCommitMarker)
+    val staging = new Path(root, PayloadStagingDir)
+    def moveIn(from: Path, to: Path): Int =
+      fs.listStatus(from).filter(st => isVisible(st.getPath.getName)).map { st =>
+        val dst = new Path(to, st.getPath.getName)
+        if (st.isDirectory) { fs.mkdirs(dst); moveIn(st.getPath, dst) }
+        else if (fs.rename(st.getPath, dst)) 1
+        else throw new java.io.IOException(
+          s"rewrite commit: failed to move staged file ${st.getPath} into $to")
+      }.sum
+    val moved = if (fs.exists(staging)) moveIn(staging, root) else 0
     val in = fs.open(marker)
     val listed =
       try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
       finally in.close()
     listed.split("\n").filter(_.nonEmpty).foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
+      val p = new Path(new java.net.URI(f))
       if (fs.exists(p)) fs.delete(p, false)
     }
     fs.delete(staging, true)
     fs.delete(marker, false)
+    moved
   }
 
   /** Qdrant collection aliases (`update_collection_aliases`): a stable
@@ -760,14 +778,13 @@ object Sink {
     * one small-file read per open, nothing per query. */
   def setAlias(spark: SparkSession, root: String, alias: String, target: String): Unit = {
     require(!alias.contains("/"), s"alias must be a bare name: $alias")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(root, "_aliases")
-    val fs = dir.getFileSystem(conf)
+    val dir = new Path(root, "_aliases")
+    val fs = fsOf(spark, root)
     fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$alias.tmp")
+    val tmp = new Path(dir, s".$alias.tmp")
     val out = fs.create(tmp, true)
     try out.write(target.getBytes("UTF-8")) finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, alias)
+    val dst = new Path(dir, alias)
     // rename can fail without throwing (racing writer recreated dst,
     // permissions) — a silently missing/stale pointer would surface
     // later as a spurious unknown-alias, so fail the SWITCH instead
@@ -787,9 +804,8 @@ object Sink {
     * with no pointer file; a short bounded retry rides it out instead
     * of surfacing a spurious unknown-alias to a reader mid-switch. */
   def resolveAlias(spark: SparkSession, root: String, alias: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root, "_aliases"), alias)
-    val fs = p.getFileSystem(conf)
+    val p = new Path(new Path(root, "_aliases"), alias)
+    val fs = fsOf(spark, root)
     var attempts = 0
     while (!fs.exists(p) && attempts < 5) { Thread.sleep(20); attempts += 1 }
     require(fs.exists(p), s"unknown alias: $alias")
@@ -800,9 +816,7 @@ object Sink {
 
   /** Drop an alias (`delete_alias`). Returns whether it existed. */
   def deleteAlias(spark: SparkSession, root: String, alias: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root, "_aliases"), alias)
-    p.getFileSystem(conf).delete(p, false)
+    fsOf(spark, root).delete(new Path(new Path(root, "_aliases"), alias), false)
   }
 
   /** Maintenance: compact a collection directory's accumulated small
@@ -810,19 +824,17 @@ object Sink {
     * `targetRowsPerFile`-sized files. The small-files problem is the
     * dominant read-amplification cost of an append-only 100 TB
     * collection: task scheduling, footer reads, and row-group overhead
-    * all scale with file COUNT, not bytes. Rewrite goes to a staging
-    * dir first and swaps in only after the write commits (crash before
-    * the swap leaves the original intact). Returns the new file count.
+    * all scale with file COUNT, not bytes. Commits through the rewrite
+    * protocol (object doc), retiring exactly the files its read
+    * scanned; sidecars stay in place. Returns the new file count.
     * Single-writer like the upsert path. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = withPathLock(path) {
-    healRetired(fsOf(spark, path), path)
     repairPayloadUpdate(spark, path)
     requireUnpartitioned(spark, path, "compact")
     val data = spark.read.parquet(path)
     val nFiles = fileCountFor(data.count(), targetRowsPerFile)
-    val staging = path + "_compacting"
-    data.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(staging)
-    swapInStaged(spark, path, staging)
+    commitStaged(spark, path, data.inputFiles.toSeq)(
+      data.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** [[compact]] for a shard-partitioned layout: each `shard=…`
@@ -830,84 +842,42 @@ object Sink {
     * of segment maintenance, and per-subtree rewrites keep the
     * directory-encoded shard column intact (the flattening hazard
     * [[requireUnpartitioned]] refuses on the whole-directory path).
-    * Staging and retired directories live OUTSIDE the collection root:
-    * inside it, a concurrent partition-discovering read would parse
-    * `shard=5_retired` as a phantom shard value. Data files under a
-    * shard subtree never contain the shard column (partitionBy
-    * excludes it), so the subtree rewrite preserves file schema
-    * exactly. At 100 TB the shards compact embarrassingly parallel —
-    * each rewrite touches one subtree's bytes. Single-writer, like
-    * [[compact]]. The retire→swap step is two renames, not one atomic
-    * move: a crash between them strands the shard under
-    * `_compact_retired`; the next call self-heals by restoring any
-    * stranded shard before compacting (IngestSinkSpec simulates the
-    * crash). Returns total files written across shards. */
+    * Each shard stages as `_payload_staging/shard=v/…` and commits on
+    * its own — one marker and one lease fence per shard — retiring
+    * exactly the files its read scanned. The hidden staging directory
+    * never shows up as a phantom shard value in a concurrent
+    * partition-discovering read. Data files under a shard subtree
+    * never contain the shard column (partitionBy excludes it), so the
+    * subtree rewrite preserves file schema exactly. At 100 TB the
+    * shards compact embarrassingly parallel — each rewrite touches one
+    * subtree's bytes. Single-writer, like [[compact]]. Returns total
+    * files written across shards. */
   def compactShards(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = withPathLock(path) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    // self-heal the retire→swap crash window of a PREVIOUS run: a
-    // shard directory stranded under _compact_retired means the old
-    // writer died after retiring the shard but before swapping the
-    // compacted copy in — the collection is missing that shard until
-    // it is restored. If the shard is absent from the root, rename it
-    // back (the staged copy, if any, is discarded with stagingRoot
-    // below — it may be incomplete); if present, the crash happened
-    // after the swap and the retired copy is stale — drop it.
-    val retiredRoot = new org.apache.hadoop.fs.Path(path + "_compact_retired")
-    if (fs.exists(retiredRoot)) {
-      fs.listStatus(retiredRoot).filter(_.isDirectory).foreach { st =>
-        val home = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
-        if (!fs.exists(home)) {
-          require(fs.rename(st.getPath, home),
-            s"compactShards: failed to restore stranded shard ${st.getPath}")
-        } else fs.delete(st.getPath, true)
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(path + "_compact_staging"), true)
-    val shards = fs.listStatus(root)
+    repairPayloadUpdate(spark, path)
+    val shards = fsOf(spark, path).listStatus(new Path(path))
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
     require(shards.nonEmpty,
       s"compactShards: no shard=value subtrees under $path " +
         "(unsharded collections use compact)")
-    val stagingRoot = new org.apache.hadoop.fs.Path(path + "_compact_staging")
-    val total = shards.map { st =>
-      val sub = st.getPath
-      val data = spark.read.parquet(sub.toString)
+    shards.map { st =>
+      val data = spark.read.parquet(st.getPath.toString)
       val nFiles = fileCountFor(data.count(), targetRowsPerFile)
-      val staging = new org.apache.hadoop.fs.Path(stagingRoot, sub.getName)
-      data.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val retired = new org.apache.hadoop.fs.Path(retiredRoot, sub.getName)
-      // per-shard fence + renewal: a 100 TB collection compacts many
-      // shards sequentially — each swap re-verifies and re-extends
-      verifyLeaseForCommit(path)
-      fs.delete(retired, true)
-      fs.mkdirs(retiredRoot)
-      require(fs.rename(sub, retired),
-        s"compactShards: failed to retire $sub — collection left intact")
-      require(fs.rename(staging, sub),
-        s"compactShards: failed to swap in $staging; original preserved at $retired")
-      fs.delete(retired, true)
-      fs.listStatus(sub).count(_.getPath.getName.endsWith(".parquet"))
+      commitStaged(spark, path, data.inputFiles.toSeq)(staging =>
+        data.repartition(nFiles).write.mode(SaveMode.Overwrite)
+          .parquet(s"$staging/${st.getPath.getName}"))
     }.sum
-    fs.delete(stagingRoot, true)
-    fs.delete(retiredRoot, true)
-    total
   }
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Whole-directory rewrites read `path` flat and would silently
     * FLATTEN a directory-partitioned (sharded) layout — every routed
     * search's partition pruning would quietly degrade to full scans.
     * Refuse loudly instead; sharded collections compact per shard
     * subtree ([[compactShards]]). */
-  private def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def requireUnpartitioned(spark: SparkSession, path: String, op: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p)
+    val parts = fsOf(spark, path).listStatus(new Path(path))
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .map(_.getPath.getName)
     require(parts.isEmpty,
@@ -925,25 +895,23 @@ object Sink {
     * statistics prune every file a pushed filter cannot match. One
     * O(collection) rewrite buys O(matching bytes) filtered scans —
     * the cluster-key trade every warehouse makes, and the 100 TB
-    * answer to "index the payload" without any tree structure. Same
-    * rename-aside crash-safe swap as [[compact]]; sidecars survive.
-    * Per-file range disjointness is spec-asserted (IngestSinkSpec).
-    * Returns files written. */
+    * answer to "index the payload" without any tree structure. Commits
+    * through the rewrite protocol like [[compact]]; sidecars stay in
+    * place. Per-file range disjointness is spec-asserted
+    * (IngestSinkSpec). Returns files written. */
   def indexPayload(
       spark: SparkSession,
       path: String,
       field: String,
       targetRowsPerFile: Long = 1L << 20): Int = withPathLock(path) {
-    healRetired(fsOf(spark, path), path)
     repairPayloadUpdate(spark, path)
     requireUnpartitioned(spark, path, "indexPayload")
     val data = spark.read.parquet(path)
     val nFiles = fileCountFor(data.count(), targetRowsPerFile)
-    val staging = path + "_indexing"
-    data.repartitionByRange(nFiles, col(field))
-      .sortWithinPartitions(col(field))
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    swapInStaged(spark, path, staging)
+    commitStaged(spark, path, data.inputFiles.toSeq)(
+      data.repartitionByRange(nFiles, col(field))
+        .sortWithinPartitions(col(field))
+        .write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** Z-order payload layout — `createPayloadIndex` over TWO fields.
@@ -960,15 +928,14 @@ object Sink {
     * the layout is repartitionByRange + sortWithinPartitions — all
     * distributed, no window. Uniform buckets keep both engines exact;
     * on heavily skewed columns swap the grid for approxQuantile
-    * boundaries (broadcast, same interleave). Single-writer, staged
-    * swap like [[indexPayload]]. */
+    * boundaries (broadcast, same interleave). Single-writer, commits
+    * like [[indexPayload]]. */
   def indexPayloadZ(
       spark: SparkSession,
       path: String,
       fieldA: String,
       fieldB: String,
       targetRowsPerFile: Long = 1L << 20): Int = withPathLock(path) {
-    healRetired(fsOf(spark, path), path)
     repairPayloadUpdate(spark, path)
     requireUnpartitioned(spark, path, "indexPayloadZ")
     val data = spark.read.parquet(path)
@@ -987,16 +954,15 @@ object Sink {
     require(!(0 to 3).exists(b.isNullAt),
       s"indexPayloadZ: $fieldA/$fieldB need at least one non-null, non-NaN value each")
     val nFiles = fileCountFor(b.getLong(4), targetRowsPerFile)
-    val staging = path + "_indexing"
-    data
-      .withColumn("_zkey", morton8(
-        gridBucket(col(fieldA), b.getDouble(0), b.getDouble(1)),
-        gridBucket(col(fieldB), b.getDouble(2), b.getDouble(3))))
-      .repartitionByRange(nFiles, col("_zkey"))
-      .sortWithinPartitions(col("_zkey"))
-      .drop("_zkey")
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    swapInStaged(spark, path, staging)
+    commitStaged(spark, path, data.inputFiles.toSeq)(
+      data
+        .withColumn("_zkey", morton8(
+          gridBucket(col(fieldA), b.getDouble(0), b.getDouble(1)),
+          gridBucket(col(fieldB), b.getDouble(2), b.getDouble(3))))
+        .repartitionByRange(nFiles, col("_zkey"))
+        .sortWithinPartitions(col("_zkey"))
+        .drop("_zkey")
+        .write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** Uniform 256-cell grid position of `v` in [lo, hi], clamped; NaN
@@ -1026,61 +992,6 @@ object Sink {
     require(targetRowsPerFile > 0,
       s"targetRowsPerFile must be positive, got $targetRowsPerFile")
     math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
-  }
-
-  /** Copy sidecars into `staging`, then swap it in over `path` with
-    * the rename-aside dance. There IS an instant with `path` absent
-    * (between the two renames — same as restoreSnapshot's documented
-    * window); what the dance guarantees is that a complete copy always
-    * exists BY NAME: a failed second rename restores the retired
-    * original before throwing, and a crash inside the window is healed
-    * by [[healRetired]] at the next maintenance call. Hadoop rename
-    * reports failure by RETURNING FALSE, not throwing — every rename
-    * here is checked, because an unchecked false followed by the
-    * cleanup delete would destroy the only in-place copy. Returns the
-    * parquet file count of the swapped-in directory. */
-  private def swapInStaged(spark: SparkSession, path: String, staging: String): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    // sidecar files (e.g. _graft_meta.json) survive the rewrite; the
-    // payload-update protocol files never ride along (the caller ran
-    // repairPayloadUpdate first, and carrying a commit marker into a
-    // rewritten layout would make a later repair inject stale rows)
-    fs.listStatus(dst).filter { st =>
-      val n = st.getPath.getName
-      !n.endsWith(".parquet") && !n.endsWith(".crc") && n != "_SUCCESS" &&
-        n != PayloadCommitMarker && n != PayloadStagingDir
-    }.foreach { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new org.apache.hadoop.fs.Path(staging, st.getPath.getName), false, conf)
-    }
-    verifyLeaseForCommit(path)
-    val retired = new org.apache.hadoop.fs.Path(path + "_retired")
-    fs.delete(retired, true)
-    require(fs.rename(dst, retired),
-      s"swap failed: could not retire $dst — collection left intact")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), dst)) {
-      val restored = fs.rename(retired, dst)
-      throw new java.io.IOException(
-        s"swap failed: could not move $staging into place; original " +
-          (if (restored) s"restored at $dst" else s"STRANDED at $retired"))
-    }
-    fs.delete(retired, true)
-    fs.listStatus(dst).count(_.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** Self-heal the rename-aside crash window: `path` absent with a
-    * complete copy stranded at `path_retired` means a previous
-    * maintenance run died between its two renames — restore it before
-    * proceeding. Called at the head of every swap-based operation. */
-  private def healRetired(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val retired = new org.apache.hadoop.fs.Path(path + "_retired")
-    if (!fs.exists(dst) && fs.exists(retired))
-      require(fs.rename(retired, dst),
-        s"failed to restore stranded collection $retired to $dst")
   }
 
   /** Bucketed collection layout: hash-bucket the points on `idCol`

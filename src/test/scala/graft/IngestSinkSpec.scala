@@ -213,8 +213,8 @@ class IngestSinkSpec extends SparkSpec {
     // nothing retired, nothing renamed: collection exactly as before
     assert(spark.read.parquet(path)
       .select("point_id").collect().map(_.getLong(0)).toSet === before)
-    assert(!new java.io.File(path + "_retired").exists(),
-      "no retire rename may have happened")
+    assert(!new java.io.File(s"$path/_payload_commit").exists(),
+      "no commit marker may have been written")
     // our release must NOT delete the takeover writer's lease
     assert(leaseFile.exists(), "takeover lease must survive our release")
     // same fence on the staged-merge commit marker (updatePayload /
@@ -432,12 +432,11 @@ class IngestSinkSpec extends SparkSpec {
     val nAfter = Sink.compactShards(spark, path, targetRowsPerFile = nRows)
     assert(nAfter < nBefore && nAfter === partFiles())
     assert(nAfter <= 8, s"4 shards at one-file target should stay small, got $nAfter")
-    // shard subtrees survive; no staging/retired residue inside or
-    // beside the root
+    // shard subtrees survive; no staging or marker residue
     assert(new java.io.File(path).listFiles().count(f =>
       f.isDirectory && f.getName.startsWith("shard=")) === 4)
-    assert(!new java.io.File(path + "_compact_staging").exists())
-    assert(!new java.io.File(path + "_compact_retired").exists())
+    assert(!new java.io.File(s"$path/_payload_staging").exists())
+    assert(!new java.io.File(s"$path/_payload_commit").exists())
     // content identical, shard column (directory-encoded) included
     val after = spark.read.parquet(path)
     assert(after.exceptAll(before).count() === 0L)
@@ -486,50 +485,131 @@ class IngestSinkSpec extends SparkSpec {
     assert(pts.exceptAll(after).count() === 0L)
   }
 
-  test("compactShards self-heals a crash between retire and swap-in") {
-    val path = java.nio.file.Files.createTempDirectory("graft_shcrash").toString + "/col"
+  /** The three crash points of a rewrite of the crashfs collection at
+    * `path`, in order: the marker rename (staging written, nothing
+    * committed); the first move of a staged file into the collection
+    * (marker written); the first delete of a retired file (every staged
+    * file moved in, every original still there). */
+  private def crashPoints(path: String): Seq[(String, CrashFs.Op => Boolean)] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path).toUri.getPath
+    def inRoot(p: Path) = p.toUri.getPath.startsWith(root + "/")
+    def staged(p: Path) = p.toUri.getPath.startsWith(root + "/_payload_staging/")
+    Seq[(String, CrashFs.Op => Boolean)](
+      "before the marker" -> {
+        case CrashFs.Rename(_, dst) => dst.toUri.getPath == root + "/_payload_commit"
+        case _ => false
+      },
+      "after the marker" -> {
+        case CrashFs.Rename(src, dst) => staged(src) && inRoot(dst) && !staged(dst)
+        case _ => false
+      },
+      "mid-finish" -> {
+        case CrashFs.Delete(p) => inRoot(p) && !staged(p) && Sink.isVisible(p.getName)
+        case _ => false
+      })
+  }
+
+  test("compactShards crash drills before and after the commit marker") {
+    import org.apache.hadoop.fs.Path
+    CrashFs.register(spark.sparkContext.hadoopConfiguration)
+    val path = CrashFs.tmpPath("graft_shcrash")
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pts = t(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"), (col("label") % 4).as("shard"))
     (0 until 3).foreach(i =>
       Sink.append(pts.filter(col("vec_id") % 3 === i), path, Seq("shard")))
     val before = spark.read.parquet(path).cache()
     val nRows = before.count()
-    // simulate the crash window: one shard retired, nothing swapped in
-    val victim = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard=")).head
-    val retired = new java.io.File(path + "_compact_retired")
-    assert(retired.mkdirs())
-    assert(victim.renameTo(new java.io.File(retired, victim.getName)))
-    // the collection is now missing a shard — the next compaction must
-    // restore it BEFORE compacting, and the result must be complete
+    def shardValues(): Seq[String] = spark.read.parquet(path).select("shard").distinct()
+      .collect().map(_.get(0).toString).sorted.toSeq
+    def assertExact(): Unit = {
+      val after = spark.read.parquet(path)
+      assert(after.exceptAll(before).count() === 0L)
+      assert(before.exceptAll(after).count() === 0L)
+    }
+    val staging = new Path(path, "_payload_staging")
+    val marker = new Path(path, "_payload_commit")
+    // crash before the marker: a compacted shard sits staged INSIDE the
+    // root as _payload_staging/shard=v, and Spark's hidden-name rule
+    // keeps it out of partition discovery — 4 shards, no phantom value
+    CrashFs.crashAt(crashPoints(path)(0)._2)(
+      Sink.compactShards(spark, path, targetRowsPerFile = nRows))
+    assert(fs.listStatus(staging).exists(_.getPath.getName.startsWith("shard=")),
+      "the crash must leave a staged shard behind")
+    assert(!fs.exists(marker))
+    assert(shardValues() === Seq("0", "1", "2", "3"))
+    assertExact()
+    // the next compaction discards the uncommitted staging first
     Sink.compactShards(spark, path, targetRowsPerFile = nRows)
-    val after = spark.read.parquet(path)
-    assert(after.exceptAll(before).count() === 0L)
-    assert(before.exceptAll(after).count() === 0L)
-    assert(new java.io.File(path).listFiles().count(f =>
-      f.isDirectory && f.getName.startsWith("shard=")) === 4)
-    assert(!new java.io.File(path + "_compact_retired").exists())
-    // stale-retired variant: crash AFTER swap-in left a retired copy
-    // beside a live shard — recovery must drop the stale copy, not
-    // resurrect it over the live one
-    val live = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard=")).head
-    val retired2 = new java.io.File(path + "_compact_retired")
-    assert(retired2.mkdirs())
-    val staleCopy = new java.io.File(retired2, live.getName)
-    assert(staleCopy.mkdirs()) // empty stale dir: must vanish, not swap in
-    Sink.compactShards(spark, path, targetRowsPerFile = nRows)
-    val healed = spark.read.parquet(path)
-    assert(healed.count() === nRows, "stale retired copy must not replace live data")
-    assert(!retired2.exists())
+    assertExact()
+    assert(!fs.exists(staging) && !fs.exists(marker))
+    // crash after the marker: the shard's commit is pending; the path
+    // and every shard stay readable, and the repair finishes the commit
+    CrashFs.crashAt(crashPoints(path)(1)._2)(
+      Sink.compactShards(spark, path, targetRowsPerFile = nRows))
+    assert(fs.exists(marker))
+    assert(shardValues() === Seq("0", "1", "2", "3"))
+    assert(Sink.repairPayloadUpdate(spark, path))
+    assertExact()
+    assert(!fs.exists(staging) && !fs.exists(marker))
+    assert(fs.listStatus(new Path(path)).count(st =>
+      st.isDirectory && st.getPath.getName.startsWith("shard=")) === 4)
     before.unpersist()
   }
 
-  test("compact resolves a pending payload commit and heals a stranded rename") {
+  test("crash drills: compact, compactShards, indexPayload and restoreSnapshot end in exactly the pre- or post-op rows") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    CrashFs.register(spark.sparkContext.hadoopConfiguration)
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    val base = (0L until 40L).map(i => (i, s"p$i")).toDF("id", "tag")
+    def appended(path: String): Unit =
+      (0 until 4).foreach(i => Sink.append(base.filter($"id" % 4 === i), path))
+    // (op, set up a collection and return the rows the op leaves, op)
+    val drills = Seq[(String, String => Seq[String], String => Any)](
+      ("compact", { p => appended(p); rows(p) }, p => Sink.compact(spark, p, 15L)),
+      ("indexPayload", { p => appended(p); rows(p) },
+        p => Sink.indexPayload(spark, p, "tag", 15L)),
+      ("compactShards", { p =>
+        (0 until 2).foreach(i => Sink.append(
+          base.filter($"id" % 2 === i).withColumn("shard", $"id" % 4), p, Seq("shard")))
+        rows(p)
+      }, p => Sink.compactShards(spark, p, 40L)),
+      ("restoreSnapshot", { p =>
+        appended(p)
+        Sink.snapshot(spark, p, p + "_snap")
+        val snapped = rows(p)
+        Sink.deleteMatching(spark, p, $"id" < 10)
+        snapped
+      }, p => Sink.restoreSnapshot(spark, p + "_snap", p)))
+    for ((name, setup, op) <- drills; i <- 0 until 3) {
+      val path = CrashFs.tmpPath("graft_crash")
+      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val post = setup(path)
+      val pre = rows(path)
+      val (point, at) = crashPoints(path)(i)
+      val what = s"$name, crash $point"
+      CrashFs.crashAt(at)(op(path))
+      // the path never disappears and a plain read never fails
+      assert(fs.exists(new Path(path)), what)
+      val seen = rows(path)
+      if (i == 0) assert(seen === pre, s"$what: staging must stay invisible")
+      else assert(fs.exists(new Path(path, "_payload_commit")), s"$what: commit pending")
+      assert(Sink.repairPayloadUpdate(spark, path), what)
+      assert(rows(path) === (if (i == 0) pre else post), what)
+      assert(!fs.exists(new Path(path, "_payload_staging")) &&
+        !fs.exists(new Path(path, "_payload_commit")), what)
+    }
+  }
+
+  test("compact converges a pending payload commit and its own crash") {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sinkheal").toString + "/col"
+    CrashFs.register(spark.sparkContext.hadoopConfiguration)
+    val dir = CrashFs.tmpPath("graft_sinkheal")
     val pts = (0L until 40L).map(i => (i, s"p$i")).toDF("id", "tag")
     Sink.append(pts, dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -544,22 +624,117 @@ class IngestSinkSpec extends SparkSpec {
       .write.parquet(s"$dir/_payload_staging")
     val mOut = fs.create(new Path(dir, "_payload_commit"), true)
     try mOut.write(originals.mkString("\n").getBytes("UTF-8")) finally mOut.close()
-    // compact must FINISH the durable update first (not copy the marker
-    // into the compacted layout, which would inject stale rows later)
+    // compact must FINISH the durable update first (not compact the
+    // staged rows in beside the originals)
     Sink.compact(spark, dir, 100L)
-    val after = spark.read.parquet(dir)
-    assert(after.count() === 40L)
-    assert(after.filter(col("tag") === "UPD").count() === 10L,
-      "the committed payload update must survive the compaction")
-    assert(!fs.exists(new Path(dir, "_payload_commit")) &&
-      !fs.exists(new Path(dir, "_payload_staging")))
-    // stranded-rename heal: a crash between swapInStaged's two renames
-    // leaves the collection only at path_retired — the next
-    // maintenance call restores it before proceeding
-    require(fs.rename(new Path(dir), new Path(dir + "_retired")))
+    def assertExact(): Unit = {
+      val after = spark.read.parquet(dir)
+      assert(after.count() === 40L)
+      assert(after.select("id").distinct().count() === 40L)
+      assert(after.filter(col("tag") === "UPD").count() === 10L,
+        "the committed payload update must survive the compaction")
+      assert(!fs.exists(new Path(dir, "_payload_commit")) &&
+        !fs.exists(new Path(dir, "_payload_staging")))
+    }
+    assertExact()
+    // a crash inside compact's own finish: every staged file moved in,
+    // every original still there, the marker naming them present
+    val compacted = fs.listStatus(new Path(dir))
+      .filter(st => Sink.isVisible(st.getPath.getName)).map(_.getPath)
+    CrashFs.crashAt(crashPoints(dir)(2)._2)(Sink.compact(spark, dir, 100L))
+    assert(fs.exists(new Path(dir, "_payload_commit")))
+    assert(compacted.forall(fs.exists), "no original is deleted yet")
+    assert(Sink.visibleFiles(fs, new Path(dir, "_payload_staging")).isEmpty,
+      "every staged file has moved in")
+    assert(spark.read.parquet(dir).count() === 80L,
+      "both copies are visible until the commit finishes")
+    // the next compact finishes the pending commit, then compacts
     Sink.compact(spark, dir, 100L)
-    assert(spark.read.parquet(dir).count() === 40L)
-    assert(!fs.exists(new Path(dir + "_retired")))
+    assertExact()
+  }
+
+  test("snapshot finishes a pending commit first: exact rows in the restored copy, the source's files untouched") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_snappend").toString
+    val dir = s"$base/col"
+    Sink.append((0L until 40L).map(i => (i, s"p$i")).toDF("id", "tag").repartition(4), dir)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the state an updatePayload interrupted after its marker leaves
+    val originals = fs.listStatus(new Path(dir))
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath.toString)
+    assert(originals.length === 4)
+    spark.read.parquet(originals: _*)
+      .select(col("id"),
+        when(col("id") < 10, lit("UPD")).otherwise(col("tag")).as("tag"))
+      .write.parquet(s"$dir/_payload_staging")
+    val mOut = fs.create(new Path(dir, "_payload_commit"), true)
+    try mOut.write(originals.mkString("\n").getBytes("UTF-8")) finally mOut.close()
+    val expected = (0L until 40L).map(i => (i, if (i < 10) "UPD" else s"p$i")).sorted
+    def content(p: String) = spark.read.parquet(p).as[(Long, String)].collect().toSeq.sorted
+    val nCopied = Sink.snapshot(spark, s"$dir", s"$base/snap")
+    val sourceFiles = Sink.visibleFiles(fs, new Path(dir)).map(_.getPath.toString).sorted
+    assert(nCopied === sourceFiles.length, "the snapshot reports the data files it holds")
+    assert(!fs.exists(new Path(s"$base/snap", "_payload_commit")) &&
+      !fs.exists(new Path(s"$base/snap", "_payload_staging")))
+    assert(content(dir) === expected)
+    Sink.restoreSnapshot(spark, s"$base/snap", s"$base/col2")
+    assert(Sink.deleteMatching(spark, s"$base/col2", lit(false)) === 0L)
+    assert(content(s"$base/col2") === expected)
+    // the copy's rewrites never reach into the source
+    assert(Sink.visibleFiles(fs, new Path(dir)).map(_.getPath.toString).sorted === sourceFiles)
+    assert(content(dir) === expected)
+  }
+
+  test("restoreSnapshot straight after snapshot: every name collides, content and sidecars exact") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_restsame").toString
+    val dir = s"$base/col"
+    Sink.append((0L until 40L).map(i => (i, s"p$i")).toDF("id", "tag").repartition(4), dir)
+    Sink.writeSidecar(s"$dir/_graft_meta.json", "{\"v\":1}")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def content() = spark.read.parquet(dir).as[(Long, String)].collect().toSeq.sorted
+    def names() = Sink.visibleFiles(fs, new Path(dir)).map(_.getPath.getName)
+    val before = content()
+    val nFiles = names().length
+    Sink.snapshot(spark, dir, s"$base/snap")
+    Sink.writeSidecar(s"$dir/_graft_meta.json", "{\"v\":2}")
+    // the snapshot's files carry the names of the files the restore
+    // retires; the per-restore prefix keeps the finish from deleting
+    // the restored copies
+    Sink.restoreSnapshot(spark, s"$base/snap", dir)
+    assert(content() === before)
+    assert(names().length === nFiles && names().forall(_.startsWith("restored-")))
+    assert(Sink.readSidecar(s"$dir/_graft_meta.json") === "{\"v\":1}",
+      "the snapshot's sidecar is restored")
+    // a second restore replaces the prefix instead of stacking it
+    Sink.restoreSnapshot(spark, s"$base/snap", dir)
+    assert(content() === before)
+    assert(names().length === nFiles &&
+      names().forall(_.matches("restored-[0-9a-f]{8}-part-.*")))
+  }
+
+  test("restoreSnapshot of a sharded collection drops a shard the snapshot lacks; compactShards still runs") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_restshard").toString
+    val dir = s"$base/col"
+    val pts = (0L until 30L).map(i => (i, s"p$i", i % 2)).toDF("id", "tag", "shard")
+    Sink.append(pts, dir, Seq("shard"))
+    def content() = spark.read.parquet(dir).select("id", "tag", "shard")
+      .as[(Long, String, Long)].collect().toSeq.sorted
+    val before = content()
+    Sink.snapshot(spark, dir, s"$base/snap")
+    Sink.append(Seq((99L, "new", 2L)).toDF("id", "tag", "shard"), dir, Seq("shard"))
+    Sink.restoreSnapshot(spark, s"$base/snap", dir)
+    assert(content() === before)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new Path(dir)).filter(_.isDirectory).map(_.getPath.getName)
+      .sorted.toSeq === Seq("shard=0", "shard=1"), "the emptied shard=2 subtree is removed")
+    Sink.compactShards(spark, dir, targetRowsPerFile = 100L)
+    assert(content() === before)
   }
 
   test("interrupted deleteMatching finishes on repair: no resurrection, no duplicates") {

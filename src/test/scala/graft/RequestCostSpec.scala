@@ -131,6 +131,23 @@ class RequestCostSpec extends SparkSpec {
     assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
   }
 
+  test("upsertReplace and compact through a handle: the rewrite protocol adds no Spark job") {
+    import spark.implicits._
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    (0 until 4).foreach(i => c.upsert(embeddings.filter(col("vec_id") % 4 === i)))
+    val n = c.count
+    val q = vecOf(7)
+    val (replaced, replaceJobs) =
+      jobsOf(c.upsertReplace(Seq((3L, q, 9)).toDF("vec_id", "embedding", "label")))
+    assert(replaced === 1L)
+    assert(replaceJobs === 11, s"upsertReplace ran $replaceJobs Spark jobs")
+    val (_, compactJobs) = jobsOf(c.compact(n / 2))
+    assert(compactJobs === 5, s"compact ran $compactJobs Spark jobs")
+    assert(c.count === n)
+    assert(ids(c.search(q, 1)) === Seq(3L))
+  }
+
   test("a handle sees rows appended through another handle on the same path") {
     import spark.implicits._
     val dir = s"${tmp()}/col"

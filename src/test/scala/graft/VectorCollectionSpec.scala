@@ -139,17 +139,25 @@ class VectorCollectionSpec extends SparkSpec {
     val pts = points.limit(10).cache()
     val cfg = CollectionConfig("point_id", "embedding", 64, multiVector = false)
     VectorCollection.ensure(spark, path, pts, cfg).upsert(pts)
-    // a crashed compaction stranded state in every sidecar location
-    val stranded = new java.io.File(s"${path}_compact_retired/shard=9")
-    assert(stranded.mkdirs())
-    new java.io.File(s"${path}_compact_staging").mkdirs()
+    // a crashed rewrite left its staged rows and commit marker inside
+    // the root, and the IVF index sits beside it
+    pts.write.parquet(s"$path/_payload_staging")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$path/_payload_commit"), "")
     new java.io.File(s"${path}_ivf").mkdirs()
     assert(VectorCollection.drop(spark, path))
-    // every sidecar is gone with the collection: a NEW collection at
-    // the same path can never have the old shard healed back in
-    Seq("", "_compact_retired", "_compact_staging", "_ivf").foreach { s =>
-      assert(!new java.io.File(path + s).exists(), s"sidecar $s must be dropped")
+    Seq("", "_ivf").foreach { s =>
+      assert(!new java.io.File(path + s).exists(), s"$s must be dropped")
     }
+    // a NEW collection at the same path holds none of it: no pending
+    // commit is finished into it, no staged row appears
+    val fresh = VectorCollection.ensure(spark, path, pts, cfg)
+    fresh.upsert(pts.limit(3))
+    assert(fresh.count === 3L)
+    Seq("_payload_staging", "_payload_commit").foreach { s =>
+      assert(!new java.io.File(s"$path/$s").exists(), s"$s must not survive the drop")
+    }
+    assert(!new java.io.File(s"${path}_ivf").exists())
     pts.unpersist()
   }
 

@@ -14,10 +14,16 @@
 # each run's correct/failed counts. Raw result lines are kept in a
 # temporary directory whose path is printed first. A run that fails is
 # reported and its pair is left out of the tally.
+#
+# The last column is a verdict against the metric's `bound` (a
+# fraction of the parent median): `worse` if the change median is worse
+# than the parent median by more than the bound; otherwise `unresolved`
+# if the parent's IQR exceeds the bound times its median, unless every
+# change run beats every parent run; otherwise `ok`.
 set -u
 
 if [ "$#" -lt 4 ]; then
-  sed -n '2,17p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,22p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent=$(cd "$1" && pwd) || exit 2
@@ -52,7 +58,7 @@ import json, os, sys
 
 out, bench, seeds = sys.argv[1], sys.argv[2], sys.argv[3:]
 with open(bench) as f:
-    metrics = [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+    metrics = [(m["name"], m["better"], m["bound"]) for m in json.load(f)["end_to_end"]]
 
 
 def load(side, seed):
@@ -83,15 +89,27 @@ for s, (p, c) in runs.items():
 print("%d complete pairs" % len(pairs))
 if not pairs:
     sys.exit(1)
-print("%-20s %28s %28s %8s %10s" % (
-    "metric", "parent median [q1, q3]", "change median [q1, q3]", "won", "change"))
-for name, better in metrics:
+def verdict(pv, cv, better, bound):
+    sign = 1.0 if better == "lower" else -1.0  # > 0: the change is worse
+    pm, cm = quantile(pv, 0.5), quantile(cv, 0.5)
+    if sign * (cm - pm) > bound * abs(pm):
+        return "worse"
+    beats_all = (max(cv) < min(pv)) if better == "lower" else (min(cv) > max(pv))
+    if quantile(pv, 0.75) - quantile(pv, 0.25) > bound * abs(pm) and not beats_all:
+        return "unresolved"
+    return "ok"
+
+
+print("%-20s %28s %28s %8s %10s  %s" % (
+    "metric", "parent median [q1, q3]", "change median [q1, q3]", "won", "change",
+    "verdict"))
+for name, better, bound in metrics:
     pv = [p["metrics"][name]["value"] for p, _ in pairs.values()]
     cv = [c["metrics"][name]["value"] for _, c in pairs.values()]
     won = sum((c < p) if better == "lower" else (c > p) for p, c in zip(pv, cv))
     pm, cm = quantile(pv, 0.5), quantile(cv, 0.5)
-    print("%-20s %10.1f [%7.1f, %7.1f] %10.1f [%7.1f, %7.1f] %5d/%-2d %+9.1f%%" % (
+    print("%-20s %10.1f [%7.1f, %7.1f] %10.1f [%7.1f, %7.1f] %5d/%-2d %+9.1f%%  %s" % (
         name, pm, quantile(pv, 0.25), quantile(pv, 0.75),
         cm, quantile(cv, 0.25), quantile(cv, 0.75), won, len(pairs),
-        100.0 * (cm - pm) / pm if pm else 0.0))
+        100.0 * (cm - pm) / pm if pm else 0.0, verdict(pv, cv, better, bound)))
 EOF

@@ -179,8 +179,7 @@ class VectorCollection private (
       queryVec: Seq[Float], k: Int = 5, filter: Column = lit(true),
       scoreThreshold: Option[Double] = None): DataFrame = {
     require(!config.multiVector, "dense search on a multi-vector collection")
-    require(queryVec.length == config.dim,
-      s"query dim ${queryVec.length} != collection dim ${config.dim}")
+    requireDim(queryVec)
     TopK.dense(scanned(filter), typedlit(queryVec), config.idCol, config.vectorCol, k,
       filter, scoreThreshold, config.distance)
   }
@@ -336,8 +335,7 @@ class VectorCollection private (
   def queryFormula(queryVec: Seq[Float], formula: graft.search.FormulaExpr,
       carry: Seq[String] = Nil, prefetchN: Int = 50, k: Int = 5): DataFrame = {
     require(!config.multiVector, "formula query on a multi-vector collection")
-    require(queryVec.length == config.dim,
-      s"query dim ${queryVec.length} != collection dim ${config.dim}")
+    requireDim(queryVec)
     graft.search.Formula.formulaQuery(table, typedlit(queryVec), config.idCol,
       config.vectorCol, formula, carry, prefetchN, k, config.distance)
   }
@@ -375,6 +373,11 @@ class VectorCollection private (
   private def requireUnsharded(op: String): Unit =
     require(config.shardCol.isEmpty,
       s"$op on a sharded collection is not supported; operate per shard")
+
+  /** A query vector must have the collection's dim; `what` names it in
+    * the refusal (a batch names the request id). */
+  private def requireDim(v: Seq[Float], what: => String = "query"): Unit =
+    require(v.length == config.dim, s"$what dim ${v.length} != collection dim ${config.dim}")
 
   /** Qdrant `client.delete` with a points selector: delete by id set.
     * File-granular rewrite; see [[graft.index.Sink.deleteMatching]]. */
@@ -551,12 +554,7 @@ class VectorCollection private (
     * — per-query top-k without per-query scans. */
   def searchBatch(queries: Seq[(Long, Seq[Float])], k: Int = 5): DataFrame = {
     require(!config.multiVector, "batch search on a multi-vector collection")
-    val badDim = queries.collectFirst {
-      case (qid, v) if v.length != config.dim => (qid, v.length)
-    }
-    require(badDim.isEmpty,
-      s"query ${badDim.map(_._1).getOrElse(0L)} dim ${badDim.map(_._2).getOrElse(0)} " +
-        s"!= collection dim ${config.dim}")
+    queries.foreach { case (qid, v) => requireDim(v, s"query $qid") }
     import spark.implicits._
     val q = queries.toDF("q_id", "qv")
     graft.ops.Similarity.knnJoin(asPoints, q, k)
@@ -581,12 +579,7 @@ class VectorCollection private (
       filterCol: String,
       k: Int = 5): DataFrame = {
     require(!config.multiVector, "batch search on a multi-vector collection")
-    val badDim = requests.collectFirst {
-      case (qid, v, _) if v.length != config.dim => (qid, v.length)
-    }
-    require(badDim.isEmpty,
-      s"query ${badDim.map(_._1).getOrElse(0L)} dim ${badDim.map(_._2).getOrElse(0)} " +
-        s"!= collection dim ${config.dim}")
+    requests.foreach { case (qid, v, _) => requireDim(v, s"query $qid") }
     graft.search.QueryApis.searchBatchFiltered(
         asPoints,
         requests.map { case (id, v, f) => (id, v.map(_.toDouble), f) },
@@ -604,12 +597,7 @@ class VectorCollection private (
       requests: Seq[(Long, Seq[Float], graft.search.Filter)],
       k: Int): DataFrame = {
     require(!config.multiVector, "batch search on a multi-vector collection")
-    val badDim = requests.collectFirst {
-      case (qid, v, _) if v.length != config.dim => (qid, v.length)
-    }
-    require(badDim.isEmpty,
-      s"query ${badDim.map(_._1).getOrElse(0L)} dim ${badDim.map(_._2).getOrElse(0)} " +
-        s"!= collection dim ${config.dim}")
+    requests.foreach { case (qid, v, _) => requireDim(v, s"query $qid") }
     graft.search.QueryApis.searchBatchFiltered(
         asPoints,
         requests.map { case (id, v, f) => (id, v.map(_.toDouble), f) },
@@ -641,8 +629,7 @@ class VectorCollection private (
       queryVec: Seq[Float], k: Int = 5,
       lambda: Double = 0.5, fetchN: Int = 20): DataFrame = {
     require(!config.multiVector, "mmr search on a multi-vector collection")
-    require(queryVec.length == config.dim,
-      s"query dim ${queryVec.length} != collection dim ${config.dim}")
+    requireDim(queryVec)
     graft.search.QueryApis.mmr(
         asPoints, queryVec.map(_.toDouble), fetchN, k, lambda,
         config.distance)
@@ -740,8 +727,7 @@ class VectorCollection private (
       queryVec: Seq[Float], k: Int = 5, nprobe: Int = 1,
       filter: Column = lit(true)): DataFrame = {
     require(!config.multiVector, "ANN search on a multi-vector collection")
-    require(queryVec.length == config.dim,
-      s"query dim ${queryVec.length} != collection dim ${config.dim}")
+    requireDim(queryVec)
     // Probe selection AND candidate scoring follow the collection's
     // metric, so ANN results rank consistently with exact search()
     // (they previously hard-coded cosine — a euclid collection got
@@ -788,11 +774,10 @@ class VectorCollection private (
       .filterNot(c => c == config.idCol || c == config.vectorCol)
     val pts = points.select(Seq(col(config.idCol).as("vec_id"),
       col(config.vectorCol).as("embedding")) ++ others.map(col).toSeq: _*)
-    val fresh = pts.join(ivf.read.select(col("vec_id")), Seq("vec_id"), "left_anti")
+    val fresh = Sink.incremental(pts, ivf.read, "vec_id")
       .select(col("*"),
         graft.ops.Similarity.ivfClusterId(col("embedding"), centCols).as("cluster_id"))
-    val n = Sink.countedWrite(fresh)(
-      _.write.mode("append").partitionBy("cluster_id").parquet(ivfPath))
+    val n = Sink.append(fresh, ivfPath, Seq("cluster_id"))
     ivf.keepIfSame(fresh.schema, Seq("cluster_id"))
     n
   }
@@ -930,8 +915,10 @@ class VectorCollection private (
     * [[graft.index.Sink.indexPayloadZ]]. */
   def createPayloadIndexZ(
       fieldA: String, fieldB: String,
-      targetRowsPerFile: Long = 1L << 20): Int =
+      targetRowsPerFile: Long = 1L << 20): Int = {
+    requireUnsharded("createPayloadIndexZ")
     data.rewrite(Sink.indexPayloadZ(spark, path, fieldA, fieldB, targetRowsPerFile))
+  }
 
   /** Maintenance: compact accumulated small part files into
     * `targetRowsPerFile`-sized ones (Qdrant's segment optimizer).

@@ -2,7 +2,8 @@ package graft.index
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, count, floor, greatest, least, lit, max, min, shiftleft, shiftright}
+import org.apache.spark.sql.functions.{coalesce, col, count, floor, greatest, input_file_name, isnan,
+  least, lit, max, min, shiftleft, shiftright, when}
 
 /** Collection DDL + sink operators (SURVEY.md §2 C1–C2).
   *
@@ -18,11 +19,13 @@ import org.apache.spark.sql.functions.{col, count, floor, greatest, least, lit, 
   * (SURVEY.md §7.6). We deviate deliberately: deterministic content
   * ids + anti-join makes re-ingest idempotent ([[incremental]]).
   *
-  * '''The rewrite protocol.''' Every operation that replaces a
-  * collection's files ([[upsertReplace]], [[deleteMatching]],
-  * [[updatePayload]], [[compact]], [[compactShards]],
-  * [[indexPayload]], [[indexPayloadZ]], [[restoreSnapshot]]) commits
-  * the same way, through [[commitStaged]]:
+  * '''The rewrite protocol.''' Two bodies decide which files a
+  * rewrite replaces and what replaces them: the touched-file merge
+  * [[mergeTouched]] ([[upsertReplace]], [[deleteMatching]],
+  * [[updatePayload]]) and the whole-collection [[rewriteAll]]
+  * ([[compact]], [[indexPayload]], [[indexPayloadZ]]);
+  * [[compactShards]] and [[restoreSnapshot]] decide for themselves.
+  * All eight commit the same way, through [[commitStaged]]:
   *  1. stage the new data files inside the collection under
   *     `_payload_staging` (nested as `_payload_staging/k=v/…` for a
   *     partition subtree) — Spark's hidden-name rule ([[isVisible]])
@@ -458,102 +461,43 @@ object Sink {
     * (`client.upsert` overwrites by id —
     * `with_colpali_v1.3/incremental_indexing_colpali_with_qdrant.py:191-202`;
     * re-indexing an edited document must not keep the stale embedding).
-    *
-    * MERGE-style delete-matched+append at file granularity: only the
-    * parquet files that actually CONTAIN a matched id are rewritten —
-    * survivors from those files are re-staged alongside the incoming
-    * rows, then the superseded files are retired. Everything else in
-    * the collection is untouched, so the cost is O(touched files +
-    * incoming), not O(collection) — the same shape a table format's
-    * MERGE takes at 100 TB. The driver holds only the touched file
-    * LIST (bounded by file count). Single-writer, like the reference's
-    * synchronous `wait=True` upsert.
-    *
-    * Crash safety: the touched branch commits through the rewrite
-    * protocol (object doc), so an interrupted merge is finished by the
-    * next rewrite instead of leaving duplicated or resurrected rows.
-    * Returns rows upserted. */
+    * A [[mergeTouched]] on the incoming ids: a touched file keeps its
+    * rows with other ids and takes the incoming rows. One point per id
+    * even WITHIN a batch (Qdrant keeps a single point per id; callers
+    * that care which copy wins pre-dedup themselves). With no touched
+    * file the incoming rows are a plain append. Single-writer, like the
+    * reference's synchronous `wait=True` upsert. Returns rows upserted. */
   def upsertReplace(
       spark: SparkSession,
       incoming: DataFrame,
       path: String,
       idCol: String): Long = withPathLock(path) {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    // a sharded layout would silently flatten: the staged survivors
-    // re-enter at the root with the shard as a DATA column (the guard
-    // must live HERE, not only in the VectorCollection caller —
-    // SparkEntry and streaming call Sink directly)
-    requireUnpartitioned(spark, path, "upsertReplace")
-    repairPayloadUpdate(spark, path)
-    val existing = spark.read.parquet(path)
-    val cols = existing.columns.toSeq
-    // one point per id even WITHIN a batch (Qdrant keeps a single point
-    // per id; callers that care which copy wins pre-dedup themselves)
-    val staged = incoming.select(cols.map(col): _*)
-      .dropDuplicates(Seq(idCol)).cache()
-    val written = staged.count()
-    val incIds = staged.select(col(idCol)).distinct()
-    val touched = existing.withColumn("_file", input_file_name())
-      .join(incIds, Seq(idCol), "left_semi")
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0))
-    if (touched.isEmpty) {
-      staged.write.mode(SaveMode.Append).parquet(path)
-    } else {
-      val survivors = spark.read.parquet(touched: _*)
-        .join(incIds, Seq(idCol), "left_anti")
-        .select(cols.map(col): _*)
-      commitStaged(spark, path, touched.toSeq)(
-        survivors.unionByName(staged).write.mode(SaveMode.Overwrite).parquet(_))
-    }
-    staged.unpersist()
-    written
+    var staged: DataFrame = null
+    try {
+      val replaced = mergeTouched(spark, path, "upsertReplace") { existing =>
+        // cached: the touched-file list, the write and the count all
+        // read it, and the caller's input (a streaming micro-batch, an
+        // embedding pipeline) is computed once
+        staged = incoming.select(existing.columns.map(col): _*)
+          .dropDuplicates(Seq(idCol)).cache()
+        // unique already, and a semi or anti join ignores duplicate keys
+        val ids = staged.select(col(idCol))
+        (_.join(ids, Seq(idCol), "left_semi"),
+          _.join(ids, Seq(idCol), "left_anti").unionByName(staged))
+      }
+      if (replaced > 0) staged.count()
+      else countedWrite(staged)(_.write.mode(SaveMode.Append).parquet(path))
+    } finally if (staged != null) staged.unpersist()
   }
 
   /** Delete points matching a predicate (Qdrant `client.delete` with a
-    * points selector / filter). Same file-granular MERGE shape as
-    * [[upsertReplace]]: only parquet files that CONTAIN a matching row
-    * are rewritten (their non-matching survivors re-staged), so the
-    * cost is O(touched files), not O(collection). Commits through the
-    * rewrite protocol (object doc), so an interruption is FINISHED by
-    * the next rewrite instead of resurrecting deleted rows beside
-    * duplicated survivors. Returns the number of rows deleted.
-    * Single-writer, like the upsert path. */
-  def deleteMatching(
-      spark: SparkSession,
-      path: String,
-      cond: org.apache.spark.sql.Column): Long = withPathLock(path) {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    requireUnpartitioned(spark, path, "delete")
-    repairPayloadUpdate(spark, path)
-    val existing = spark.read.parquet(path)
-    val cols = existing.columns.toSeq
-    val touched = existing.withColumn("_file", input_file_name())
-      .filter(cond)
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0))
-    if (touched.isEmpty) 0L
-    else {
-      // one scan of the touched files: cache, then both counts and the
-      // survivor write come off the cached data
-      val touchedData = spark.read.parquet(touched.toIndexedSeq: _*).cache()
-      val total = touchedData.count()
-      // NULL-predicate rows are survivors, not deletions (delete only
-      // what the filter affirmatively matches — Qdrant filter semantics)
-      val survivors = touchedData
-        .filter(!org.apache.spark.sql.functions.coalesce(cond,
-          org.apache.spark.sql.functions.lit(false)))
-        .select(cols.map(col): _*)
-      val nKept = survivors.count()
-      // stage even the zero-survivor case: empty part files are valid,
-      // and the marker must exist before any original is dropped
-      commitStaged(spark, path, touched.toSeq) { staging =>
-        survivors.write.mode(SaveMode.Overwrite).parquet(staging)
-        touchedData.unpersist()
-      }
-      total - nKept
-    }
-  }
+    * points selector / filter): a [[mergeTouched]] on `cond` that keeps
+    * a touched file's other rows. A row whose predicate is NULL
+    * survives — delete only what the filter affirmatively matches
+    * (Qdrant filter semantics). Returns the number of rows deleted. */
+  def deleteMatching(spark: SparkSession, path: String, cond: Column): Long =
+    mergeTouched(spark, path, "delete")(_ =>
+      (_.filter(cond), _.filter(!coalesce(cond, lit(false)))))
 
   /** Qdrant `create_snapshot`: point-in-time copy of the collection
     * directory (part files + sidecars like `_graft_meta.json`) to
@@ -628,46 +572,57 @@ object Sink {
 
   /** Qdrant `set_payload` / `delete_payload` / `clear_payload`:
     * rewrite the payload COLUMN of points matching `cond`, vectors and
-    * ids untouched. `update` maps the old payload value to the new one
-    * (set = remove key + concat, delete = map_filter, clear = empty
-    * map — the facade provides these). Same file-granular MERGE shape
-    * as [[deleteMatching]]: only parquet files CONTAINING a matching
-    * row are rewritten, so cost is O(touched files), not
-    * O(collection). Commits through the rewrite protocol (object doc).
-    * Returns rows updated. Single-writer. */
+    * ids untouched — a [[mergeTouched]] on `cond`. `update` maps the
+    * old payload value to the new one (set = remove key + concat,
+    * delete = map_filter, clear = empty map — the facade provides
+    * these). Returns rows updated. */
   def updatePayload(
       spark: SparkSession,
       path: String,
-      cond: org.apache.spark.sql.Column,
+      cond: Column,
       payloadCol: String,
-      update: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Long =
-    withPathLock(path) {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
-    requireUnpartitioned(spark, path, "updatePayload")
-    repairPayloadUpdate(spark, path)
-    val existing = spark.read.parquet(path)
-    val cols = existing.columns.toSeq
-    require(cols.contains(payloadCol), s"no payload column $payloadCol in $path")
-    val touched = existing.withColumn("_file", input_file_name())
-      .filter(cond)
-      .select(col("_file")).distinct()
-      .collect().map(_.getString(0))
-    if (touched.isEmpty) 0L
-    else {
-      val touchedData = spark.read.parquet(touched.toIndexedSeq: _*).cache()
-      val nUpd = touchedData.filter(cond).count()
-      val rewritten = touchedData.select(cols.map { c =>
-        if (c == payloadCol)
-          when(coalesce(cond, lit(false)), update(col(c))).otherwise(col(c)).as(c)
-        else col(c)
-      }: _*)
-      commitStaged(spark, path, touched.toSeq) { staging =>
-        rewritten.write.mode(SaveMode.Overwrite).parquet(staging)
-        touchedData.unpersist()
-      }
-      nUpd
+      update: Column => Column): Long =
+    mergeTouched(spark, path, "updatePayload") { existing =>
+      require(existing.columns.contains(payloadCol), s"no payload column $payloadCol in $path")
+      (_.filter(cond), _.withColumn(payloadCol,
+        when(coalesce(cond, lit(false)), update(col(payloadCol))).otherwise(col(payloadCol))))
     }
-  }
+
+  /** The touched-file merge behind [[upsertReplace]], [[deleteMatching]]
+    * and [[updatePayload]] — MERGE at file granularity. `plan` receives
+    * the collection's rows and returns how to find the matched rows
+    * among them and what a touched file's rows become. Only the files
+    * holding a matched row are read and rewritten, so the cost is
+    * O(touched files + incoming), not O(collection) — the shape a table
+    * format's MERGE takes at 100 TB — and the driver holds only the
+    * touched file LIST. The rewrite commits through the protocol (object
+    * doc) in place of exactly those files, so an interrupted merge is
+    * finished by the next rewrite instead of leaving duplicated or
+    * resurrected rows. Returns the matched rows, counted on the pass
+    * that lists the touched files; with none, nothing is written. */
+  private def mergeTouched(spark: SparkSession, path: String, op: String)(
+      plan: DataFrame => (DataFrame => DataFrame, DataFrame => DataFrame)): Long =
+    withPathLock(path) {
+      // a sharded layout would silently flatten: the rewritten rows
+      // re-enter at the root with the shard as a DATA column (the guard
+      // lives here, not only in VectorCollection — SparkEntry and
+      // streaming call Sink directly)
+      requireUnpartitioned(spark, path, op)
+      repairPayloadUpdate(spark, path)
+      val existing = spark.read.parquet(path)
+      val (matched, rewrite) = plan(existing)
+      // the file is named before matching: past a shuffle, input_file_name is empty
+      val touched = matched(existing.withColumn("_file", input_file_name()))
+        .groupBy("_file").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (touched.nonEmpty) {
+        val files = touched.keys.toSeq
+        commitStaged(spark, path, files)(
+          rewrite(spark.read.schema(existing.schema).parquet(files: _*))
+            .select(existing.columns.map(col): _*)
+            .write.mode(SaveMode.Overwrite).parquet(_))
+      }
+      touched.values.sum
+    }
 
   private val PayloadStagingDir = "_payload_staging"
   private val PayloadCommitMarker = "_payload_commit"
@@ -824,18 +779,10 @@ object Sink {
     * `targetRowsPerFile`-sized files. The small-files problem is the
     * dominant read-amplification cost of an append-only 100 TB
     * collection: task scheduling, footer reads, and row-group overhead
-    * all scale with file COUNT, not bytes. Commits through the rewrite
-    * protocol (object doc), retiring exactly the files its read
-    * scanned; sidecars stay in place. Returns the new file count.
-    * Single-writer like the upsert path. */
-  def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = withPathLock(path) {
-    repairPayloadUpdate(spark, path)
-    requireUnpartitioned(spark, path, "compact")
-    val data = spark.read.parquet(path)
-    val nFiles = fileCountFor(data.count(), targetRowsPerFile)
-    commitStaged(spark, path, data.inputFiles.toSeq)(
-      data.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(_))
-  }
+    * all scale with file COUNT, not bytes. A [[rewriteAll]]. Returns
+    * the new file count. */
+  def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int =
+    rewriteAll(spark, path, "compact")(compacted(targetRowsPerFile))
 
   /** [[compact]] for a shard-partitioned layout: each `shard=…`
     * subtree is compacted independently — the shard is Qdrant's unit
@@ -861,11 +808,28 @@ object Sink {
         "(unsharded collections use compact)")
     shards.map { st =>
       val data = spark.read.parquet(st.getPath.toString)
-      val nFiles = fileCountFor(data.count(), targetRowsPerFile)
       commitStaged(spark, path, data.inputFiles.toSeq)(staging =>
-        data.repartition(nFiles).write.mode(SaveMode.Overwrite)
+        compacted(targetRowsPerFile)(data).write.mode(SaveMode.Overwrite)
           .parquet(s"$staging/${st.getPath.getName}"))
     }.sum
+  }
+
+  /** `data` in `targetRowsPerFile`-sized partitions. */
+  private def compacted(targetRowsPerFile: Long)(data: DataFrame): DataFrame =
+    data.repartition(fileCountFor(data.count(), targetRowsPerFile))
+
+  /** The whole-collection rewrite behind [[compact]], [[indexPayload]]
+    * and [[indexPayloadZ]]: `layout` receives the collection's rows and
+    * returns them as the new files should hold them. Commits through
+    * the protocol (object doc), retiring exactly the files its read
+    * scanned; sidecars stay in place. Returns files written. */
+  private def rewriteAll(spark: SparkSession, path: String, op: String)(
+      layout: DataFrame => DataFrame): Int = withPathLock(path) {
+    repairPayloadUpdate(spark, path)
+    requireUnpartitioned(spark, path, op)
+    val data = spark.read.parquet(path)
+    commitStaged(spark, path, data.inputFiles.toSeq)(
+      layout(data).write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
@@ -895,24 +859,18 @@ object Sink {
     * statistics prune every file a pushed filter cannot match. One
     * O(collection) rewrite buys O(matching bytes) filtered scans —
     * the cluster-key trade every warehouse makes, and the 100 TB
-    * answer to "index the payload" without any tree structure. Commits
-    * through the rewrite protocol like [[compact]]; sidecars stay in
-    * place. Per-file range disjointness is spec-asserted
+    * answer to "index the payload" without any tree structure. A
+    * [[rewriteAll]]; per-file range disjointness is spec-asserted
     * (IngestSinkSpec). Returns files written. */
   def indexPayload(
       spark: SparkSession,
       path: String,
       field: String,
-      targetRowsPerFile: Long = 1L << 20): Int = withPathLock(path) {
-    repairPayloadUpdate(spark, path)
-    requireUnpartitioned(spark, path, "indexPayload")
-    val data = spark.read.parquet(path)
-    val nFiles = fileCountFor(data.count(), targetRowsPerFile)
-    commitStaged(spark, path, data.inputFiles.toSeq)(
-      data.repartitionByRange(nFiles, col(field))
+      targetRowsPerFile: Long = 1L << 20): Int =
+    rewriteAll(spark, path, "indexPayload") { data =>
+      data.repartitionByRange(fileCountFor(data.count(), targetRowsPerFile), col(field))
         .sortWithinPartitions(col(field))
-        .write.mode(SaveMode.Overwrite).parquet(_))
-  }
+    }
 
   /** Z-order payload layout — `createPayloadIndex` over TWO fields.
     * [[indexPayload]]'s range layout clusters ONE column; a filter on
@@ -928,42 +886,35 @@ object Sink {
     * the layout is repartitionByRange + sortWithinPartitions — all
     * distributed, no window. Uniform buckets keep both engines exact;
     * on heavily skewed columns swap the grid for approxQuantile
-    * boundaries (broadcast, same interleave). Single-writer, commits
-    * like [[indexPayload]]. */
+    * boundaries (broadcast, same interleave). A [[rewriteAll]]. */
   def indexPayloadZ(
       spark: SparkSession,
       path: String,
       fieldA: String,
       fieldB: String,
-      targetRowsPerFile: Long = 1L << 20): Int = withPathLock(path) {
-    repairPayloadUpdate(spark, path)
-    requireUnpartitioned(spark, path, "indexPayloadZ")
-    val data = spark.read.parquet(path)
-    // ONE stats pass: bounds + row count together. NaNs are excluded
-    // from the bounds (a max() over doubles returns NaN if any row is
-    // NaN, which would poison the whole grid) and bucket to cell 0 in
-    // gridBucket — layout quality degrades for those rows, correctness
-    // does not.
-    def nn(f: String) = {
-      val v = col(f).cast("double")
-      org.apache.spark.sql.functions.when(!org.apache.spark.sql.functions.isnan(v), v)
-    }
-    val b = data.agg(
-      min(nn(fieldA)), max(nn(fieldA)), min(nn(fieldB)), max(nn(fieldB)),
-      org.apache.spark.sql.functions.count(lit(1))).head
-    require(!(0 to 3).exists(b.isNullAt),
-      s"indexPayloadZ: $fieldA/$fieldB need at least one non-null, non-NaN value each")
-    val nFiles = fileCountFor(b.getLong(4), targetRowsPerFile)
-    commitStaged(spark, path, data.inputFiles.toSeq)(
+      targetRowsPerFile: Long = 1L << 20): Int =
+    rewriteAll(spark, path, "indexPayloadZ") { data =>
+      // ONE stats pass: bounds + row count together. NaNs are excluded
+      // from the bounds (a max() over doubles returns NaN if any row is
+      // NaN, which would poison the whole grid) and bucket to cell 0 in
+      // gridBucket — layout quality degrades for those rows, correctness
+      // does not.
+      def nn(f: String) = {
+        val v = col(f).cast("double")
+        when(!isnan(v), v)
+      }
+      val b = data.agg(
+        min(nn(fieldA)), max(nn(fieldA)), min(nn(fieldB)), max(nn(fieldB)), count(lit(1))).head
+      require(!(0 to 3).exists(b.isNullAt),
+        s"indexPayloadZ: $fieldA/$fieldB need at least one non-null, non-NaN value each")
       data
         .withColumn("_zkey", morton8(
           gridBucket(col(fieldA), b.getDouble(0), b.getDouble(1)),
           gridBucket(col(fieldB), b.getDouble(2), b.getDouble(3))))
-        .repartitionByRange(nFiles, col("_zkey"))
+        .repartitionByRange(fileCountFor(b.getLong(4), targetRowsPerFile), col("_zkey"))
         .sortWithinPartitions(col("_zkey"))
         .drop("_zkey")
-        .write.mode(SaveMode.Overwrite).parquet(_))
-  }
+    }
 
   /** Uniform 256-cell grid position of `v` in [lo, hi], clamped; NaN
     * (excluded from the bounds) buckets to cell 0 instead of throwing
@@ -972,9 +923,7 @@ object Sink {
     if (hi <= lo) lit(0L)
     else {
       val vd = v.cast("double")
-      org.apache.spark.sql.functions.when(
-        org.apache.spark.sql.functions.isnan(vd), lit(0L)
-      ).otherwise(least(greatest(
+      when(isnan(vd), lit(0L)).otherwise(least(greatest(
         floor((vd - lit(lo)) / lit(hi - lo) * 256.0).cast("long"),
         lit(0L)), lit(255L)))
     }

@@ -558,13 +558,16 @@ class IngestSinkSpec extends SparkSpec {
     before.unpersist()
   }
 
-  test("crash drills: compact, compactShards, indexPayload and restoreSnapshot end in exactly the pre- or post-op rows") {
+  test("crash drills: compact, compactShards, indexPayload, restoreSnapshot, upsertReplace, deleteMatching and updatePayload end in exactly the pre- or post-op rows") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     CrashFs.register(spark.sparkContext.hadoopConfiguration)
-    def rows(path: String): Seq[String] =
-      spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def rows(path: String): Seq[String] = rowsOf(spark.read.parquet(path))
     val base = (0L until 40L).map(i => (i, s"p$i")).toDF("id", "tag")
+    // ids 0-9 replace stored points, 40-44 are new
+    val edits = ((0L until 10L) ++ (40L until 45L)).map(i => (i, s"new$i")).toDF("id", "tag")
     def appended(path: String): Unit =
       (0 until 4).foreach(i => Sink.append(base.filter($"id" % 4 === i), path))
     // (op, set up a collection and return the rows the op leaves, op)
@@ -583,7 +586,15 @@ class IngestSinkSpec extends SparkSpec {
         val snapped = rows(p)
         Sink.deleteMatching(spark, p, $"id" < 10)
         snapped
-      }, p => Sink.restoreSnapshot(spark, p + "_snap", p)))
+      }, p => Sink.restoreSnapshot(spark, p + "_snap", p)),
+      ("upsertReplace", { p => appended(p); rowsOf(base.filter($"id" >= 10).union(edits)) },
+        p => Sink.upsertReplace(spark, edits, p, "id")),
+      ("deleteMatching", { p => appended(p); rowsOf(base.filter($"id" >= 10)) },
+        p => Sink.deleteMatching(spark, p, $"id" < 10)),
+      ("updatePayload", { p =>
+        appended(p)
+        rowsOf(base.withColumn("tag", when($"id" < 10, lit("UPD")).otherwise($"tag")))
+      }, p => Sink.updatePayload(spark, p, $"id" < 10, "tag", _ => lit("UPD"))))
     for ((name, setup, op) <- drills; i <- 0 until 3) {
       val path = CrashFs.tmpPath("graft_crash")
       val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

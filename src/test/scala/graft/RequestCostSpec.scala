@@ -1,12 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.api.{CollectionConfig, VectorCollection}
@@ -27,20 +28,30 @@ class RequestCostSpec extends SparkSpec {
 
   private def embeddings = t(spark, sf, "embeddings").select("vec_id", "embedding", "label")
 
-  /** Jobs started while `body` runs — a listener scoped to the call,
-    * with the listener bus drained on both sides. */
-  private def jobsOf[T](body: => T): (T, Int) = {
+  /** Jobs started while `body` runs, each named by the call site of
+    * the Dataset action whose SQL execution ran it, or of its result
+    * stage outside one (a schema inference) — a listener scoped to the
+    * call, with the listener bus drained on both sides. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
-    val jobs = new AtomicInteger(0)
+    val actions = new ConcurrentHashMap[String, String]()
+    val jobs = new ConcurrentLinkedQueue[(Option[String], String)]()
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => actions.put(s.executionId.toString, s.description)
+        case _ => ()
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))) ->
+          js.stageInfos.maxBy(_.stageId).name)
     }
     sc.addSparkListener(listener)
     try {
       val r = body
       org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
-      (r, jobs.get)
+      (r, jobs.asScala.toSeq.map { case (exec, stage) =>
+        exec.flatMap(id => Option(actions.get(id))).getOrElse(stage) })
     } finally sc.removeSparkListener(listener)
   }
 
@@ -66,24 +77,6 @@ class RequestCostSpec extends SparkSpec {
 
   private def noCachedPlans(): Unit =
     assert(spark.sharedState.cacheManager.isEmpty, "a plan reached the CacheManager")
-
-  private def cosine(a: Seq[Float], b: Seq[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    a.indices.foreach { i =>
-      dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  /** Exact top-k ids over every row on disk, computed outside Spark's
-    * scoring from a fresh (schema-inferring) read; scores round to 6
-    * places before the id tiebreak, as the engine's do. */
-  private def bruteTopK(path: String, q: Seq[Float], k: Int): Seq[Long] =
-    spark.read.parquet(path).select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> BigDecimal(cosine(r.getSeq[Float](1), q))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      .sortBy { case (id, s) => (-s, id) }
-      .take(k).map(_._1).toSeq
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.collect().map(_.getLong(0)).toSeq
@@ -116,36 +109,51 @@ class RequestCostSpec extends SparkSpec {
         c.upsert(Seq((900001L, q, 3)).toDF("vec_id", "embedding", "label"))))
     requests.foreach { case (what, run) =>
       val (_, jobs) = jobsOf(run())
-      assert(jobs === 1, s"$what ran $jobs Spark jobs")
+      assert(jobs.size === 1, s"$what ran ${jobs.size} Spark jobs: $jobs")
     }
     // the anti-join shuffles, but no schema, cache or count job remains
     val fresh = embeddings.filter(col("vec_id") < 20)
       .select((col("vec_id") + 800000L).as("vec_id"), col("embedding"), col("label"))
     val (n, jobs) = jobsOf(c.upsertIncremental(fresh))
     assert(n === 20L)
-    assert(jobs === 2, s"upsertIncremental ran $jobs Spark jobs")
+    assert(jobs.size === 2, s"upsertIncremental ran ${jobs.size} Spark jobs: $jobs")
     // the query vector is a literal, not a broadcast frame
     val (_, formulaJobs) = jobsOf(c.queryFormula(q, FScore, prefetchN = 20, k = 5).collect())
-    assert(formulaJobs === 1, s"queryFormula ran $formulaJobs Spark jobs")
+    assert(formulaJobs.size === 1, s"queryFormula ran ${formulaJobs.size} Spark jobs: $formulaJobs")
     // every request above still answered exactly
     assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
   }
 
-  test("upsertReplace and compact through a handle: the rewrite protocol adds no Spark job") {
+  test("rewrites through a warm handle: Spark jobs per operator") {
     import spark.implicits._
     val dir = s"${tmp()}/col"
-    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
-    (0 until 4).foreach(i => c.upsert(embeddings.filter(col("vec_id") % 4 === i)))
+    val pts = embeddings.withColumn("payload", map(lit("src"), col("label").cast("string")))
+    val c = VectorCollection.ensure(spark, dir, pts, cfg)
+    (0 until 4).foreach(i => c.upsert(pts.filter(col("vec_id") % 4 === i)))
     val n = c.count
     val q = vecOf(7)
-    val (replaced, replaceJobs) =
-      jobsOf(c.upsertReplace(Seq((3L, q, 9)).toDF("vec_id", "embedding", "label")))
-    assert(replaced === 1L)
-    assert(replaceJobs === 11, s"upsertReplace ran $replaceJobs Spark jobs")
-    val (_, compactJobs) = jobsOf(c.compact(n / 2))
-    assert(compactJobs === 5, s"compact ran $compactJobs Spark jobs")
-    assert(c.count === n)
-    assert(ids(c.search(q, 1)) === Seq(3L))
+    // (request, run it, rows it reports, Spark jobs it runs). A merge
+    // runs a schema inference, the touched-file collect and the write;
+    // upsertReplace's collect also fills its cache of the incoming rows,
+    // which it then counts
+    val requests = Seq[(String, () => Long, Long, Int)](
+      ("upsertReplace", () => c.upsertReplace(
+        Seq((3L, q, 9, Map("src" -> "9"))).toDF("vec_id", "embedding", "label", "payload")), 1L, 10),
+      ("delete", () => c.delete(Seq(5L)), 1L, 4),
+      ("deleteByFilter", () => c.deleteByFilter(col("vec_id") === 6L), 1L, 4),
+      ("setPayload", () => c.setPayload(col("vec_id") === 8L, "payload", "k", "v"), 1L, 4),
+      ("updateVectors", () => c.updateVectors(Map(9L -> q)), 1L, 4),
+      ("compact", () => c.compact(n / 2).toLong, 2L, 5))
+    requests.foreach { case (what, run, rows, expected) =>
+      c.count // warm: a rewrite drops the handle's resolved schema
+      val (got, jobs) = jobsOf(run())
+      assert(got === rows, what)
+      assert(jobs.size === expected, s"$what ran ${jobs.size} Spark jobs: $jobs")
+    }
+    assert(c.count === n - 2)
+    // 3 and 9 now hold point 7's vector
+    assert(ids(c.search(q, 3)) === bruteTopK(dir, q, 3))
+    assert(ids(c.search(q, 3)).toSet === Set(3L, 7L, 9L))
   }
 
   test("a handle sees rows appended through another handle on the same path") {
@@ -196,7 +204,7 @@ class RequestCostSpec extends SparkSpec {
         c.search(q, 5, Filter(must = Seq(MatchValue("label", 3)))).collect()))
     requests.foreach { case (what, run) =>
       val ((_, jobs), bytes) = fileBytesOf(jobsOf(run()))
-      assert(jobs === 1, s"$what ran $jobs Spark jobs")
+      assert(jobs.size === 1, s"$what ran ${jobs.size} Spark jobs: $jobs")
       assert(bytes === 0L, s"$what read $bytes file bytes")
     }
     noCachedPlans()
@@ -205,7 +213,7 @@ class RequestCostSpec extends SparkSpec {
     val b = VectorCollection.open(spark, dir)
     assert(b.upsert(Seq((700002L, q.map(_ * 2f), 1)).toDF("vec_id", "embedding", "label")) === 1L)
     val ((got, jobs), bytes) = fileBytesOf(jobsOf(ids(c.search(q, 5))))
-    assert(jobs === 1, s"the rebuilding search ran $jobs Spark jobs")
+    assert(jobs.size === 1, s"the rebuilding search ran ${jobs.size} Spark jobs: $jobs")
     assert(bytes > 0L, "the first search after the append read no file")
     assert(got.contains(700002L), s"handle A missed handle B's append: $got")
     assert(got === bruteTopK(dir, q, 5))

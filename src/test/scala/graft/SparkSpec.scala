@@ -35,4 +35,24 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  private def cosine(a: Seq[Float], b: Seq[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    a.indices.foreach { i =>
+      dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Exact cosine top-k ids over every row of the collection at `path`,
+    * computed outside Spark's scoring from a fresh (schema-inferring)
+    * read; scores round to 6 places before the id tiebreak, as the
+    * engine's do. */
+  def bruteTopK(path: String, q: Seq[Float], k: Int,
+      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Long] =
+    spark.read.parquet(path).select(idCol, vecCol).collect()
+      .map(r => r.getLong(0) -> BigDecimal(cosine(r.getSeq[Float](1), q))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      .sortBy { case (id, s) => (-s, id) }
+      .take(k).map(_._1).toSeq
 }

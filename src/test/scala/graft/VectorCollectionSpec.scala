@@ -405,6 +405,20 @@ class VectorCollectionSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       re.setPayload(col("pid") < 10, "payload", "k", "v")
     }
+    val refusedZ = intercept[IllegalArgumentException] { re.createPayloadIndexZ("pid", "pid") }
+    assert(refusedZ.getMessage.contains("createPayloadIndexZ"), refusedZ.getMessage)
+    // unsharded, the Z layout rewrite lets the next search see the
+    // rewritten files, not the copy a search before it built
+    val flatDir = s"${tmp()}/flat"
+    val flatPts = pts.select(col("pid"), col("embedding"), (col("pid") % 7).as("bucket"))
+    val flat = VectorCollection.ensure(spark, flatDir, flatPts,
+      CollectionConfig("pid", "embedding", 64, multiVector = false))
+    flat.upsert(flatPts)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSeq
+    assert(ids(flat.search(q, 5)) === bruteTopK(flatDir, q, 5, "pid"))
+    assert(flat.createPayloadIndexZ("pid", "bucket", targetRowsPerFile = 100) > 1)
+    assert(ids(flat.search(q, 5)) === bruteTopK(flatDir, q, 5, "pid"))
+    assert(flat.count === pts.count())
   }
 
   test("IVF index: build once, ANN probe prunes partitions and finds the query point") {

@@ -187,6 +187,7 @@ class VectorCollection private (
   /** D2: MaxSim late-interaction top-k for multi-vector collections. */
   def searchMaxSim(queryVecs: Seq[Seq[Float]], k: Int = 5): DataFrame = {
     require(config.multiVector, "maxsim search on a dense collection")
+    requireTokenDims(queryVecs)
     TopK.maxSim(scanned(lit(true)), typedlit(queryVecs), config.idCol, config.vectorCol, k)
   }
 
@@ -199,11 +200,7 @@ class VectorCollection private (
   def searchMaxSimBatch(
       requests: Seq[(Long, Seq[Seq[Float]])], k: Int = 5): DataFrame = {
     require(config.multiVector, "batch maxsim search on a dense collection")
-    val badDim = requests.collectFirst {
-      case (qid, m) if m.exists(_.length != config.dim) => qid
-    }
-    require(badDim.isEmpty,
-      s"request ${badDim.getOrElse(0L)} has a token vector whose dim != ${config.dim}")
+    requests.foreach { case (qid, m) => requireTokenDims(m, s"request $qid") }
     import spark.implicits._
     val reqs = requests.toDF("_g_qid", "_g_qm")
     val scored = table
@@ -317,7 +314,7 @@ class VectorCollection private (
       hits.withColumn(rankName, row_number().over(w).cast("long"))
         .select(col("pid"), col(rankName))
     }
-    val denseAsc = VectorCollection.metricFn(config.distance)._2
+    val denseAsc = TopK.metricFn(config.distance)._2
     ranked(sHits, "rs", asc = false)
       .join(ranked(dHits, "rd", asc = denseAsc), Seq("pid"), "full_outer")
       .select(col("pid").as(config.idCol),
@@ -376,8 +373,14 @@ class VectorCollection private (
 
   /** A query vector must have the collection's dim; `what` names it in
     * the refusal (a batch names the request id). */
-  private def requireDim(v: Seq[Float], what: => String = "query"): Unit =
+  private def requireDim(v: Seq[_], what: => String = "query"): Unit =
     require(v.length == config.dim, s"$what dim ${v.length} != collection dim ${config.dim}")
+
+  /** Every token vector of a MaxSim query matrix must have the
+    * collection's dim; `what` names the matrix in the refusal. */
+  private def requireTokenDims(m: Seq[Seq[Float]], what: => String = "query"): Unit =
+    require(m.forall(_.length == config.dim),
+      s"$what has a token vector whose dim != ${config.dim}")
 
   /** Qdrant `client.delete` with a points selector: delete by id set.
     * File-granular rewrite; see [[graft.index.Sink.deleteMatching]]. */
@@ -484,11 +487,13 @@ class VectorCollection private (
     * with the metric, matching [[search]]. */
   def searchGroups(
       queryVec: Seq[Float], groupCol: String,
-      groupSize: Int = 3, limit: Int = 5): DataFrame =
+      groupSize: Int = 3, limit: Int = 5): DataFrame = {
+    requireDim(queryVec)
     graft.search.QueryApis.searchGroups(
         asPoints, queryVec.map(_.toDouble), groupCol, groupSize, limit,
         config.distance)
       .withColumnRenamed("vec_id", config.idCol)
+  }
 
   /** Qdrant `discover_batch`: N discovery requests, one collection
     * pass (broadcast request frame, bounded-heap ranking on the
@@ -511,6 +516,10 @@ class VectorCollection private (
     * TopK semantics under the collection's Distance. */
   def queryBatch(requests: Seq[graft.search.BatchQuery], k: Int = 5): DataFrame = {
     require(!config.multiVector, "batch query on a multi-vector collection")
+    requests.foreach {
+      case graft.search.NearestBatchQuery(qid, v) => requireDim(v, s"query $qid")
+      case _ => ()
+    }
     graft.search.QueryApis.queryBatch(asPoints, requests, k, config.distance)
       .withColumnRenamed("vec_id", config.idCol)
   }
@@ -532,11 +541,13 @@ class VectorCollection private (
   def searchGroupsWithLookup(
       queryVec: Seq[Float], groupCol: String,
       lookup: VectorCollection, lookupCols: Seq[String],
-      groupSize: Int = 3, limit: Int = 5): DataFrame =
+      groupSize: Int = 3, limit: Int = 5): DataFrame = {
+    requireDim(queryVec)
     graft.search.QueryApis.searchGroupsWithLookup(
         asPoints, queryVec.map(_.toDouble), groupCol, groupSize, limit,
         lookup.table, lookup.config.idCol, lookupCols, config.distance)
       .withColumnRenamed("vec_id", config.idCol)
+  }
 
   /** Qdrant facet API: value counts for a payload key under a filter.
     * `exact=false` estimates each value's count with a HyperLogLog++
@@ -551,41 +562,33 @@ class VectorCollection private (
   /** Qdrant `search_batch`: N query vectors scored in ONE pass over
     * the collection (broadcast query side, bounded-heap topk_hits
     * ranking — map-side partial, O(k) per query through the shuffle)
-    * — per-query top-k without per-query scans. */
+    * — per-query top-k without per-query scans. Scores and ranks under
+    * the collection's Distance, like [[search]]. */
   def searchBatch(queries: Seq[(Long, Seq[Float])], k: Int = 5): DataFrame = {
     require(!config.multiVector, "batch search on a multi-vector collection")
     queries.foreach { case (qid, v) => requireDim(v, s"query $qid") }
     import spark.implicits._
     val q = queries.toDF("q_id", "qv")
-    graft.ops.Similarity.knnJoin(asPoints, q, k)
+    graft.ops.Similarity.knnJoin(asPoints, q, k, config.distance)
       .withColumnRenamed("vec_id", config.idCol)
   }
 
   /** [[searchBatch]] with PER-REQUEST payload filters — Qdrant's
     * `search_batch` takes a full SearchRequest per entry, filter
     * included. Each request optionally pins `filterCol` to a value
-    * (None = unfiltered); all requests still share ONE collection
-    * pass: the broadcast request frame carries the filter value, the
-    * predicate evaluates inside the same codegen'd scoring stage, and
-    * ranking stays the bounded-heap aggregate. Filtering BEFORE the
-    * heap shrinks per-request candidate streams — a filtered request
-    * costs less, not more. Scoring honors the collection's configured
-    * Distance (cosine/dot DESC; euclid/manhattan ASC), matching
-    * [[search]] exactly. Internal names are `_g`-prefixed and the scan
-    * is pruned to (id, vector, filterCol), so payload column names can
-    * never collide with the request frame. */
+    * (None = unfiltered) as a one-clause must [[graft.search.MatchValue]]
+    * filter of the [[graft.search.Filter]] form below, so all requests
+    * share its ONE collection pass. Filtering BEFORE the heap shrinks
+    * per-request candidate streams — a filtered request costs less,
+    * not more. Scoring honors the collection's configured Distance
+    * (cosine/dot DESC; euclid/manhattan ASC), matching [[search]]
+    * exactly. */
   def searchBatchFiltered(
       requests: Seq[(Long, Seq[Float], Option[Long])],
       filterCol: String,
-      k: Int = 5): DataFrame = {
-    require(!config.multiVector, "batch search on a multi-vector collection")
-    requests.foreach { case (qid, v, _) => requireDim(v, s"query $qid") }
-    graft.search.QueryApis.searchBatchFiltered(
-        asPoints,
-        requests.map { case (id, v, f) => (id, v.map(_.toDouble), f) },
-        filterCol, k, config.distance)
-      .withColumnRenamed("vec_id", config.idCol)
-  }
+      k: Int = 5): DataFrame =
+    searchBatchFiltered(requests.map { case (id, v, f) =>
+      (id, v, graft.search.QueryApis.matchOrAll(filterCol, f)) }, k)
 
   /** [[searchBatchFiltered]] with a FULL per-request
     * [[graft.search.Filter]] — Qdrant's actual SearchRequest shape:
@@ -737,20 +740,13 @@ class VectorCollection private (
     val probes = graft.ops.Similarity
       .rankCentroids(loadCentroids(), queryVec.toArray, config.distance)
       .take(nprobe)
-    val (scoreOf, asc) = VectorCollection.metricFn(config.distance)
     // restore the configured id name BEFORE the payload filter so a
     // filter written against exact search's schema (col(idCol) …)
     // works unchanged here; the rename is a projection, filters still
     // push through it to the scan
-    ivf.read
-      .withColumnRenamed("vec_id", config.idCol)
-      .filter(col("cluster_id").isInCollection(probes) && filter)
-      .select(col(config.idCol),
-        round(scoreOf(col("embedding"),
-          typedlit(queryVec.map(_.toDouble))), 6).as("score"))
-      .orderBy(if (asc) col("score").asc else col("score").desc,
-        col(config.idCol).asc)
-      .limit(k)
+    TopK.dense(ivf.read.withColumnRenamed("vec_id", config.idCol),
+      typedlit(queryVec.map(_.toDouble)), config.idCol, "embedding", k,
+      col("cluster_id").isInCollection(probes) && filter, None, config.distance)
   }
 
   /** Append new points into the persisted IVF index WITHOUT a rebuild:
@@ -1066,11 +1062,6 @@ class VectorCollection private (
 }
 
 object VectorCollection {
-
-  /** (score expression, ranks-ascending) for a configured Distance —
-    * the ONE mapping in [[graft.search.TopK.metricFn]]. */
-  private[api] def metricFn(distance: String): ((Column, Column) => Column, Boolean) =
-    TopK.metricFn(distance)
 
   private def metaPath(path: String) = s"$path/_graft_meta.json"
 

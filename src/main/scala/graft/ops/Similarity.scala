@@ -31,8 +31,9 @@ import graft.vector.Kernels
   */
 object Similarity {
 
-  /** k-NN join: for every query row, the k nearest rows of `data` by
-    * cosine. Query side is broadcast (small); the corpus is scored
+  /** k-NN join: for every query row (q_id, qv), the k nearest rows of
+    * `data` under `metric` — the [[graft.search.TopK.batch]] pass.
+    * Query side is broadcast (small); the corpus is scored
     * straight off its scan partitions: at 100 TB the scan is thousands
     * of file splits and re-exchanging 64-float vectors to "spread" it
     * would itself be the bottleneck (the round-4 finding). Ranking is
@@ -44,12 +45,10 @@ object Similarity {
     * partial mode, plan-asserted in ScaleDesignSpec; tie order score
     * DESC / id ASC is bit-equal to the window formulation). Fixture
     * parallelism is the caller's concern — see [[fanOutIfNarrow]]. */
-  def knnJoin(data: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = data.crossJoin(broadcast(queries))
-      .select(col("q_id"), col("vec_id"),
-        round(Kernels.cosine(col("embedding"), col("qv")), 6).as("score"))
-    rankHits(scored, "q_id", k)
-  }
+  def knnJoin(
+      data: DataFrame, queries: DataFrame, k: Int,
+      metric: String = "cosine"): DataFrame =
+    graft.search.TopK.batch(data, queries, "q_id", "qv", k, metric)
 
   /** The heap-ranking tail every broadcast-batch operator shares: a
     * scored frame carrying (`keyCol`, vec_id, score) → per-key top-k
@@ -58,8 +57,9 @@ object Similarity {
     * key through the shuffle). `ascending=true` ranks ASC for distance
     * metrics by negating the heap key — sign flips are exact in
     * doubles, ids still tie-break ASC. One definition so the rank and
-    * column contract cannot drift between knnJoin, recommendBatch,
-    * discoverBatch, and searchBatchFiltered. */
+    * column contract cannot drift between the vector batches
+    * ([[graft.search.TopK.batch]]), discoverBatch and
+    * searchMaxSimBatch. */
   private[graft] def rankHits(
       scored: DataFrame, keyCol: String, k: Int,
       ascending: Boolean = false): DataFrame = {

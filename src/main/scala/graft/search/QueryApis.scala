@@ -53,10 +53,6 @@ final case class RecommendBatchQuery(
 
 object QueryApis {
 
-  /** Fetch embedding vectors for `ids` as driver-side double arrays,
-    * keyed by id (tiny: recommendation examples, not data). Fails with
-    * the missing ids by name — the actionable validation error Qdrant
-    * returns for an unknown example point. */
   /** Similarity-space metric value against the current row's
     * `embedding`: LARGER always means CLOSER — the similarity itself
     * for cosine/dot, the NEGATED distance for euclid/manhattan. The
@@ -72,6 +68,10 @@ object QueryApis {
     }
   }
 
+  /** Fetch embedding vectors for `ids` as driver-side double arrays,
+    * keyed by id (tiny: recommendation examples, not data). Fails with
+    * the missing ids by name — the actionable validation error Qdrant
+    * returns for an unknown example point. */
   private def fetchVecs(e: DataFrame, ids: Seq[Long]): Map[Long, Array[Double]] = {
     val found = e.filter(col("vec_id").isInCollection(ids))
       .select(col("vec_id"), col("embedding"))
@@ -112,14 +112,9 @@ object QueryApis {
       k: Int,
       metric: String = "cosine"): DataFrame = {
     require(posIds.nonEmpty, "recommend needs at least one positive example")
-    val (scoreOf, asc) = TopK.metricFn(metric)
     val qv = averageVector(fetchVecs(points, posIds ++ negIds), posIds, negIds)
-    points
-      .filter(!col("vec_id").isInCollection(posIds ++ negIds))
-      .select(col("vec_id"),
-        round(scoreOf(col("embedding"), typedlit(qv.toSeq)), 6).as("score"))
-      .orderBy(if (asc) col("score").asc else col("score").desc, col("vec_id").asc)
-      .limit(k)
+    TopK.dense(points, typedlit(qv.toSeq), "vec_id", "embedding", k,
+      !col("vec_id").isInCollection(posIds ++ negIds), None, metric)
   }
 
   /** average_vector strategy query: 2·avg_pos − avg_neg (avg_pos alone
@@ -155,55 +150,22 @@ object QueryApis {
       k: Int,
       metric: String = "cosine"): DataFrame = {
     require(posIds.nonEmpty, "recommend needs at least one positive example")
-    val (scoreOf, asc) = TopK.metricFn(metric)
     val qv = averageVector(fetchVecs(lookup, posIds ++ negIds), posIds, negIds)
-    points
-      .select(col("vec_id"),
-        round(scoreOf(col("embedding"), typedlit(qv.toSeq)), 6).as("score"))
-      .orderBy(if (asc) col("score").asc else col("score").desc, col("vec_id").asc)
-      .limit(k)
+    TopK.dense(points, typedlit(qv.toSeq), "vec_id", "embedding", k,
+      lit(true), None, metric)
   }
 
-  /** Qdrant `recommend_batch`: N recommendation requests answered in
-    * ONE pass over the collection. Each request's average_vector query
-    * and its example-exclusion list are driver-side constants (tiny,
-    * like B5 query embedding); they broadcast as one small frame, the
-    * corpus is scanned once with a per-request exclusion filter, and
-    * the per-request top-k is the bounded-heap topk_hits aggregate —
-    * map-side partial, O(k) per request through the shuffle — not N
-    * separate scans, not a window buffering every scored row. */
+  /** Qdrant `recommend_batch`: N average_vector recommendation
+    * requests (id, positives, negatives), each a [[RecommendBatchQuery]]
+    * of the one [[queryBatch]] pass. */
   def recommendBatch(
       points: DataFrame,
       requests: Seq[(Long, Seq[Long], Seq[Long])],
       k: Int,
-      metric: String = "cosine"): DataFrame = {
-    require(requests.nonEmpty, "recommendBatch needs at least one request")
-    // duplicate req_ids would silently MERGE two requests' hit lists
-    // in the per-request ranking (the queryBatch guard, shared here)
-    require(requests.map(_._1).distinct.size == requests.size,
-      "duplicate request ids in recommend batch")
-    requests.foreach { case (rid, pos, _) =>
-      require(pos.nonEmpty, s"request $rid needs at least one positive example") }
-    val (scoreOf, asc) = TopK.metricFn(metric)
-    val allIds = requests.flatMap { case (_, p, n) => p ++ n }.distinct
-    val vecs = fetchVecs(points, allIds)
-    val spark = points.sparkSession
-    import spark.implicits._
-    val reqRows = requests.map { case (rid, pos, neg) =>
-      // the ONE strategy formula (averageVector) — not an inline copy
-      // that could drift from the singleton recommend's
-      (rid, averageVector(vecs, pos, neg).toSeq, (pos ++ neg).distinct)
-    }
-    val reqs = reqRows.toDF("req_id", "qv", "excl")
-    // bounded-heap ranking (the knnJoin shape): each map task
-    // pre-reduces to k pairs per request before the req_id shuffle —
-    // never N copies of the corpus through the wire
-    val scored = points.crossJoin(broadcast(reqs))
-      .filter(!array_contains(col("excl"), col("vec_id")))
-      .select(col("req_id"), col("vec_id"),
-        round(scoreOf(col("embedding"), col("qv")), 6).as("score"))
-    graft.ops.Similarity.rankHits(scored, "req_id", k, ascending = asc)
-  }
+      metric: String = "cosine"): DataFrame =
+    queryBatch(points,
+      requests.map { case (rid, pos, neg) => RecommendBatchQuery(rid, pos, neg) },
+      k, metric)
 
   /** Qdrant `query_batch_points`: N UNIVERSAL-query requests — plain
     * nearest-by-vector, nearest-to-a-stored-point (self-excluded), or
@@ -211,11 +173,10 @@ object QueryApis {
     * pass over the collection. Every request resolves driver-side to
     * (query vector, exclusion list): the referenced point ids across
     * ALL requests are fetched with a single pushed IN-list scan, the
-    * resolved request frame broadcasts, and ranking is the bounded-
-    * heap topk_hits aggregate keyed by request — the same one-pass
-    * cost shape as [[searchBatch]]/[[recommendBatch]], whatever mix
-    * of query kinds the batch carries. Per-kind parity with the
-    * singleton APIs is spec-asserted. */
+    * resolved request frame broadcasts, and ranking is the
+    * [[TopK.batch]] pass keyed by request, whatever mix of query kinds
+    * the batch carries. Per-kind parity with the singleton APIs is
+    * spec-asserted. */
   def queryBatch(
       points: DataFrame, requests: Seq[BatchQuery], k: Int,
       metric: String = "cosine"): DataFrame = {
@@ -228,9 +189,8 @@ object QueryApis {
       case _ => ()
     }
     // every kind in the union resolves to (query vector, exclusions)
-    // then ranks with plain TopK.dense semantics — metric-unambiguous,
-    // like [[recommend]]; distance metrics rank ASC through the heap
-    val (scoreOf, asc) = TopK.metricFn(metric)
+    // then ranks with plain TopK semantics — metric-unambiguous, like
+    // [[recommend]]; distance metrics rank ASC through the heap
     val refIds = requests.flatMap {
       case ByIdBatchQuery(_, p) => Seq(p)
       case RecommendBatchQuery(_, pos, neg) => pos ++ neg
@@ -239,20 +199,15 @@ object QueryApis {
     val vecs =
       if (refIds.isEmpty) Map.empty[Long, Array[Double]]
       else fetchVecs(points, refIds)
-    val spark = points.sparkSession
-    import spark.implicits._
+    import points.sparkSession.implicits._
     val reqRows = requests.map {
       case NearestBatchQuery(rid, v) => (rid, v, Seq.empty[Long])
       case ByIdBatchQuery(rid, p) => (rid, vecs(p).toSeq, Seq(p))
       case RecommendBatchQuery(rid, pos, neg) =>
         (rid, averageVector(vecs, pos, neg).toSeq, (pos ++ neg).distinct)
     }
-    val reqs = reqRows.toDF("req_id", "qv", "excl")
-    val scored = points.crossJoin(broadcast(reqs))
-      .filter(!array_contains(col("excl"), col("vec_id")))
-      .select(col("req_id"), col("vec_id"),
-        round(scoreOf(col("embedding"), col("qv")), 6).as("score"))
-    graft.ops.Similarity.rankHits(scored, "req_id", k, ascending = asc)
+    TopK.batch(points, reqRows.toDF("req_id", "qv", "excl"), "req_id", "qv", k,
+      metric, Some(!array_contains(col("excl"), col("vec_id"))))
   }
 
   /** Qdrant discovery search: rank by how many (positive, negative)
@@ -372,11 +327,11 @@ object QueryApis {
     * candidate stream, costing less, not more. The OR of every
     * request's filter additionally prefilters the scan side BEFORE the
     * request fan-out (a row no request keeps never multiplies; with
-    * any unfiltered request it constant-folds away). Scoring honors
-    * the metric (euclid/manhattan rank ASC through the heap's exact
-    * negation). Internal names are `_g`-prefixed so payload names
-    * never collide with the request frame; the final projection keeps
-    * the scan pruned to (vec_id, embedding, filter-referenced cols). */
+    * any unfiltered request it constant-folds away). Scoring and
+    * ranking are the [[TopK.batch]] pass under the metric. Internal
+    * names are `_g`-prefixed so payload names never collide with the
+    * request frame; the final projection keeps the scan pruned to
+    * (vec_id, embedding, filter-referenced cols). */
   def searchBatchFiltered(
       points: DataFrame,
       requests: Seq[(Long, Seq[Double], Filter)],
@@ -385,7 +340,6 @@ object QueryApis {
     require(requests.nonEmpty, "searchBatchFiltered needs at least one request")
     require(requests.map(_._1).distinct.size == requests.size,
       "duplicate request ids in search batch")
-    val (scoreOf, asc) = TopK.metricFn(metric)
     import points.sparkSession.implicits._
     val reqs = requests.map { case (id, v, _) => (id, v) }.toDF("_g_qid", "_g_qv")
     // superset prefilter: NULL filter results drop in standalone
@@ -396,13 +350,8 @@ object QueryApis {
     val pred = requests
       .map { case (id, _, f) => col("_g_qid") === lit(id) && f.toColumn }
       .reduce(_ || _)
-    val scored = points
-      .filter(prefilter)
-      .crossJoin(broadcast(reqs))
-      .filter(pred)
-      .select(col("_g_qid").as("q_id"), col("vec_id"),
-        round(scoreOf(col("embedding"), col("_g_qv")), 6).as("score"))
-    graft.ops.Similarity.rankHits(scored, "q_id", k, ascending = asc)
+    TopK.batch(points.filter(prefilter), reqs, "_g_qid", "_g_qv", k, metric, Some(pred))
+      .withColumnRenamed("_g_qid", "q_id")
   }
 
   /** [[searchBatchFiltered]] with the single-column long-equality
@@ -416,10 +365,12 @@ object QueryApis {
       k: Int,
       metric: String = "cosine"): DataFrame =
     searchBatchFiltered(points,
-      requests.map { case (id, v, f) =>
-        (id, v, f.fold(Filter())(value =>
-          Filter(must = Seq(MatchValue(filterCol, value)))))
-      }, k, metric)
+      requests.map { case (id, v, f) => (id, v, matchOrAll(filterCol, f)) }, k, metric)
+
+  /** The one-clause must [[MatchValue]] filter pinning `filterCol` to
+    * `value`, or the empty (unfiltered) [[Filter]] for None. */
+  private[graft] def matchOrAll(filterCol: String, value: Option[Long]): Filter =
+    value.fold(Filter())(v => Filter(must = Seq(MatchValue(filterCol, v))))
 
   /** Qdrant `recommend` with `strategy=best_score` (the non-default
     * strategy beside [[recommend]]'s average_vector): every candidate
@@ -1363,11 +1314,6 @@ object QueryApis {
        |  ORDER BY ${graft.index.Embedder.duckStringHash64("'matrix:' || vec_id")} ASC, vec_id ASC
        |  LIMIT $MatrixN""".stripMargin
 
-  /** The shared batch-oracle ranking tail: a `reqs` CTE carrying
-    * (req_id, qv, excl) — exactly the broadcast request frame the
-    * Spark batch operators build — scored against every non-excluded
-    * point and ranked per request, the row_number twin of the
-    * bounded-heap rankHits. */
   /** The rank half of the batch-oracle tail alone — for batch oracles
     * whose scoring is not the plain request-frame cosine (discover's
     * composite key) but whose per-request row_number ranking must stay
@@ -1378,6 +1324,11 @@ object QueryApis {
        |SELECT $idName, vec_id, score, rnk FROM ranked WHERE rnk <= $k
        |ORDER BY $idName, rnk""".stripMargin
 
+  /** The shared batch-oracle ranking tail: a `reqs` CTE carrying
+    * (req_id, qv, excl) — exactly the broadcast request frame the
+    * Spark batch operators build — scored against every non-excluded
+    * point and ranked per request, the row_number twin of the
+    * bounded-heap rankHits. */
   private def duckBatchRanked(
       idName: String, reqsCte: String, k: Int, extraWhere: String = ""): String =
     // `+ 0` after the ROUND: DuckDB's double ROUND keeps −0.0 where

@@ -18,14 +18,21 @@ import graft.vector.Kernels
   * per-partition top-k heaps merged on the driver, so no global sort
   * and no shuffle of the scored table even at 10^9 rows. Payload
   * filters (E4) sit below the projection and push down to parquet.
+  *
+  * This object is the one ranking rule of the query APIs: [[metricFn]]
+  * fixes each metric's score and direction, [[dense]] ranks a single
+  * query (search, searchAnn, recommend, recommend with lookup) and
+  * [[batch]] ranks every vector-request batch (search_batch,
+  * query_batch, recommend_batch, filtered search_batch). Scores round
+  * at 6dp and ties break id ASC in both.
   */
 object TopK {
 
   /** The ONE Qdrant `Distance` → (score expression, ranks-ascending)
-    * mapping, shared by every metric-aware operator (dense search, the
-    * batch APIs, recommend, the facade) so the metric semantics cannot
-    * drift between them: `cosine`/`dot` are similarities ranked DESC,
-    * `euclid`/`manhattan` are distances ranked ASC. */
+    * mapping, shared by every metric-aware operator so the metric
+    * semantics cannot drift between them: `cosine`/`dot` are
+    * similarities ranked DESC, `euclid`/`manhattan` are distances
+    * ranked ASC. */
   private[graft] def metricFn(
       metric: String): ((Column, Column) => Column, Boolean) = metric match {
     case "cosine" => (Kernels.cosine, false)
@@ -88,6 +95,30 @@ object TopK {
       metric: String = "cosine"): DataFrame =
     dense(points.filter(payloadFilter).crossJoin(broadcast(query)),
       col(queryVecCol), idCol, vecCol, k, lit(true), scoreThreshold, metric)
+
+  /** Vector-batch top-k: each request row of `reqs` — its id in
+    * `keyCol`, its query vector in `qvCol` — broadcasts onto the scan
+    * of `points` (vec_id, embedding, …), pairs failing `keep` drop, each
+    * pair scores under `metric` as in [[dense]], and the per-request
+    * top k rank through the bounded heap of
+    * [[graft.ops.Similarity.rankHits]]: map-side partial, O(k) per
+    * request through the shuffle, never Q copies of the corpus.
+    * Output (`keyCol`, vec_id, score, rnk). */
+  private[graft] def batch(
+      points: DataFrame,
+      reqs: DataFrame,
+      keyCol: String,
+      qvCol: String,
+      k: Int,
+      metric: String,
+      keep: Option[Column] = None): DataFrame = {
+    val (scoreOf, asc) = metricFn(metric)
+    val crossed = points.crossJoin(broadcast(reqs))
+    val scored = keep.fold(crossed)(crossed.filter)
+      .select(col(keyCol), col("vec_id"),
+        round(scoreOf(col("embedding"), col(qvCol)), 6).as("score"))
+    graft.ops.Similarity.rankHits(scored, keyCol, k, ascending = asc)
+  }
 
   /** Multi-vector top-k (D2): MaxSim late interaction against the query
     * token-matrix `query` — a literal or a column of `docs`. */

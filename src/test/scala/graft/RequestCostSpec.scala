@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.api.{CollectionConfig, VectorCollection}
-import graft.search.{FScore, Filter, MatchValue}
+import graft.search.{ByIdBatchQuery, FScore, Filter, MatchValue, NearestBatchQuery}
 import graft.Tables.t
 
 /** What one collection request costs in Spark jobs and file bytes, and
@@ -95,21 +95,29 @@ class RequestCostSpec extends SparkSpec {
     val m = VectorCollection.ensure(spark, mvDir, mv,
       CollectionConfig("doc_id", "vecs", 64, multiVector = true))
     m.upsert(mv)
-    val q = vecOf(7)
+    val (q, q9) = (vecOf(7), vecOf(9))
     val qm = mv.filter(col("doc_id") === 3).head.getSeq[scala.collection.Seq[Float]](1)
       .map(_.toSeq).toSeq
     // warm: the first read of each handle resolves its schema
     c.search(q, 5).collect(); c.searchAnn(q, 5, 2).collect(); m.searchMaxSim(qm, 5).collect()
-    val requests = Seq[(String, () => Any)](
-      "dense search" -> (() => c.search(q, 5).collect()),
-      "filtered search" -> (() => c.search(q, 5, col("label") === 3).collect()),
-      "searchMaxSim" -> (() => m.searchMaxSim(qm, 5).collect()),
-      "searchAnn" -> (() => c.searchAnn(q, 5, 2).collect()),
-      "upsert of an in-memory frame" -> (() =>
-        c.upsert(Seq((900001L, q, 3)).toDF("vec_id", "embedding", "label"))))
-    requests.foreach { case (what, run) =>
+    // (request, run it, Spark jobs it runs). A batch broadcasts its
+    // request frame and shuffles the per-request heaps (broadcast, map
+    // and result jobs); a by-id or recommend request first fetches its
+    // example vectors
+    val requests = Seq[(String, () => Any, Int)](
+      ("dense search", () => c.search(q, 5).collect(), 1),
+      ("filtered search", () => c.search(q, 5, col("label") === 3).collect(), 1),
+      ("searchMaxSim", () => m.searchMaxSim(qm, 5).collect(), 1),
+      ("searchAnn", () => c.searchAnn(q, 5, 2).collect(), 1),
+      ("searchBatch", () => c.searchBatch(Seq((1L, q), (2L, q9)), 5).collect(), 3),
+      ("queryBatch", () => c.queryBatch(Seq(NearestBatchQuery(1L, q.map(_.toDouble)),
+        ByIdBatchQuery(2L, 9L)), 5).collect(), 4),
+      ("recommend", () => c.recommend(Seq(7L), Seq(9L), 5).collect(), 2),
+      ("upsert of an in-memory frame", () =>
+        c.upsert(Seq((900001L, q, 3)).toDF("vec_id", "embedding", "label")), 1))
+    requests.foreach { case (what, run, expected) =>
       val (_, jobs) = jobsOf(run())
-      assert(jobs.size === 1, s"$what ran ${jobs.size} Spark jobs: $jobs")
+      assert(jobs.size === expected, s"$what ran ${jobs.size} Spark jobs: $jobs")
     }
     // the anti-join shuffles, but no schema, cache or count job remains
     val fresh = embeddings.filter(col("vec_id") < 20)

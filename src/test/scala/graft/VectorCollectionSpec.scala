@@ -372,6 +372,31 @@ class VectorCollectionSpec extends SparkSpec {
     intercept[IllegalArgumentException] { c.search(Seq(1f, 2f, 3f)) }
   }
 
+  test("wrong-dimension queries refuse by name on the grouped, batch and MaxSim calls") {
+    val c = VectorCollection.ensure(spark, s"${tmp()}/col", points,
+      CollectionConfig("point_id", "embedding", 64, multiVector = false))
+    c.upsert(points)
+    val mv = Tables.multiVectorDocs(t(spark, sf, "embeddings"))
+    val m = VectorCollection.ensure(spark, s"${tmp()}/mv", mv,
+      CollectionConfig("doc_id", "vecs", 64, multiVector = true))
+    m.upsert(mv)
+    val short = Seq(1f, 2f, 3f)
+    // (call, what the refusal names)
+    val calls = Seq[(String, () => Any, String)](
+      ("searchGroups", () => c.searchGroups(short, "doc_id"), "query dim 3"),
+      ("searchGroupsWithLookup",
+        () => c.searchGroupsWithLookup(short, "doc_id", c, Seq("filename")), "query dim 3"),
+      ("queryBatch", () => c.queryBatch(Seq(
+        graft.search.NearestBatchQuery(1L, Seq.fill(64)(0.1)),
+        graft.search.NearestBatchQuery(4L, short.map(_.toDouble)))), "query 4 dim 3"),
+      ("searchMaxSim", () => m.searchMaxSim(Seq(Seq.fill(64)(0.1f), short)), "token vector"))
+    calls.foreach { case (what, run, named) =>
+      val err = intercept[IllegalArgumentException](run())
+      assert(err.getMessage.contains(named) && err.getMessage.contains("64"),
+        s"$what: ${err.getMessage}")
+    }
+  }
+
   test("sharded collection: writes partition by shard key, routed search prunes") {
     val dir = s"${tmp()}/col"
     val pts = t(spark, sf, "embeddings")
@@ -499,6 +524,20 @@ class VectorCollectionSpec extends SparkSpec {
     val qb = c.queryBatch(Seq(graft.search.ByIdBatchQuery(1L, 7L)), 5).collect()
       .sortBy(_.getLong(3)).map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(qb === expected, "euclid queryBatch by-id == exact search minus self")
+    // searchBatch and a plain-vector queryBatch request score under the
+    // collection's metric too: each request's hits are search's on its
+    // vector, scores included
+    val q9 = e.filter(col("pid") === 9).head.getSeq[Float](1)
+    def searched(v: Seq[Float]) =
+      c.search(v, 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def perRequest(hits: org.apache.spark.sql.DataFrame) =
+      hits.collect().groupBy(_.getLong(0)).map { case (rid, rs) =>
+        rid -> rs.sortBy(_.getLong(3)).map(r => (r.getLong(1), r.getDouble(2))).toSeq }
+    assert(perRequest(c.searchBatch(Seq((1L, q), (2L, q9)), 5)) ===
+      Map(1L -> exact.toSeq, 2L -> searched(q9)), "euclid searchBatch == search")
+    assert(perRequest(c.queryBatch(Seq(
+        graft.search.NearestBatchQuery(1L, q.map(_.toDouble))), 5)) ===
+      Map(1L -> exact.toSeq), "euclid queryBatch nearest == search")
     // the strategy family is metric-aware since r11: with the single
     // positive example 7 and no negatives, best_score's max-over-
     // positives and sum_scores' one-term fold both collapse to

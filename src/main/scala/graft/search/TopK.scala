@@ -1,8 +1,11 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.vector.Kernels
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.vector.{HitHeap, Kernels}
 
 /** Query-side operators (SURVEY.md §2 D1–D3): filtered top-k similarity
   * search over a vector table, reproducing the reference's
@@ -22,9 +25,13 @@ import graft.vector.Kernels
   * This object is the one ranking rule of the query APIs: [[metricFn]]
   * fixes each metric's score and direction, [[dense]] ranks a single
   * query (search, searchAnn, recommend, recommend with lookup) and
-  * [[batch]] ranks every vector-request batch (search_batch,
-  * query_batch, recommend_batch, filtered search_batch). Scores round
-  * at 6dp and ties break id ASC in both.
+  * [[batch]] ranks every vector-request batch that needs its request
+  * frame (query_batch, recommend_batch, filtered search_batch, the
+  * k-NN join), broadcast onto the scan with a heap aggregate per
+  * request. [[literalBatch]] ranks search_batch, whose request vectors
+  * are literals: one job, per-partition heaps merged on the driver,
+  * the same rows as [[dense]] per request. Scores round at 6dp and
+  * ties break id ASC in all three.
   */
 object TopK {
 
@@ -118,6 +125,67 @@ object TopK {
       .select(col(keyCol), col("vec_id"),
         round(scoreOf(col("embedding"), col(qvCol)), 6).as("score"))
     graft.ops.Similarity.rankHits(scored, keyCol, k, ascending = asc)
+  }
+
+  /** Vector-batch top-k against literal request vectors, in ONE Spark
+    * job over `points`: every row scores against every request in one
+    * `transform` over the request matrix literal (scores rounded at 6dp
+    * as in [[dense]]), each partition keeps a bounded
+    * [[graft.vector.HitHeap]] per request, and the driver merges them —
+    * TakeOrderedAndProject's per-partition heaps and driver merge,
+    * once per request. No request frame broadcasts and nothing
+    * shuffles. Each request ranks on its own, score DESC (ASC for
+    * distance metrics) with id ASC on ties, so its rows equal [[dense]]
+    * on its vector.
+    *
+    * The job runs when this is called; the result is a local frame
+    * (q_id, `idCol`, score, rnk), empty with the same columns when
+    * there are no requests.
+    */
+  private[graft] def literalBatch(
+      points: DataFrame,
+      requests: Seq[(Long, Seq[Float])],
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      metric: String): DataFrame = {
+    require(k > 0, s"batch top-k needs k > 0, got $k")
+    val (scoreOf, asc) = metricFn(metric)
+    // heaps rank DESC; a distance ranks ASC through its negation, which
+    // is exact in doubles
+    val sign = if (asc) -1.0 else 1.0
+    val n = requests.size
+    val heaps = Array.fill(n)(new HitHeap(k))
+    if (n > 0) {
+      val scores = transform(typedlit(requests.map(_._2)), q => round(scoreOf(col(vecCol), q), 6))
+      points.select(col(idCol).cast("long"), scores).queryExecution.toRdd
+        .mapPartitions { rows =>
+          val local = Array.fill(n)(new HitHeap(k))
+          rows.foreach { r =>
+            if (!r.isNullAt(0)) {
+              val id = r.getLong(0)
+              val s = r.getArray(1)
+              var j = 0
+              while (j < n) {
+                if (!s.isNullAt(j)) local(j).offer(sign * s.getDouble(j), id)
+                j += 1
+              }
+            }
+          }
+          Iterator.single(local.map(_.best))
+        }
+        .collect()
+        .foreach(_.zip(heaps).foreach { case (part, h) => h.offerAll(part) })
+    }
+    val rows = requests.zip(heaps).flatMap { case ((qid, _), h) =>
+      h.best.toSeq.zipWithIndex.map { case ((s, id), i) => Row(qid, id, sign * s, i + 1L) }
+    }
+    val schema = StructType(Seq(
+      StructField("q_id", LongType, nullable = false),
+      StructField(idCol, LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("rnk", LongType, nullable = false)))
+    points.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** Multi-vector top-k (D2): MaxSim late interaction against the query

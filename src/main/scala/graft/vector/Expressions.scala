@@ -852,14 +852,46 @@ case class PolyTokenHashes(child: Expression, mult: Long, prime: Long)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Bounded top-k aggregate: keeps the best `k` (score, id) pairs per
-  * group in an O(k) heap — the aggregate the LSH k-NN join ranks with
-  * instead of a row_number window, which would buffer and sort EVERY
-  * candidate per query before cutting. As a TypedImperativeAggregate
-  * it participates in partial aggregation (ObjectHashAggregate): each
-  * map task pre-reduces its candidate stream to k pairs, so the
-  * per-query shuffle payload is O(k), not O(candidates) — the same
-  * map-side-combine argument as a partial sum, applied to ranking.
+/** The bounded (score, id) heap behind every top-k that ranks without
+  * a sort: it keeps the best `k` pairs, score DESC then id ASC on ties,
+  * and evicts the worst pair first. [[TopKHits]] is its aggregate form;
+  * [[graft.search.TopK.literalBatch]] keeps one per request in each
+  * partition and merges them on the driver. One ordering, so the two
+  * cannot rank ties differently. */
+final class HitHeap(k: Int) {
+  // dequeue removes the max of the ordering, so with best-first
+  // ascending the head is the WORST pair (lowest score, then highest id)
+  private val heap = scala.collection.mutable.PriorityQueue.empty(HitHeap.bestFirst)
+
+  def offer(score: Double, id: Long): this.type = {
+    val p = (score, id)
+    if (heap.size < k) heap.enqueue(p)
+    else if (HitHeap.bestFirst.lt(p, heap.head)) { heap.dequeue(); heap.enqueue(p) }
+    this
+  }
+
+  def offerAll(pairs: Iterable[(Double, Long)]): this.type = {
+    pairs.foreach { case (s, id) => offer(s, id) }
+    this
+  }
+
+  /** The kept pairs, best first. */
+  def best: Array[(Double, Long)] = heap.toArray.sorted(HitHeap.bestFirst)
+}
+
+object HitHeap {
+  val bestFirst: Ordering[(Double, Long)] = Ordering.by { case (s, id) => (-s, id) }
+}
+
+/** Bounded top-k aggregate over a [[HitHeap]]: keeps the best `k`
+  * (score, id) pairs per group — the aggregate the LSH k-NN join ranks
+  * with instead of a row_number window, which would buffer and sort
+  * EVERY candidate per query before cutting. As a
+  * TypedImperativeAggregate it participates in partial aggregation
+  * (ObjectHashAggregate): each map task pre-reduces its candidate
+  * stream to k pairs, so the per-query shuffle payload is O(k), not
+  * O(candidates) — the same map-side-combine argument as a partial
+  * sum, applied to ranking.
   *
   * Order: score DESC, id ASC on ties — identical to the window
   * formulation and the DuckDB oracle's ORDER BY, so results are
@@ -873,7 +905,7 @@ case class TopKHits(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends org.apache.spark.sql.catalyst.expressions.aggregate
-    .TypedImperativeAggregate[scala.collection.mutable.PriorityQueue[(Double, Long)]] {
+    .TypedImperativeAggregate[HitHeap] {
 
   require(k > 0, "top-k aggregate needs k > 0")
 
@@ -891,58 +923,34 @@ case class TopKHits(
           s"topk_hits expects (DOUBLE score, BIGINT id), got ($s, $i)")
     }
 
-  // dequeue removes the max of the ordering — rank the WORST pair
-  // (lowest score, then highest id) as the maximum so trimming evicts it
-  private def worstFirst: Ordering[(Double, Long)] =
-    Ordering.by { case (s, id) => (-s, id) }
+  override def createAggregationBuffer(): HitHeap = new HitHeap(k)
 
-  override def createAggregationBuffer(): scala.collection.mutable.PriorityQueue[(Double, Long)] =
-    scala.collection.mutable.PriorityQueue.empty(worstFirst)
-
-  override def update(
-      buf: scala.collection.mutable.PriorityQueue[(Double, Long)],
-      input: org.apache.spark.sql.catalyst.InternalRow)
-      : scala.collection.mutable.PriorityQueue[(Double, Long)] = {
+  override def update(buf: HitHeap, input: org.apache.spark.sql.catalyst.InternalRow): HitHeap = {
     val s = scoreChild.eval(input)
     val id = idChild.eval(input)
-    if (s != null && id != null) {
-      buf.enqueue((s.asInstanceOf[Double], id.asInstanceOf[Long]))
-      if (buf.size > k) buf.dequeue()
-    }
+    if (s != null && id != null) buf.offer(s.asInstanceOf[Double], id.asInstanceOf[Long])
     buf
   }
 
-  override def merge(
-      buf: scala.collection.mutable.PriorityQueue[(Double, Long)],
-      other: scala.collection.mutable.PriorityQueue[(Double, Long)])
-      : scala.collection.mutable.PriorityQueue[(Double, Long)] = {
-    other.foreach { p =>
-      buf.enqueue(p)
-      if (buf.size > k) buf.dequeue()
-    }
-    buf
-  }
+  override def merge(buf: HitHeap, other: HitHeap): HitHeap = buf.offerAll(other.best)
 
-  override def eval(buf: scala.collection.mutable.PriorityQueue[(Double, Long)]): Any = {
-    val best = buf.toArray.sortBy { case (s, id) => (-s, id) }
-    new GenericArrayData(best.map { case (s, id) =>
+  override def eval(buf: HitHeap): Any =
+    new GenericArrayData(buf.best.map { case (s, id) =>
       org.apache.spark.sql.catalyst.InternalRow(s, id)
     })
-  }
 
-  override def serialize(buf: scala.collection.mutable.PriorityQueue[(Double, Long)]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 16 * buf.size)
-    bb.putInt(buf.size)
-    buf.foreach { case (s, id) => bb.putDouble(s); bb.putLong(id) }
+  override def serialize(buf: HitHeap): Array[Byte] = {
+    val pairs = buf.best
+    val bb = java.nio.ByteBuffer.allocate(4 + 16 * pairs.length)
+    bb.putInt(pairs.length)
+    pairs.foreach { case (s, id) => bb.putDouble(s); bb.putLong(id) }
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): scala.collection.mutable.PriorityQueue[(Double, Long)] = {
+  override def deserialize(bytes: Array[Byte]): HitHeap = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
     val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf.enqueue((bb.getDouble, bb.getLong)); i += 1 }
+    (0 until bb.getInt).foreach(_ => buf.offer(bb.getDouble, bb.getLong))
     buf
   }
 

@@ -59,17 +59,34 @@ class RequestCostSpec extends SparkSpec {
     * listener bus drained on both sides. Task `inputMetrics.bytesRead`
     * would not do: Spark adds to it the size of every cached block a
     * task reads (`RDD.getOrCompute`), so a scan of the resident copy
-    * reports bytes too. */
+    * reports bytes too. Parquet's vectored reads are off while `body`
+    * runs: on a local file they go through an NIO channel that the
+    * FileSystem statistics never see, so only footers would count. */
   private def fileBytesOf[T](body: => T): (T, Long) = {
     def read(): Long = FileSystem.getGlobalStorageStatistics.iterator.asScala
       .map(st => Option(st.getLong("bytesRead")).fold(0L)(_.longValue)).sum
     val sc = spark.sparkContext
+    val vectored = "parquet.hadoop.vectored.io.enabled"
     org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
-    val before = read()
-    val r = body
-    org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
-    (r, read() - before)
+    spark.conf.set(vectored, "false")
+    try {
+      val before = read()
+      val r = body
+      org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+      (r, read() - before)
+    } finally spark.conf.unset(vectored)
   }
+
+  /** The visible data files of the unpartitioned collection at `dir`,
+    * path → length. */
+  private def dataFiles(dir: String): Map[String, Long] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => f.getPath -> f.length).toMap
+
+  /** The longest dependency path from `rdd` to a source. */
+  private def lineageDepth(rdd: org.apache.spark.rdd.RDD[_]): Int =
+    1 + (rdd.dependencies.map(d => lineageDepth(d.rdd)) :+ 0).max
 
   /** Other suites in this JVM leave cached plans behind; the tests
     * that assert none is added start from an empty CacheManager. */
@@ -100,16 +117,17 @@ class RequestCostSpec extends SparkSpec {
       .map(_.toSeq).toSeq
     // warm: the first read of each handle resolves its schema
     c.search(q, 5).collect(); c.searchAnn(q, 5, 2).collect(); m.searchMaxSim(qm, 5).collect()
-    // (request, run it, Spark jobs it runs). A batch broadcasts its
-    // request frame and shuffles the per-request heaps (broadcast, map
-    // and result jobs); a by-id or recommend request first fetches its
+    // (request, run it, Spark jobs it runs). searchBatch scores its
+    // literal requests in one job; queryBatch broadcasts its request
+    // frame and shuffles the per-request heaps (broadcast, map and
+    // result jobs); a by-id or recommend request first fetches its
     // example vectors
     val requests = Seq[(String, () => Any, Int)](
       ("dense search", () => c.search(q, 5).collect(), 1),
       ("filtered search", () => c.search(q, 5, col("label") === 3).collect(), 1),
       ("searchMaxSim", () => m.searchMaxSim(qm, 5).collect(), 1),
       ("searchAnn", () => c.searchAnn(q, 5, 2).collect(), 1),
-      ("searchBatch", () => c.searchBatch(Seq((1L, q), (2L, q9)), 5).collect(), 3),
+      ("searchBatch", () => c.searchBatch(Seq((1L, q), (2L, q9)), 5).collect(), 1),
       ("queryBatch", () => c.queryBatch(Seq(NearestBatchQuery(1L, q.map(_.toDouble)),
         ByIdBatchQuery(2L, 9L)), 5).collect(), 4),
       ("recommend", () => c.recommend(Seq(7L), Seq(9L), 5).collect(), 2),
@@ -254,7 +272,33 @@ class RequestCostSpec extends SparkSpec {
     noCachedPlans()
   }
 
-  test("append→search cycles on one handle keep at most one resident copy") {
+  test("appends through the handle: the next search runs one job and reads only the appended file") {
+    import spark.implicits._
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(17)
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
+    (1 to 2).foreach { i =>
+      val before = dataFiles(dir)
+      assert(c.upsert(Seq((650000L + i, q.map(_ * i.toFloat), 2)).toDF(
+        "vec_id", "embedding", "label")) === 1L)
+      val files = dataFiles(dir)
+      val appended = (files -- before.keys).values.sum
+      val ((got, jobs), bytes) = fileBytesOf(jobsOf(ids(c.search(q, 5))))
+      assert(jobs.size === 1, s"search after append $i ran ${jobs.size} Spark jobs: $jobs")
+      // a parquet read fetches the footer on open and again to plan the
+      // row groups, so a tiny file reads a few times its length
+      assert(bytes > 0L && bytes <= 4 * appended,
+        s"search after append $i read $bytes file bytes; the append wrote $appended")
+      assert(bytes < files.values.sum / 4,
+        s"search after append $i read $bytes of the collection's ${files.values.sum} file bytes")
+      assert(got.contains(650000L + i), s"append $i missed: $got")
+      assert(got === bruteTopK(dir, q, 5))
+    }
+  }
+
+  test("append→search cycles keep a base and one delta") {
     import spark.implicits._
     clearCachedPlans()
     val dir = s"${tmp()}/col"
@@ -264,18 +308,78 @@ class RequestCostSpec extends SparkSpec {
     val sc = spark.sparkContext
     val persistent = sc.getPersistentRDDs.size
     val withBlocks = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc)
-    (1 to 5).foreach { i =>
+    def added() = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) -- withBlocks
+    // every append ties the query at cosine 1.0: k covers them all
+    val k = 40
+    assert(ids(c.search(q, k)) === bruteTopK(dir, q, k))
+    val base = added()
+    assert(base.size === 1, s"the first search cached $base")
+    var seen = base
+    val depths = (1 to 30).map { i =>
       assert(c.upsert(Seq((600000L + i, q.map(_ * i.toFloat), 4)).toDF(
         "vec_id", "embedding", "label")) === 1L)
-      val got = ids(c.search(q, 10))
+      val got = ids(c.search(q, k))
       assert(got.contains(600000L + i), s"cycle $i missed its append: $got")
-      assert(got === bruteTopK(dir, q, 10))
+      assert(got === bruteTopK(dir, q, k))
+      // the base and this cycle's delta hold blocks; no delta an earlier
+      // cycle built still does
+      val now = added()
+      assert(now.size <= 2 && base.subsetOf(now), s"cycle $i: RDDs holding blocks: $now")
+      assert((now & seen) === base, s"cycle $i: superseded RDDs still hold blocks: ${now & seen -- base}")
+      assert(sc.getPersistentRDDs.size <= persistent + 2)
+      seen ++= now
+      lineageDepth(c.search(q, k).queryExecution.toRdd)
     }
-    assert(sc.getPersistentRDDs.size <= persistent + 1)
-    // a superseded copy's blocks are dropped, not left to the cleaner
-    val added = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) -- withBlocks
-    assert(added.size <= 1, s"RDDs still holding blocks: $added")
+    assert(depths.distinct === Seq(depths.head), s"the copy's lineage grew: $depths")
+    c.compact(targetRowsPerFile = 128)
+    assert((org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) & seen).isEmpty,
+      "compact left parts of the old copy holding blocks")
+    assert(ids(c.search(q, k)) === bruteTopK(dir, q, k))
     noCachedPlans()
+  }
+
+  test("the resident copy answers exactly after appends, column changes, deletes and a fold") {
+    import spark.implicits._
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val other = VectorCollection.open(spark, dir)
+    val q = vecOf(31)
+    val q2 = vecOf(32)
+    def shifted(by: Long) =
+      embeddings.select((col("vec_id") + by).as("vec_id"), col("embedding"), col("label"))
+    def near(id: Long, label: Int) =
+      Seq((id, q.map(_ * 2f), label)).toDF("vec_id", "embedding", "label")
+    // (case, change, whether the next read decodes only the new files)
+    val cases = Seq[(String, () => Any, Option[Boolean])](
+      ("append through this handle", () => c.upsert(near(710001L, 3)), Some(true)),
+      ("append through another handle", () => other.upsert(near(710002L, 5)), Some(true)),
+      // whether the inferred schema sees the new column depends on which
+      // file inference samples, so only the answers are checked
+      ("append adding a column", () => c.upsert(near(710003L, 3).withColumn("note", lit("n"))),
+        None),
+      ("delete through another handle", () => other.delete(Seq(710001L, 31L)), Some(false)),
+      ("appends past the base's bytes", () => {
+        c.upsert(shifted(1000000L)); c.upsert(shifted(2000000L)) }, Some(false)))
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
+    cases.foreach { case (what, change, deltaOnly) =>
+      change()
+      val (got, bytes) = fileBytesOf(ids(c.search(q, 5)))
+      assert(got === bruteTopK(dir, q, 5), what)
+      val total = dataFiles(dir).values.sum
+      deltaOnly.foreach { d =>
+        assert((bytes < total / 4) === d, s"$what: the search read $bytes of $total file bytes")
+      }
+      val label3 = col("label") === 3
+      assert(ids(c.search(q, 5, label3)) === bruteTopK(dir, q, 5, filter = label3), what)
+      assert(ids(c.search(q, 5, Filter(must = Seq(MatchValue("label", 3))))) ===
+        bruteTopK(dir, q, 5, filter = label3), what)
+      val batch = c.searchBatch(Seq((1L, q), (2L, q2)), 5).collect()
+      Seq(1L -> q, 2L -> q2).foreach { case (qid, v) =>
+        assert(batch.filter(_.getLong(0) == qid).sortBy(_.getLong(3)).map(_.getLong(1)).toSeq ===
+          bruteTopK(dir, v, 5), s"$what: batch request $qid")
+      }
+    }
   }
 
   // the empty case (upsertIncremental of ids already present observes

@@ -44,13 +44,14 @@ abstract class SparkSpec extends AnyFunSuite {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Exact cosine top-k ids over every row of the collection at `path`,
-    * computed outside Spark's scoring from a fresh (schema-inferring)
-    * read; scores round to 6 places before the id tiebreak, as the
-    * engine's do. */
+  /** Exact cosine top-k ids over the rows of the collection at `path`
+    * that pass `filter`, computed outside Spark's scoring from a fresh
+    * (schema-inferring) read; scores round to 6 places before the id
+    * tiebreak, as the engine's do. */
   def bruteTopK(path: String, q: Seq[Float], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Long] =
-    spark.read.parquet(path).select(idCol, vecCol).collect()
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      filter: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true)): Seq[Long] =
+    spark.read.parquet(path).filter(filter).select(idCol, vecCol).collect()
       .map(r => r.getLong(0) -> BigDecimal(cosine(r.getSeq[Float](1), q))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       .sortBy { case (id, s) => (-s, id) }

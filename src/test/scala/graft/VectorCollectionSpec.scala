@@ -482,6 +482,29 @@ class VectorCollectionSpec extends SparkSpec {
     assert(reopened.searchAnn(q, k = 1, nprobe = 1).head.getLong(0) === 7L)
   }
 
+  test("searchBatch: no requests give an empty frame; 300 random requests equal per-request search") {
+    val dir = s"${tmp()}/col"
+    val e = t(spark, sf, "embeddings").select("vec_id", "embedding", "label")
+    val c = VectorCollection.ensure(spark, dir, e,
+      CollectionConfig("vec_id", "embedding", 64, multiVector = false))
+    c.upsert(e)
+    val rnd = new scala.util.Random(11)
+    val reqs = (1 to 300).map(i => i.toLong -> Seq.fill(64)(rnd.nextGaussian().toFloat))
+    val batch = c.searchBatch(reqs, 5)
+    val empty = c.searchBatch(Nil, 5)
+    assert(batch.columns.toSeq === Seq("q_id", "vec_id", "score", "rnk"))
+    assert(empty.schema === batch.schema)
+    assert(empty.collect().isEmpty)
+    val got = batch.collect().groupBy(_.getLong(0))
+    assert(got.keySet === reqs.map(_._1).toSet)
+    reqs.foreach { case (qid, v) =>
+      val mine = got(qid).sortBy(_.getLong(3))
+      assert(mine.map(_.getLong(3)).toSeq === (1L to 5L))
+      assert(mine.map(r => (r.getLong(1), r.getDouble(2))).toSeq ===
+        c.search(v, 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq, s"request $qid")
+    }
+  }
+
   test("ANN on a euclid collection ranks by distance ASC, agreeing with exact search") {
     val dir = s"${tmp()}/coleu"
     val e = t(spark, sf, "embeddings")

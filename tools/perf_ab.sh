@@ -20,10 +20,15 @@
 # than the parent median by more than the bound; otherwise `unresolved`
 # if the parent's IQR exceeds the bound times its median, unless every
 # change run beats every parent run; otherwise `ok`.
+#
+# Then, for information only (no verdict), each side's median of every
+# named metric in the detail line each run prints before its result
+# line (`batch_p50_ms`, `upsert_p50_ms`, `fail_ratio`, ...), so the A/B
+# shows where a change in the end-to-end metrics came from.
 set -u
 
 if [ "$#" -lt 4 ]; then
-  sed -n '2,22p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,27p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent=$(cd "$1" && pwd) || exit 2
@@ -40,6 +45,7 @@ run_side() { # side seed
     --seconds 8 --trace 0) >"$out/$1-$2.out" 2>"$out/$1-$2.err"
   local code=$?
   tail -n 1 "$out/$1-$2.out" >"$out/$1-$2.json"
+  tail -n 2 "$out/$1-$2.out" | head -n 1 >"$out/$1-$2.detail.json"
   echo "seed $2 $1: exit $code $(head -c 160 "$out/$1-$2.json")"
 }
 
@@ -61,9 +67,9 @@ with open(bench) as f:
     metrics = [(m["name"], m["better"], m["bound"]) for m in json.load(f)["end_to_end"]]
 
 
-def load(side, seed):
+def load(side, seed, kind="json"):
     try:
-        with open(os.path.join(out, "%s-%s.json" % (side, seed))) as f:
+        with open(os.path.join(out, "%s-%s.%s" % (side, seed, kind))) as f:
             return json.loads(f.read())
     except (OSError, ValueError):
         return None
@@ -112,4 +118,21 @@ for name, better, bound in metrics:
         name, pm, quantile(pv, 0.25), quantile(pv, 0.75),
         cm, quantile(cv, 0.25), quantile(cv, 0.75), won, len(pairs),
         100.0 * (cm - pm) / pm if pm else 0.0, verdict(pv, cv, better, bound)))
+
+details = {side: [d["named"] for d in (load(side, s, "detail.json") for s in seeds)
+                  if isinstance(d, dict) and isinstance(d.get("named"), dict)]
+           for side in ("parent", "change")}
+names = sorted(set().union(*(n.keys() for runs in details.values() for n in runs)))
+if names:
+    print()
+    print("named metrics (detail line; informational, no verdict)")
+    print("%-36s %14s %14s %10s" % ("metric", "parent median", "change median", "unit"))
+for name in names:
+    meds, unit = [], ""
+    for side in ("parent", "change"):
+        vs = [n[name]["value"] for n in details[side]
+              if name in n and isinstance(n[name].get("value"), (int, float))]
+        unit = unit or next((n[name].get("unit", "") for n in details[side] if name in n), "")
+        meds.append("%14.3f" % quantile(vs, 0.5) if vs else "%14s" % "-")
+    print("%-36s %s %s %10s" % (name, meds[0], meds[1], unit))
 EOF

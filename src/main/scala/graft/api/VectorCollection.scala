@@ -104,37 +104,39 @@ class VectorCollection private (
   // it writes the same columns, every rewrite through it drops it, and
   // a schema change made through another handle is seen after reopen.
   //
-  // `search` (every filter form), `searchMaxSim` and `searchBatch` on
-  // an unsharded collection scan the handle's resident copy: the data
-  // files decoded once into memory, so a repeat request skips the
-  // parquet decode that dominated its cost. Each request still lists
-  // the files. An append — this handle's, another handle's or a
-  // stream's — only adds files: the copy keeps its base and decodes
-  // just the new files into its delta. Any other change (a rewrite
-  // anywhere, a schema change) or a delta grown past the base rebuilds
-  // the copy from exactly the listed files. Either way the decode runs
-  // inside that request's one job (see SchemaMemo). The copy leaves out
-  // named vectors, so a filter naming one reads parquet.
+  // `search` (every filter form), `searchMaxSim`, `searchBatch` and the
+  // id side of `upsertIncremental` on an unsharded collection scan the
+  // handle's resident copy: the data files decoded once into memory, so
+  // a repeat request skips the parquet decode that dominated its cost.
+  // Each request still lists the files. An append — this handle's,
+  // another handle's or a stream's — only adds files: the copy keeps its
+  // base and decodes just the new files into its delta. Any other change
+  // (a rewrite anywhere, a schema change) or a delta grown past the base
+  // rebuilds the copy from exactly the listed files; a delta that lost a
+  // block with its executor decodes its files again. Either way the
+  // decode runs inside that request's one job (see SchemaMemo). The copy
+  // leaves out named vectors, so a filter naming one reads parquet.
   //
   // Every other read stays on parquet (`table`): sharded collections
   // and `searchShard` (the shard predicate prunes directories),
   // `searchUsing` (column-pruned to one named vector), `searchAnn`
   // (prunes to the probed clusters), `count`/`retrieve`/`scroll`
-  // (pushed filters and metadata counts), the id side of
-  // `upsertIncremental`, `buildIvfIndex`, the other batch APIs and
-  // `asPoints` readers, and every write and rewrite. The copy is not a
-  // `Dataset.cache()`: the CacheManager would substitute it into those
-  // parquet reads of the same directory (a file index compares by root
-  // path), handing them rows that a rewrite has since retired.
+  // (pushed filters and metadata counts), `buildIvfIndex`, the other
+  // batch APIs and `asPoints` readers, and every write and rewrite. The
+  // copy is not a `Dataset.cache()`: the CacheManager would substitute
+  // it into those parquet reads of the same directory (a file index
+  // compares by root path), handing them rows that a rewrite has since
+  // retired.
   private val data = new SchemaMemo(spark, path,
     config.namedVectors.values.map(_._1).toSet - config.vectorCol)
   private val ivf = new SchemaMemo(spark, ivfPath)
 
   private[api] def table: DataFrame = data.read
 
-  /** The rows `search`, `searchMaxSim` and `searchBatch` score: the
-    * resident copy, unless the collection is partitioned or `filter`
-    * names a column the copy leaves out. */
+  /** The rows `search`, `searchMaxSim` and `searchBatch` score and
+    * `upsertIncremental` checks ids against: the resident copy, unless
+    * the collection is partitioned or `filter` names a column the copy
+    * leaves out. */
   private def scanned(filter: Column): DataFrame =
     if (config.shardCol.nonEmpty ||
         GraftColumnBridge.referencedNames(spark, filter).exists(data.leavesOut)) table
@@ -148,9 +150,14 @@ class VectorCollection private (
 
   /** Incremental upsert: skip ids already present (fixes the
     * reference's duplicate-on-reindex; SURVEY.md §7.6). Returns rows
-    * actually written (0 when everything already existed). */
+    * actually written (0 when everything already existed). The present
+    * ids come from the resident copy, as a search's rows do (parquet on
+    * a sharded collection), so a handle that only ingests also holds
+    * the copy in memory (MEMORY_AND_DISK) once it has called this. The
+    * anti-join plans from the copy's size: a small collection's ids
+    * broadcast, a large one's shuffle. */
   def upsertIncremental(points: DataFrame): Long =
-    appendRows(Sink.incremental(points, table, config.idCol))
+    appendRows(Sink.incremental(points, scanned(lit(true)), config.idCol))
 
   private def appendRows(points: DataFrame): Long = {
     val n = Sink.append(points, path, config.shardCol.toSeq)
@@ -1234,7 +1241,10 @@ object VectorCollection {
   * The scanned frame is base ∪ delta with partition i of each read by
   * the same task, so a delta adds rows to the base's tasks, not tasks
   * (a plain union ran one more task and measured ~5 ms slower per
-  * dense search at 4k rows).
+  * dense search at 4k rows), sized for the planner at the two parts'
+  * file bytes. A filled delta has no lineage: if it lost a block with
+  * its executor, the next call drops it and decodes its files again as
+  * new files.
   * [[rewrite]] frees the copy too. MEMORY_AND_DISK: a copy too large
   * for the block manager's memory spills instead of failing.
   */
@@ -1262,6 +1272,9 @@ private final class SchemaMemo(
     * visible subdirectory (a partitioned layout) leaves the directory
     * to partition-pruned parquet reads. */
   def resident: Option[DataFrame] = synchronized {
+    // a filled delta cannot recompute a lost block: decode its files
+    // again, as if they had just been appended to the base
+    copy = copy.map(c => if (c.delta.exists(_.r.lost)) c.withoutDelta else c)
     dataFiles().map { files =>
       val listed = files.map(f => f.getPath.toString -> f.getLen).toMap
       copy match {
@@ -1306,7 +1319,7 @@ private final class SchemaMemo(
     val delta = Part(files, GraftResidentBridge.checkpointed(
       c.delta.fold(fresh)(_.r.frame.union(fresh)).coalesce(parts), c.delta.map(_.r)))
     Copy(c.schema, c.base, Some(delta),
-      GraftResidentBridge.concatenated(c.base.r.frame, delta.r.frame))
+      GraftResidentBridge.concatenated(c.base.r.frame, delta.r.frame, c.base.bytes + delta.bytes))
   }
 
   /** The directory's data files by Spark's hidden-name rule
@@ -1350,5 +1363,11 @@ private object SchemaMemo {
   final case class Copy(schema: StructType, base: Part, delta: Option[Part], frame: DataFrame) {
     val files: Map[String, Long] = base.files ++ delta.fold(Map.empty[String, Long])(_.files)
     def deltaBytes: Long = delta.fold(0L)(_.bytes)
+
+    /** The base alone, the delta's blocks freed. */
+    def withoutDelta: Copy = {
+      delta.foreach(_.r.free())
+      Copy(schema, base, None, base.r.frame)
+    }
   }
 }

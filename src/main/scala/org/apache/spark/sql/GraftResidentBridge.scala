@@ -5,8 +5,11 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{BlockId, RDDBlockId, StorageLevel}
 
 /** In-memory copies of a DataFrame that the session's CacheManager
   * never sees (same bridging stance as [[GraftColumnBridge]]:
@@ -25,9 +28,12 @@ import org.apache.spark.storage.StorageLevel
 object GraftResidentBridge {
 
   final class Resident private[GraftResidentBridge] (
-      val frame: DataFrame, release: () => Unit) {
+      val frame: DataFrame, release: () => Unit, missing: () => Boolean) {
     /** Drop the copy's blocks. */
     def free(): Unit = release()
+
+    /** Whether the copy has lost a block that it cannot recompute. */
+    def lost: Boolean = missing()
   }
 
   /** A columnar copy of `df`; after [[Resident.free]] a later scan of
@@ -35,8 +41,9 @@ object GraftResidentBridge {
   def resident(df: DataFrame, level: StorageLevel): Resident = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val relation = InMemoryRelation(level, ds.queryExecution, None)
+    // a lost block is recomputed from the source plan
     new Resident(classic.Dataset.ofRows(ds.sparkSession, relation),
-      () => relation.cacheBuilder.clearCache(blocking = false))
+      () => relation.cacheBuilder.clearCache(blocking = false), () => false)
   }
 
   /** A row copy of `df` as a lazy local checkpoint: the first job that
@@ -46,28 +53,40 @@ object GraftResidentBridge {
     * are freed once the cut has made them unneeded — on the driver,
     * inside the action whose job filled this copy — or when this copy
     * is freed first. After [[Resident.free]] the frame cannot be
-    * scanned again.
+    * scanned again. Once filled, the copy has no lineage to recompute a
+    * block from: [[Resident.lost]] reports a block that no block
+    * manager holds any more (its executor was lost).
     */
   def checkpointed(df: DataFrame, replaces: Option[Resident]): Resident = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val pending = new AtomicReference(replaces)
     val releaseReplaced = () => pending.getAndSet(None).foreach(_.free())
     val rdd = new CutRDD(ds.queryExecution.toRdd, releaseReplaced).localCheckpoint()
+    val missing = () => rdd.isCheckpointed && {
+      val blocks = Array.tabulate[BlockId](rdd.getNumPartitions)(RDDBlockId(rdd.id, _))
+      rdd.sparkContext.env.blockManager.master.getLocations(blocks).exists(_.isEmpty)
+    }
     // the SparkContext call, not `rdd.unpersist`, which warns on every
     // locally checkpointed RDD that it cannot be recomputed
     new Resident(ds.sparkSession.internalCreateDataFrame(rdd, ds.schema),
-      () => { releaseReplaced(); rdd.sparkContext.unpersistRDD(rdd.id, blocking = false) })
+      () => { releaseReplaced(); rdd.sparkContext.unpersistRDD(rdd.id, blocking = false) },
+      missing)
   }
 
   /** `first`'s rows then `second`'s as one frame, partition i of it
     * reading partition i of each: `second` adds rows to `first`'s
-    * tasks, and tasks only where it has more partitions. */
-  def concatenated(first: DataFrame, second: DataFrame): DataFrame = {
+    * tasks, and tasks only where it has more partitions. The planner
+    * sizes the frame at `sizeInBytes`, as it sizes a file scan at its
+    * files' bytes, so a join picks its strategy as it would on the
+    * files (a frame with no statistics counts as unbounded). */
+  def concatenated(first: DataFrame, second: DataFrame, sizeInBytes: Long): DataFrame = {
     val a = first.asInstanceOf[classic.Dataset[Row]]
     val b = second.asInstanceOf[classic.Dataset[Row]]
     require(a.schema == b.schema, s"concatenated frames differ: ${a.schema} vs ${b.schema}")
-    a.sparkSession.internalCreateDataFrame(
-      new ConcatRDD(a.queryExecution.toRdd, b.queryExecution.toRdd), a.schema)
+    val session = a.sparkSession
+    classic.Dataset.ofRows(session, LogicalRDD(DataTypeUtils.toAttributes(a.schema),
+      new ConcatRDD(a.queryExecution.toRdd, b.queryExecution.toRdd))(
+      session, Some(Statistics(sizeInBytes))))
   }
 
   private final class ConcatRDD(first: RDD[InternalRow], second: RDD[InternalRow])

@@ -33,26 +33,39 @@ class RequestCostSpec extends SparkSpec {
     * stage outside one (a schema inference) — a listener scoped to the
     * call, with the listener bus drained on both sides. */
   private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val (r, jobs) = jobStartsOf(body)
+    (r, jobs.map(_._1))
+  }
+
+  /** [[jobsOf]] with each job's start event. */
+  private def jobStartsOf[T](body: => T): (T, Seq[(String, SparkListenerJobStart)]) = {
     val sc = spark.sparkContext
     org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
     val actions = new ConcurrentHashMap[String, String]()
-    val jobs = new ConcurrentLinkedQueue[(Option[String], String)]()
+    val jobs = new ConcurrentLinkedQueue[(Option[String], SparkListenerJobStart)]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart => actions.put(s.executionId.toString, s.description)
         case _ => ()
       }
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))) ->
-          js.stageInfos.maxBy(_.stageId).name)
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))) -> js)
     }
     sc.addSparkListener(listener)
     try {
       val r = body
       org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
-      (r, jobs.asScala.toSeq.map { case (exec, stage) =>
-        exec.flatMap(id => Option(actions.get(id))).getOrElse(stage) })
+      (r, jobs.asScala.toSeq.map { case (exec, js) =>
+        exec.flatMap(id => Option(actions.get(id)))
+          .getOrElse(js.stageInfos.maxBy(_.stageId).name) -> js })
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The longest dependency path among the RDDs a job's stages run. */
+  private def lineageDepth(js: SparkListenerJobStart): Int = {
+    val parents = js.stageInfos.flatMap(_.rddInfos).map(r => r.id -> r.parentIds).toMap
+    def depth(id: Int): Int = 1 + (parents.getOrElse(id, Nil).map(depth) :+ 0).max
+    parents.keys.map(depth).max
   }
 
   /** Bytes read from any Hadoop FileSystem while `body` runs, with the
@@ -137,7 +150,9 @@ class RequestCostSpec extends SparkSpec {
       val (_, jobs) = jobsOf(run())
       assert(jobs.size === expected, s"$what ran ${jobs.size} Spark jobs: $jobs")
     }
-    // the anti-join shuffles, but no schema, cache or count job remains
+    // the anti-join broadcasts the resident copy's ids (one job, which
+    // also fills the delta holding the upsert above) and writes: no
+    // schema, cache or count job remains
     val fresh = embeddings.filter(col("vec_id") < 20)
       .select((col("vec_id") + 800000L).as("vec_id"), col("embedding"), col("label"))
     val (n, jobs) = jobsOf(c.upsertIncremental(fresh))
@@ -362,7 +377,7 @@ class RequestCostSpec extends SparkSpec {
       ("appends past the base's bytes", () => {
         c.upsert(shifted(1000000L)); c.upsert(shifted(2000000L)) }, Some(false)))
     assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
-    cases.foreach { case (what, change, deltaOnly) =>
+    cases.zipWithIndex.foreach { case ((what, change, deltaOnly), i) =>
       change()
       val (got, bytes) = fileBytesOf(ids(c.search(q, 5)))
       assert(got === bruteTopK(dir, q, 5), what)
@@ -379,6 +394,105 @@ class RequestCostSpec extends SparkSpec {
         assert(batch.filter(_.getLong(0) == qid).sortBy(_.getLong(3)).map(_.getLong(1)).toSeq ===
           bruteTopK(dir, v, 5), s"$what: batch request $qid")
       }
+      // the write path reads the same copy: the present id is skipped
+      val n = c.count
+      assert(c.upsertIncremental(Seq((33L, q2, 1), (720000L + i, q2, 2)).toDF(
+        "vec_id", "embedding", "label")) === 1L, what)
+      assert(c.count === n + 1, what)
+    }
+  }
+
+  test("upsertIncremental through a warm handle reads the resident copy, not the data files") {
+    import spark.implicits._
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(27)
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
+    val total = dataFiles(dir).values.sum
+    val (n, bytes) = fileBytesOf(c.upsertIncremental(
+      Seq((27L, q, 1), (630001L, q, 2)).toDF("vec_id", "embedding", "label")))
+    assert(n === 1L)
+    // what remains is the write's own lease and metadata reads
+    // (a parquet read of the ids opens every file: footer and id chunk)
+    assert(bytes < 1024, s"upsertIncremental read $bytes of the collection's $total file bytes")
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
+  }
+
+  test("append→upsertIncremental cycles keep a base and one delta") {
+    import spark.implicits._
+    clearCachedPlans()
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(23)
+    val sc = spark.sparkContext
+    val persistent = sc.getPersistentRDDs.size
+    val withBlocks = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc)
+    def added() = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) -- withBlocks
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
+    val base = added()
+    assert(base.size === 1, s"the first search cached $base")
+    var seen = base
+    var n = c.count
+    val depths = (1 to 30).map { i =>
+      // the present point 23 is skipped, the fresh one written
+      val (written, jobs) = jobStartsOf(c.upsertIncremental(
+        Seq((23L, q, 1), (610000L + i, q.map(_ * i.toFloat), 4)).toDF("vec_id", "embedding", "label")))
+      assert(written === 1L, s"cycle $i wrote $written rows")
+      n += 1
+      // the base and the delta holding the earlier cycles' appends hold
+      // blocks; no delta an earlier cycle built still does
+      val now = added()
+      assert(now.size <= 2 && base.subsetOf(now), s"cycle $i: RDDs holding blocks: $now")
+      assert((now & seen) === base, s"cycle $i: superseded RDDs still hold blocks: ${now & seen -- base}")
+      assert(sc.getPersistentRDDs.size <= persistent + 2)
+      seen ++= now
+      jobs.map { case (_, js) => lineageDepth(js) }.max
+    }
+    // the first cycle reads the base alone; every later one reads the
+    // base and a delta built from the last delta and one new file
+    assert(depths.tail.distinct === Seq(depths(1)), s"the copy's lineage grew: $depths")
+    assert(c.count === n)
+    c.compact(targetRowsPerFile = 128)
+    assert((org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) & seen).isEmpty,
+      "compact left parts of the old copy holding blocks")
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
+    assert(c.count === n)
+    noCachedPlans()
+  }
+
+  test("a delta block lost with its executor: the next search or upsertIncremental decodes it again") {
+    import spark.implicits._
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    c.upsert(embeddings)
+    val q = vecOf(25)
+    val sc = spark.sparkContext
+    val withBlocks = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc)
+    def added() = org.apache.spark.GraftTestBridges.rddsWithBlocks(sc) -- withBlocks
+    assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5)) // builds the copy
+    val base = added()
+    var n = c.count
+    // (the first request to read the copy after the loss, its check)
+    val requests = Seq[(String, Int => Unit)](
+      ("search", _ => assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))),
+      ("upsertIncremental", i => {
+        assert(c.upsertIncremental(Seq((25L, q, 1), (621000L + i, q, 2)).toDF(
+          "vec_id", "embedding", "label")) === 1L)
+        n += 1
+      }))
+    requests.zipWithIndex.foreach { case ((what, run), i) =>
+      // an append, then a search that fills a delta holding it
+      assert(c.upsert(Seq((620000L + i, q.map(_ * 2f), 1)).toDF("vec_id", "embedding", "label")) === 1L)
+      n += 1
+      assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
+      val delta = added() -- base
+      assert(delta.size === 1, s"$what: RDDs holding blocks besides the base: $delta")
+      org.apache.spark.GraftTestBridges.dropBlock(sc, delta.head)
+      run(i)
+      assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5), what)
+      assert(c.count === n, what)
     }
   }
 

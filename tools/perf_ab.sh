@@ -21,6 +21,9 @@
 # if the parent's IQR exceeds the bound times its median, unless every
 # change run beats every parent run; otherwise `ok`.
 #
+# Below the table, each seed's parent -> change value of every
+# end-to-end metric, one line per metric, in seed order.
+#
 # Then, for information only (no verdict), each side's median of every
 # named metric in the detail line each run prints before its result
 # line (`batch_p50_ms`, `upsert_p50_ms`, `fail_ratio`, ...), so the A/B
@@ -28,7 +31,7 @@
 set -u
 
 if [ "$#" -lt 4 ]; then
-  sed -n '2,27p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,30p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent=$(cd "$1" && pwd) || exit 2
@@ -118,6 +121,13 @@ for name, better, bound in metrics:
         name, pm, quantile(pv, 0.25), quantile(pv, 0.75),
         cm, quantile(cv, 0.25), quantile(cv, 0.75), won, len(pairs),
         100.0 * (cm - pm) / pm if pm else 0.0, verdict(pv, cv, better, bound)))
+
+print()
+print("per seed, parent -> change")
+for name, _, _ in metrics:
+    print("%-20s %s" % (name, ", ".join(
+        "%s: %.4g -> %.4g" % (s, p["metrics"][name]["value"], c["metrics"][name]["value"])
+        for s, (p, c) in pairs.items())))
 
 details = {side: [d["named"] for d in (load(side, s, "detail.json") for s in seeds)
                   if isinstance(d, dict) and isinstance(d.get("named"), dict)]

@@ -27,9 +27,7 @@ import graft.index.Sink
   * declared once at [[VectorCollection.ensure]] like Qdrant's
   * VectorParams and persisted in `_graft_meta.json`.
   *
-  * Scale: `upsert` appends (or anti-join dedups when `incremental`);
-  * partitioning the directory by a cluster/bucket column turns probes
-  * into partition-pruned scans (ScaleDesignSpec shows the plan).
+  * Scale: `upsert` appends (or anti-join dedups when `incremental`).
   */
 final case class CollectionConfig(
     idCol: String,
@@ -97,6 +95,7 @@ class VectorCollection private (
     val spark: SparkSession,
     val path: String,
     val config: CollectionConfig) {
+  import VectorCollection.{CentroidsFile, ClusterCol}
 
   // Read path. The collection's schema is resolved once per handle
   // (parquet schema inference is a Spark job on every bare
@@ -104,10 +103,11 @@ class VectorCollection private (
   // it writes the same columns, every rewrite through it drops it, and
   // a schema change made through another handle is seen after reopen.
   //
-  // `search` (every filter form), `searchMaxSim`, `searchBatch` and the
-  // id side of `upsertIncremental` on an unsharded collection scan the
-  // handle's resident copy: the data files decoded once into memory, so
-  // a repeat request skips the parquet decode that dominated its cost.
+  // `search` (every filter form), `searchMaxSim`, `searchBatch`,
+  // `searchAnn` and the id side of `upsertIncremental` on an unsharded
+  // collection scan the handle's resident copy: the data files decoded
+  // once into memory, so a repeat request skips the parquet decode that
+  // dominated its cost.
   // Each request still lists the files. An append — this handle's,
   // another handle's or a stream's — only adds files: the copy keeps its
   // base and decodes just the new files into its delta. Any other change
@@ -119,24 +119,22 @@ class VectorCollection private (
   //
   // Every other read stays on parquet (`table`): sharded collections
   // and `searchShard` (the shard predicate prunes directories),
-  // `searchUsing` (column-pruned to one named vector), `searchAnn`
-  // (prunes to the probed clusters), `count`/`retrieve`/`scroll`
-  // (pushed filters and metadata counts), `buildIvfIndex`, the other
-  // batch APIs and `asPoints` readers, and every write and rewrite. The
-  // copy is not a `Dataset.cache()`: the CacheManager would substitute
-  // it into those parquet reads of the same directory (a file index
-  // compares by root path), handing them rows that a rewrite has since
-  // retired.
+  // `searchUsing` (column-pruned to one named vector),
+  // `count`/`retrieve`/`scroll` (pushed filters and metadata counts),
+  // `buildIvfIndex`, the other batch APIs and `asPoints` readers, and
+  // every write and rewrite. The copy is not a `Dataset.cache()`: the
+  // CacheManager would substitute it into those parquet reads of the
+  // same directory (a file index compares by root path), handing them
+  // rows that a rewrite has since retired.
   private val data = new SchemaMemo(spark, path,
     config.namedVectors.values.map(_._1).toSet - config.vectorCol)
-  private val ivf = new SchemaMemo(spark, ivfPath)
 
   private[api] def table: DataFrame = data.read
 
-  /** The rows `search`, `searchMaxSim` and `searchBatch` score and
-    * `upsertIncremental` checks ids against: the resident copy, unless
-    * the collection is partitioned or `filter` names a column the copy
-    * leaves out. */
+  /** The rows `search`, `searchMaxSim`, `searchBatch` and `searchAnn`
+    * score and `upsertIncremental` checks ids against: the resident
+    * copy, unless the collection is partitioned or `filter` names a
+    * column the copy leaves out. */
   private def scanned(filter: Column): DataFrame =
     if (config.shardCol.nonEmpty ||
         GraftColumnBridge.referencedNames(spark, filter).exists(data.leavesOut)) table
@@ -159,9 +157,10 @@ class VectorCollection private (
   def upsertIncremental(points: DataFrame): Long =
     appendRows(Sink.incremental(points, scanned(lit(true)), config.idCol))
 
-  private def appendRows(points: DataFrame): Long = {
-    val n = Sink.append(points, path, config.shardCol.toSeq)
-    data.keepIfSame(points.schema, config.shardCol.toSeq)
+  private def appendRows(points: DataFrame): Long = Sink.withPathLock(path) {
+    val rows = withClusters(points)
+    val n = Sink.append(rows, path, config.shardCol.toSeq)
+    data.keepIfSame(rows.schema, config.shardCol.toSeq)
     n
   }
 
@@ -176,7 +175,8 @@ class VectorCollection private (
     require(config.shardCol.isEmpty,
       "upsertReplace on a sharded collection is not supported; " +
         "delete+upsert within the shard instead")
-    data.rewrite(Sink.upsertReplace(spark, points, path, config.idCol))
+    data.rewrite(Sink.withPathLock(path)(
+      Sink.upsertReplace(spark, withClusters(points), path, config.idCol)))
   }
 
   /** points_count. */
@@ -669,23 +669,31 @@ class VectorCollection private (
   def search(queryVec: Seq[Float], k: Int, filter: graft.search.Filter): DataFrame =
     search(queryVec, k, filter.toColumn)
 
-  private def ivfPath = path + "_ivf"
-  private def centroidsPath = s"$ivfPath/_graft_centroids.txt"
+  private def centroidsPath = s"$path/$CentroidsFile"
 
-  /** Build (or rebuild) a persisted IVF index for this collection —
-    * the engine-side analog of Qdrant's background ANN indexing past
-    * `indexing_threshold`. Seeds are drawn by content-stable hash
-    * (reproducible, uncorrelated with ingest order), refined with
-    * `lloydIters` rounds of Lloyd's algorithm, then every point is
-    * assigned by a narrow per-row argmax (no shuffle) and written
-    * `partitionBy(cluster_id)` beside the collection; payload columns
-    * ride into the index so filtered probes need no join. Centroids
-    * persist in a sidecar so [[searchAnn]] works after reopen.
-    * Returns the index path. */
-  def buildIvfIndex(nClusters: Int, lloydIters: Int = 2): String = Sink.withPathLock(ivfPath) {
+  /** Build (or rebuild) the IVF index — Qdrant's background ANN
+    * indexing past `indexing_threshold`. Seeds are drawn by
+    * content-stable hash, refined with `lloydIters` rounds of Lloyd's
+    * algorithm, and the index is a layout of the collection itself
+    * ([[graft.index.Sink.indexClusters]]): each point's `cluster_id` is
+    * its nearest centroid, the rows range-cluster on (`cluster_id`, id),
+    * and the centroids commit with them in the `_graft_centroids.txt`
+    * sidecar, which reopen, snapshot, restore and drop carry with the
+    * data. Every later write keeps it current ([[withClusters]];
+    * survivors of a delete or payload update keep theirs). Refused on a
+    * sharded collection and over a payload column named `cluster_id`.
+    * Returns the collection path. */
+  def buildIvfIndex(nClusters: Int, lloydIters: Int = 2): String = Sink.withPathLock(path) {
     require(!config.multiVector, "IVF index on a multi-vector collection")
-    val pts = asPoints
+    requireUnsharded("buildIvfIndex")
     require(nClusters > 0, s"buildIvfIndex needs nClusters > 0, got $nClusters")
+    // a pending build's commit holds its centroids: finish it before
+    // asking whose cluster_id column this is
+    Sink.repairPayloadUpdate(spark, path)
+    require(centroids().nonEmpty || !table.columns.contains(ClusterCol),
+      s"buildIvfIndex on $path would overwrite its payload column '$ClusterCol'; " +
+        "rename that column first")
+    val pts = asPoints
     val seeds = pts
       .select(col("vec_id"), col("embedding"),
         graft.index.Embedder.stringHash64(
@@ -701,92 +709,63 @@ class VectorCollection private (
       "buildIvfIndex on an empty collection — no vectors to seed " +
         "centroids from; upsert points first")
     val trained = graft.ops.Similarity.ivfRefineCentroids(pts, seeds, lloydIters)
-    val centCols = trained.map { case (id, v) => (id, typedlit(v.toSeq): Column) }
-    val idx = pts.select(col("*"),
-      graft.ops.Similarity.ivfClusterId(col("embedding"), centCols).as("cluster_id"))
-    // range-cluster before the partitioned write (the fixture-index
-    // rationale, ops/Similarity.ivfIndexPath): a bare partitionBy
-    // fragments each cluster into one file per input task, and probes
-    // pay listing+open per fragment; one build-time range shuffle
-    // yields ≤ shuffle.partitions sized files, cluster-contiguous
-    ivf.rewrite(idx.repartitionByRange(col("cluster_id"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(ivfPath))
     val sidecar = trained
       .map { case (id, v) => s"$id,${v.mkString(",")}" }
       .mkString("\n")
-    Sink.writeSidecar(centroidsPath, sidecar)
-    ivfPath
+    data.rewrite(Sink.indexClusters(spark, path, ClusterCol,
+      clusterOf(col(config.vectorCol), trained), config.idCol,
+      Map(CentroidsFile -> sidecar)))
+    path
   }
 
-  private def loadCentroids(): Seq[(Long, Array[Float])] = {
-    require(Sink.sidecarExists(centroidsPath),
-      s"no IVF index for $path — call buildIvfIndex first")
-    Sink.readSidecar(centroidsPath).split("\n").toSeq
+  /** The IVF centroids, or None while the collection has no index: one
+    * sidecar read, no Spark job. */
+  private def centroids(): Option[Seq[(Long, Array[Float])]] =
+    if (!Sink.sidecarExists(centroidsPath)) None
+    else Some(Sink.readSidecar(centroidsPath).split("\n").toSeq
       .filter(_.nonEmpty)
       .map { line =>
         val parts = line.split(",")
         (parts.head.toLong, parts.tail.map(_.toFloat))
-      }
-  }
+      })
 
-  /** ANN top-k through the persisted IVF index: centroids rank
-    * driver-side (an index-time constant, like the reference's
-    * driver-side query embedding), the read prunes to the best
-    * `nprobe` cluster partitions, and scoring + top-k run only over
-    * the probed subtrees. `filter` composes like exact [[search]] —
-    * payload rides in the index. Approximate by construction; raise
-    * `nprobe` to trade latency for recall (the x_ann_recall query
-    * measures this curve on the fixture index). */
+  /** The nearest of `cents` to vector `v` (argmax cosine, lowest id on
+    * a tie), as a per-row expression. */
+  private def clusterOf(v: Column, cents: Seq[(Long, Array[Float])]): Column =
+    graft.ops.Similarity.ivfClusterId(v,
+      cents.map { case (id, c) => (id, typedlit(c.toSeq): Column) })
+
+  /** `points` with `cluster_id` set to each vector's nearest centroid
+    * while the collection has an IVF index, unchanged otherwise: every
+    * write calls it on its incoming rows under the collection's lock,
+    * so no row lands with an assignment from other centroids. */
+  private def withClusters(points: DataFrame): DataFrame =
+    centroids().fold(points)(cs =>
+      points.withColumn(ClusterCol, clusterOf(col(config.vectorCol), cs)))
+
+  /** ANN top-k through the IVF index: centroids rank driver-side, and
+    * the rows [[search]] scans are scored only where `cluster_id` is one
+    * of the best `nprobe` — a predicate below the scoring that in-memory
+    * batch (or parquet row-group) statistics prune on. `filter`
+    * composes as in [[search]]. Raise `nprobe` to trade latency for
+    * recall (x_ann_recall measures the curve); at the cluster count or
+    * above there is no cluster predicate, and the answer is exactly
+    * [[search]]'s. */
   def searchAnn(
       queryVec: Seq[Float], k: Int = 5, nprobe: Int = 1,
       filter: Column = lit(true)): DataFrame = {
     require(!config.multiVector, "ANN search on a multi-vector collection")
     requireDim(queryVec)
-    // Probe selection AND candidate scoring follow the collection's
-    // metric, so ANN results rank consistently with exact search()
-    // (they previously hard-coded cosine — a euclid collection got
-    // cosine-ranked ANN answers). Clustering stays cosine-trained; for
-    // distance metrics that is the approximation-quality knob IVF
-    // already is, and the recall gate (x_ann_recall) is the measure.
-    val probes = graft.ops.Similarity
-      .rankCentroids(loadCentroids(), queryVec.toArray, config.distance)
-      .take(nprobe)
-    // restore the configured id name BEFORE the payload filter so a
-    // filter written against exact search's schema (col(idCol) …)
-    // works unchanged here; the rename is a projection, filters still
-    // push through it to the scan
-    TopK.dense(ivf.read.withColumnRenamed("vec_id", config.idCol),
-      typedlit(queryVec.map(_.toDouble)), config.idCol, "embedding", k,
-      col("cluster_id").isInCollection(probes) && filter, None, config.distance)
-  }
-
-  /** Append new points into the persisted IVF index WITHOUT a rebuild:
-    * anti-join out ids the index already holds (idempotent re-delivery,
-    * the streaming exactly-once contract), assign clusters with the
-    * same narrow argmax as the build, append into the cluster
-    * partition subtrees. This is the foreachBatch sink of a LIVE ANN
-    * index — Qdrant's background indexing of fresh upserts. Centroids
-    * stay fixed between [[buildIvfIndex]] rebuilds (drift is a
-    * periodic-maintenance concern, like Qdrant's optimizer runs); at
-    * scale the anti-join's id side is the index's id column only
-    * (column-pruned scan), or a bloom filter. Returns rows added. */
-  def upsertAnnIndex(points: DataFrame): Long = Sink.withPathLock(ivfPath) {
-    // same per-path write mutex as the Sink surface: two streaming
-    // micro-batch sinks (or a rebuild racing a live append) would
-    // otherwise interleave their anti-join reads and appends and
-    // double-insert the same fresh ids
-    val cents = loadCentroids()
-    val centCols = cents.map { case (id, v) => (id, typedlit(v.toSeq): Column) }
-    val others = points.columns
-      .filterNot(c => c == config.idCol || c == config.vectorCol)
-    val pts = points.select(Seq(col(config.idCol).as("vec_id"),
-      col(config.vectorCol).as("embedding")) ++ others.map(col).toSeq: _*)
-    val fresh = Sink.incremental(pts, ivf.read, "vec_id")
-      .select(col("*"),
-        graft.ops.Similarity.ivfClusterId(col("embedding"), centCols).as("cluster_id"))
-    val n = Sink.append(fresh, ivfPath, Seq("cluster_id"))
-    ivf.keepIfSame(fresh.schema, Seq("cluster_id"))
-    n
+    val cents = centroids().getOrElse(throw new IllegalArgumentException(
+      s"no IVF index for $path — call buildIvfIndex first"))
+    // probes rank and candidates score under the collection's metric,
+    // as search() does; the clustering itself is cosine-trained
+    val probed =
+      if (nprobe >= cents.size) filter
+      else col(ClusterCol).isInCollection(graft.ops.Similarity
+        .rankCentroids(cents, queryVec.toArray, config.distance).take(nprobe)) && filter
+    TopK.dense(scanned(probed), typedlit(queryVec), config.idCol, config.vectorCol, k,
+      probed, None, config.distance)
   }
 
   /** Qdrant `set_payload`: set one key on every point matching the
@@ -831,17 +810,11 @@ class VectorCollection private (
         s"vector for point $id has dim ${v.length}, collection is ${config.dim}")
     }
     val ids = newVecs.keys.toSeq
-    // cast to the COLUMN'S stored type (float or double layout), not an
-    // assumed one — a mismatched cast would drift the schema of the
-    // rewritten files away from the untouched ones
+    // the column's stored type (float or double layout): another would
+    // drift the rewritten files' schema from the untouched ones
     val dt = table.schema(config.vectorCol).dataType.catalogString
-    // ONE flat map literal probed per row, not a when/otherwise per
-    // point: a nested when-chain grows the Catalyst tree linearly with
-    // the batch and stalls analysis/codegen on large re-embed batches.
-    // try_element_at (NULL on miss, even under ANSI) + coalesce keeps
-    // unmatched rows' stored vectors. The literal still ships with the
-    // plan, so corpus-scale re-embeds belong to upsertReplace — bound
-    // it loudly rather than let the task binary bloat quietly.
+    // one flat map literal probed per row (a when-chain per point grows
+    // the plan with the batch); it ships with the plan, so bound it
     require(newVecs.size <= 65536,
       s"update_vectors with ${newVecs.size} points exceeds the 65536 " +
         "plan-literal bound; use upsertReplace for corpus-scale re-embeds")
@@ -849,8 +822,11 @@ class VectorCollection private (
     val replacement = coalesce(
       try_element_at(lookup, col(config.idCol)).cast(dt),
       col(config.vectorCol))
-    data.rewrite(Sink.updatePayload(spark, path, col(config.idCol).isInCollection(ids),
-      config.vectorCol, _ => replacement))
+    // an indexed point moves to its new vector's cluster in the merge
+    data.rewrite(Sink.withPathLock(path)(Sink.updateColumns(spark, path,
+      col(config.idCol).isInCollection(ids),
+      Map(config.vectorCol -> ((_: Column) => replacement)) ++
+        centroids().map(cs => ClusterCol -> ((_: Column) => clusterOf(replacement, cs))))))
   }
 
   /** Qdrant `get_collection`: declared config + live counters. Cheap
@@ -937,12 +913,14 @@ class VectorCollection private (
     else Sink.compact(spark, path, targetRowsPerFile)
   }
 
-  /** Qdrant `create_snapshot`: point-in-time file-level copy. Returns
-    * files copied. */
+  /** Qdrant `create_snapshot`: point-in-time file-level copy, the IVF
+    * centroids with it. Returns files copied. */
   def snapshot(snapPath: String): Int = Sink.snapshot(spark, path, snapPath)
 
-  /** Qdrant `recover_snapshot`: replace contents from a snapshot
-    * (crash-safe: see [[graft.index.Sink.restoreSnapshot]]). */
+  /** Qdrant `recover_snapshot`: replace contents from a snapshot, IVF
+    * centroids included — a snapshot without them leaves the collection
+    * without an index (crash-safe: see
+    * [[graft.index.Sink.restoreSnapshot]]). */
   def restoreSnapshot(snapPath: String): Unit =
     data.rewrite(Sink.restoreSnapshot(spark, snapPath, path))
 
@@ -1076,6 +1054,11 @@ object VectorCollection {
 
   private def metaPath(path: String) = s"$path/_graft_meta.json"
 
+  /** The IVF index's column and centroid sidecar
+    * ([[VectorCollection.buildIvfIndex]]). */
+  private val ClusterCol = "cluster_id"
+  private val CentroidsFile = "_graft_centroids.txt"
+
   /** C1: create-if-absent with declared vector config (the Qdrant
     * VectorParams + MultiVectorComparator declaration), then open. */
   def ensure(
@@ -1149,9 +1132,9 @@ object VectorCollection {
   }
 
   /** Qdrant `get_collections`: the collection names under a root — any
-    * child directory carrying the meta sidecar (alias pointers and
-    * index sidecars are not collections and are skipped). One
-    * file-status listing; no data files are opened. */
+    * child directory carrying the meta sidecar (alias pointers are not
+    * collections and are skipped). One file-status listing; no data
+    * files are opened. */
   def listCollections(spark: SparkSession, root: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val r = new org.apache.hadoop.fs.Path(root)
@@ -1161,21 +1144,19 @@ object VectorCollection {
       .toSeq.map(_.getPath.getParent.getName).sorted
   }
 
-  /** Qdrant `delete_collection`: remove the collection directory and
-    * its IVF index sidecar (`<path>_ivf`). Every rewrite stages inside
-    * the collection directory ([[graft.index.Sink]]'s rewrite
-    * protocol), so deleting the root takes any pending staging and
-    * commit marker with it — nothing outside it can be resurrected into
-    * a collection later created at the same path. Does NOT touch alias
-    * pointers — Qdrant aliases dangle too, and [[openAlias]] of a
-    * dangling alias fails loudly at open, not silently at query. */
+  /** Qdrant `delete_collection`: remove the collection directory. The
+    * IVF index lives inside it (the `cluster_id` column and centroid
+    * sidecar), and every rewrite stages inside it
+    * ([[graft.index.Sink]]'s rewrite protocol), so deleting the root
+    * takes the index and any pending staging and commit marker with it
+    * — nothing outside it can be resurrected into a collection later
+    * created at the same path. Does NOT touch alias pointers — Qdrant
+    * aliases dangle too, and [[openAlias]] of a dangling alias fails
+    * loudly at open, not silently at query. */
   def drop(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existed = fs.exists(p)
-    // the index FIRST, root LAST: a partial drop is just an undropped
-    // collection, never an index outliving its collection
-    fs.delete(new Path(path + "_ivf"), true)
     fs.delete(p, true)
     existed
   }
@@ -1235,9 +1216,11 @@ object VectorCollection {
   *    the base's size keeps the decode cost of a stream of appends
   *    linear and the copy under twice the collection.
   *
-  * Each part fills inside the scanning request's own job. The base has
-  * a partition per core, and the delta as few partitions as keep each
-  * within a base partition's share of bytes — one for a small delta.
+  * Each part fills inside the scanning request's own job (a base read
+  * from fewer files than cores is spread by a shuffle, whose map side
+  * is one more job of that request). The base has a partition per
+  * core, and the delta as few partitions as keep each within a base
+  * partition's share of bytes — one for a small delta.
   * The scanned frame is base ∪ delta with partition i of each read by
   * the same task, so a delta adds rows to the base's tasks, not tasks
   * (a plain union ran one more task and measured ~5 ms slower per
@@ -1249,7 +1232,7 @@ object VectorCollection {
   * for the block manager's memory spills instead of failing.
   */
 private final class SchemaMemo(
-    spark: SparkSession, path: String, leftOut: Set[String] = Set.empty) {
+    spark: SparkSession, path: String, leftOut: Set[String]) {
   import SchemaMemo.{Copy, Part}
 
   @volatile private var schema: Option[StructType] = None
@@ -1301,10 +1284,15 @@ private final class SchemaMemo(
 
   private def rebuilt(s: StructType, listed: Map[String, Long]): Copy = {
     free()
-    // one partition per core, not per file: a scan of the copy runs no
-    // more tasks than the cores it can use
+    // one partition per core, not per file, so a scan of the copy runs
+    // as many tasks as there are cores: more scan partitions merge
+    // (keeping a clustered layout's runs together), fewer — a compacted
+    // collection of fewer files than cores — spread by a shuffle
+    val cores = spark.sparkContext.defaultParallelism
+    val scan = columns(s, listed.keys)
     val base = Part(listed, GraftResidentBridge.resident(
-      columns(s, listed.keys).coalesce(spark.sparkContext.defaultParallelism),
+      if (scan.queryExecution.toRdd.getNumPartitions >= cores) scan.coalesce(cores)
+      else scan.repartition(cores),
       StorageLevel.MEMORY_AND_DISK))
     Copy(s, base, None, base.r.frame)
   }

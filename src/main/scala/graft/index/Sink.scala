@@ -23,20 +23,24 @@ import org.apache.spark.sql.functions.{coalesce, col, count, floor, greatest, in
   * rewrite replaces and what replaces them: the touched-file merge
   * [[mergeTouched]] ([[upsertReplace]], [[deleteMatching]],
   * [[updatePayload]]) and the whole-collection [[rewriteAll]]
-  * ([[compact]], [[indexPayload]], [[indexPayloadZ]]);
-  * [[compactShards]] and [[restoreSnapshot]] decide for themselves.
-  * All eight commit the same way, through [[commitStaged]]:
+  * ([[compact]], [[indexPayload]], [[indexPayloadZ]],
+  * [[indexClusters]]); [[compactShards]] and [[restoreSnapshot]]
+  * decide for themselves. All nine commit the same way, through
+  * [[commitStaged]]:
   *  1. stage the new data files inside the collection under
   *     `_payload_staging` (nested as `_payload_staging/k=v/…` for a
   *     partition subtree) — Spark's hidden-name rule ([[isVisible]])
   *     keeps the underscore directory out of every read and out of
-  *     partition discovery;
-  *  1. write `_payload_commit` listing the data files the new ones
-  *     replace — exactly the files the operation read. The marker write
-  *     is the commit point and the lease fence
-  *     ([[verifyLeaseForCommit]]);
+  *     partition discovery — and any sidecar that must change with
+  *     them (IVF centroids, a snapshot's sidecars) at its top level;
+  *  1. write `_payload_commit` listing the files the new ones replace
+  *     — exactly the data files the operation read, plus any sidecar
+  *     the operation removes. The marker write is the commit point and
+  *     the lease fence ([[verifyLeaseForCommit]]);
   *  1. finish: move the staged files to the same relative path under
-  *     the root, delete the listed files, clear staging and marker.
+  *     the root, write each staged sidecar over the root's
+  *     ([[writeSidecar]]'s atomic replace), delete the listed files,
+  *     clear staging and marker.
   *
   * Staged names are fresh (Spark's job-unique part names, a per-restore
   * prefix for copied snapshot files), so a moved file never carries a
@@ -45,9 +49,10 @@ import org.apache.spark.sql.functions.{coalesce, col, count, floor, greatest, in
   * the next rewrite or [[repairPayloadUpdate]] discards it. A crash
   * after the marker leaves a pending commit that the next rewrite or
   * [[repairPayloadUpdate]] finishes; until then a reader can see both
-  * the old and the new copy of the rewritten rows. The collection path
-  * itself never disappears, and no data moves outside it — on an
-  * object store only the newly written files are renamed.
+  * the old and the new copy of the rewritten rows, and the old
+  * sidecars. The collection path itself never disappears, and no data
+  * moves outside it — on an object store only the newly written files
+  * are renamed.
   */
 object Sink {
 
@@ -273,42 +278,25 @@ object Sink {
     * end to end — java.nio.file is local-disk only (the `info`
     * rationale applied to reads AND writes). */
   private[graft] def writeSidecar(path: String, content: String): Unit = {
-    // tmp + ATOMIC REPLACE, never create(p, true) in place:
-    // withPathLock is same-JVM only, so a reader in ANOTHER process
-    // (open/loadCentroids/searchAnn) racing a rewrite could observe a
-    // truncated sidecar mid-overwrite. FileContext.rename with
-    // Rename.OVERWRITE is a single atomic replace on HDFS and local
-    // FS — unlike the old delete-then-rename pair, there is NO window
-    // where the sidecar is MISSING, and a crash mid-write leaves the
-    // OLD sidecar intact (only the hidden .tmp is orphaned, harmless:
-    // the next write truncates it).
+    // tmp + atomic replace, never an in-place overwrite: withPathLock
+    // is same-JVM only, so a reader in another process (open,
+    // searchAnn) must never see the sidecar missing or torn, and a
+    // crash mid-write leaves the old one (and a hidden .tmp the next
+    // write truncates)
     val p0 = new Path(path)
     val qp = p0.getFileSystem(hadoopConf).makeQualified(p0)
     val tmp = new Path(qp.getParent, s".${qp.getName}.tmp")
     val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     if (qp.toUri.getScheme == "file") {
-      // local FS: the whole write rides java.nio — Hadoop's local
-      // AbstractFileSystem is a ChecksumFs (a .crc per create, which
-      // a raw rename would orphan) AND its default renameInternal
-      // with OVERWRITE is itself delete-then-rename, non-atomic (the
-      // race drill in IngestSinkSpec caught this). POSIX rename via
-      // nio ATOMIC_MOVE is the real atomic replace here.
+      // local FS: java.nio's POSIX rename (ATOMIC_MOVE). Hadoop's local
+      // AbstractFileSystem is a ChecksumFs whose OVERWRITE rename is
+      // delete-then-rename (IngestSinkSpec's race drill caught it).
       val dst = java.nio.file.Paths.get(qp.toUri.getPath)
       val t = java.nio.file.Paths.get(tmp.toUri.getPath)
-      // upgrade path (r16 advisor): sidecars written BEFORE the nio
-      // branch existed went through Hadoop's LocalFileSystem — a
-      // ChecksumFs that leaves a `.<name>.crc` sibling. A raw nio
-      // replace would update the data file but not the crc, so the
-      // next readSidecar through the same ChecksumFs throws
-      // ChecksumException (and LocalFileSystem moves the "bad" sidecar
-      // aside to bad_files) — the collection's meta/centroids become
-      // unreadable after ONE in-place rewrite. Delete the stale crc
-      // BEFORE the move: in the delete→move window a racing reader
-      // sees the OLD data with NO crc (ChecksumFs skips verification
-      // when the crc is absent — safe), whereas deleting after the
-      // move would expose NEW data against the OLD crc. The tmp's
-      // possible orphan crc (from the pre-change create+rename) goes
-      // too, so the moved file never inherits one.
+      // a `.<name>.crc` a ChecksumFs write left would no longer match
+      // the new bytes, and the next read would throw: delete it BEFORE
+      // the move (a racing reader then sees the old bytes unchecked,
+      // never the new bytes against the old crc), and the tmp's too
       def crcOf(p: java.nio.file.Path): java.nio.file.Path =
         p.resolveSibling("." + p.getFileName.toString + ".crc")
       java.nio.file.Files.deleteIfExists(crcOf(dst))
@@ -318,12 +306,9 @@ object Sink {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } else {
-      // cluster FS: FileContext rename with Rename.OVERWRITE — on
-      // HDFS that is the single atomic rename2 namespace op, so a
-      // cross-process reader never sees a missing or torn sidecar.
-      // Object stores (s3a) have NO atomic rename (copy+delete) —
-      // readSidecar's brief missing-file retry is the documented
-      // fallback there.
+      // cluster FS: FileContext rename with OVERWRITE, HDFS's atomic
+      // rename2. Object stores rename by copy+delete; readSidecar's
+      // missing-file retry covers the gap there.
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(qp.toUri, hadoopConf)
       val out = fc.create(tmp, java.util.EnumSet.of(
         org.apache.hadoop.fs.CreateFlag.CREATE,
@@ -337,23 +322,11 @@ object Sink {
   private[graft] def readSidecar(path: String): String = {
     val p = new Path(path)
     val fs = p.getFileSystem(hadoopConf)
-    // brief missing-file retry: writeSidecar's replace is atomic on
-    // local FS (nio ATOMIC_MOVE) and HDFS (rename2), but an object
-    // store's rename is copy+delete — a racing reader there can catch
-    // the sub-second gap. The retry is GATED on the scheme (r16
-    // advisor): on file/hdfs a missing sidecar is genuinely absent
-    // (the replace leaves no gap), so the common
-    // open-a-nonexistent-collection path must fail fast instead of
-    // paying ~200 ms of pointless sleeps. Object stores keep the
-    // bounded ~200 ms window; a sidecar STILL missing then is
-    // genuinely absent and the last attempt's FileNotFoundException
-    // propagates as before.
-    // scheme via the qualified URI, NOT fs.getScheme: the base
-    // FileSystem.getScheme THROWS UnsupportedOperationException (many
-    // wrapper FS classes never override it), which would turn every
-    // read on such an FS into a hard failure — the URI probe is the
-    // same one writeSidecar's branch uses and never throws (r17
-    // review)
+    // a missing sidecar is retried for ~200 ms on an object store,
+    // whose copy+delete rename leaves a gap; on file and hdfs the
+    // replace is atomic, so missing means absent and fails at once.
+    // The scheme comes from the qualified URI: FileSystem.getScheme
+    // throws on wrappers that do not override it.
     val scheme = fs.makeQualified(p).toUri.getScheme
     val maxRetries = if (scheme == "file" || scheme == "hdfs") 0 else 20
     var attempt = 0
@@ -534,40 +507,38 @@ object Sink {
     * snapshot's data files are copied into staging under a fresh
     * per-restore name prefix — a restore straight after the snapshot
     * would otherwise stage names equal to the files it retires — and
-    * the marker lists every current data file. The finish moves each
+    * its sidecars (`_graft_meta.json`, `_graft_centroids.txt`) under
+    * their own names. The marker lists every current data file and
+    * every current sidecar the snapshot lacks, so the target ends with
+    * exactly the snapshot's rows and sidecars. The finish moves each
     * copy to its relative path, so a partitioned snapshot restores into
     * its subtrees; a subtree the snapshot lacks is removed once empty.
-    * The snapshot's sidecars (`_graft_meta.json`) are written after the
-    * data commit through [[writeSidecar]]'s atomic replace; a crash
-    * between the two leaves the current sidecars. A target that does
-    * not exist is created. */
+    * A target that does not exist is created. */
   def restoreSnapshot(spark: SparkSession, snapPath: String, path: String): Unit = withPathLock(path) {
     val root = new Path(path)
     val fs = fsOf(spark, path)
     fs.mkdirs(root)
     repairPayloadUpdate(spark, path)
     val prefix = s"restored-${java.util.UUID.randomUUID.toString.take(8)}-"
+    def copy(from: Path, to: Path): Unit =
+      FileUtil.copy(fs, from, fs, to, false, spark.sparkContext.hadoopConfiguration)
     def copyIn(from: Path, to: Path): Unit =
       fs.listStatus(from).filter(st => isVisible(st.getPath.getName)).foreach { st =>
         val name = st.getPath.getName
         if (st.isDirectory) copyIn(st.getPath, new Path(to, name))
-        else FileUtil.copy(fs, st.getPath, fs,
-          new Path(to, prefix + name.replaceFirst("^restored-[0-9a-f]{8}-", "")),
-          false, spark.sparkContext.hadoopConfiguration)
+        else copy(st.getPath, new Path(to, prefix + name.replaceFirst("^restored-[0-9a-f]{8}-", "")))
       }
-    commitStaged(spark, path, visibleFiles(fs, root).map(_.getPath.toUri.toString))(
-      staging => copyIn(new Path(snapPath), new Path(staging)))
+    val snap = new Path(snapPath)
+    val kept = sidecarFiles(fs, snap)
+    val dropped = sidecarFiles(fs, root).filterNot(st =>
+      kept.exists(_.getPath.getName == st.getPath.getName))
+    commitStaged(spark, path, (visibleFiles(fs, root) ++ dropped).map(_.getPath.toUri.toString)) {
+      staging =>
+        copyIn(snap, new Path(staging))
+        kept.foreach(st => copy(st.getPath, new Path(staging, st.getPath.getName)))
+    }
     fs.listStatus(root).filter(st => st.isDirectory && isVisible(st.getPath.getName) &&
       visibleFiles(fs, st.getPath).isEmpty).foreach(st => fs.delete(st.getPath, true))
-    // sidecars: the snapshot's top-level hidden files, less Spark's
-    // job marker and the protocol's own
-    fs.listStatus(new Path(snapPath)).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !isVisible(n) && !n.startsWith(".") && n != "_SUCCESS" &&
-        n != PayloadCommitMarker
-    }.foreach { st =>
-      writeSidecar(new Path(root, st.getPath.getName).toString, readSidecar(st.getPath.toString))
-    }
   }
 
   /** Qdrant `set_payload` / `delete_payload` / `clear_payload`:
@@ -582,10 +553,21 @@ object Sink {
       cond: Column,
       payloadCol: String,
       update: Column => Column): Long =
+    updateColumns(spark, path, cond, Map(payloadCol -> update))
+
+  /** [[updatePayload]] of several columns in one merge: each column of
+    * `updates` maps to its new value on the rows matching `cond`,
+    * every new value computed from the row as stored. */
+  private[graft] def updateColumns(
+      spark: SparkSession,
+      path: String,
+      cond: Column,
+      updates: Map[String, Column => Column]): Long =
     mergeTouched(spark, path, "updatePayload") { existing =>
-      require(existing.columns.contains(payloadCol), s"no payload column $payloadCol in $path")
-      (_.filter(cond), _.withColumn(payloadCol,
-        when(coalesce(cond, lit(false)), update(col(payloadCol))).otherwise(col(payloadCol))))
+      updates.keys.foreach(c =>
+        require(existing.columns.contains(c), s"no payload column $c in $path"))
+      (_.filter(cond), rows => rows.select(rows.columns.toSeq.map(c => updates.get(c).fold(col(c))(
+        u => when(coalesce(cond, lit(false)), u(col(c))).otherwise(col(c)).as(c))): _*))
     }
 
   /** The touched-file merge behind [[upsertReplace]], [[deleteMatching]]
@@ -635,6 +617,16 @@ object Sink {
   private[graft] def isVisible(name: String): Boolean =
     !(name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
       name.endsWith("._COPYING_"))
+
+  /** The sidecars directly under `dir`: its hidden files, less Spark's
+    * job marker, the protocol's own marker and dot-files (checksums,
+    * temporaries). */
+  private def sidecarFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !isVisible(n) && !n.startsWith(".") && n != "_SUCCESS" &&
+        n != PayloadCommitMarker
+    }
 
   /** The data files under `dir`, descending into its visible
     * subdirectories (partition subtrees). */
@@ -690,10 +682,11 @@ object Sink {
   }
 
   /** Post-commit half of the rewrite protocol: move each staged data
-    * file to the same relative path under the root, delete the files
-    * the marker lists, then clear staging + marker. Every step is
-    * idempotent (a moved file has left staging; delete-if-present), so
-    * a repair can itself be interrupted. Returns the files moved. */
+    * file to the same relative path under the root, write each staged
+    * sidecar over the root's, delete the files the marker lists, then
+    * clear staging + marker. Every step is idempotent (a moved file has
+    * left staging; a sidecar write replaces; delete-if-present), so a
+    * repair can itself be interrupted. Returns the files moved. */
   private def finishPayloadUpdate(fs: FileSystem, root: Path): Int = {
     val marker = new Path(root, PayloadCommitMarker)
     val staging = new Path(root, PayloadStagingDir)
@@ -705,7 +698,12 @@ object Sink {
         else throw new java.io.IOException(
           s"rewrite commit: failed to move staged file ${st.getPath} into $to")
       }.sum
-    val moved = if (fs.exists(staging)) moveIn(staging, root) else 0
+    val moved = if (!fs.exists(staging)) 0 else {
+      val n = moveIn(staging, root)
+      sidecarFiles(fs, staging).foreach(st =>
+        writeSidecar(new Path(root, st.getPath.getName).toString, readSidecar(st.getPath.toString)))
+      n
+    }
     val in = fs.open(marker)
     val listed =
       try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
@@ -818,18 +816,23 @@ object Sink {
   private def compacted(targetRowsPerFile: Long)(data: DataFrame): DataFrame =
     data.repartition(fileCountFor(data.count(), targetRowsPerFile))
 
-  /** The whole-collection rewrite behind [[compact]], [[indexPayload]]
-    * and [[indexPayloadZ]]: `layout` receives the collection's rows and
-    * returns them as the new files should hold them. Commits through
-    * the protocol (object doc), retiring exactly the files its read
-    * scanned; sidecars stay in place. Returns files written. */
-  private def rewriteAll(spark: SparkSession, path: String, op: String)(
+  /** The whole-collection rewrite behind [[compact]], [[indexPayload]],
+    * [[indexPayloadZ]] and [[indexClusters]]: `layout` receives the
+    * collection's rows and returns them as the new files should hold
+    * them. Commits through the protocol (object doc), retiring exactly
+    * the files its read scanned; `sidecars` (name → content) commit
+    * with the rows, other sidecars stay in place. Returns files
+    * written. */
+  private def rewriteAll(spark: SparkSession, path: String, op: String,
+      sidecars: Map[String, String] = Map.empty)(
       layout: DataFrame => DataFrame): Int = withPathLock(path) {
     repairPayloadUpdate(spark, path)
     requireUnpartitioned(spark, path, op)
     val data = spark.read.parquet(path)
-    commitStaged(spark, path, data.inputFiles.toSeq)(
-      layout(data).write.mode(SaveMode.Overwrite).parquet(_))
+    commitStaged(spark, path, data.inputFiles.toSeq) { staging =>
+      layout(data).write.mode(SaveMode.Overwrite).parquet(staging)
+      sidecars.foreach { case (name, content) => writeSidecar(s"$staging/$name", content) }
+    }
   }
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
@@ -915,6 +918,26 @@ object Sink {
         .sortWithinPartitions(col("_zkey"))
         .drop("_zkey")
     }
+
+  /** IVF cluster layout (`buildIvfIndex`): every row's `clusterCol` set
+    * to `assign` (its nearest centroid), the rows range-clustered on
+    * (`clusterCol`, `idCol`), and the `sidecars` (the centroids)
+    * committed with them. The range shuffle has one partition per core
+    * or more, never fewer — left to AQE it may coalesce a small
+    * collection into one file — so each file, and each partition of a
+    * resident copy built from the files, holds a contiguous run of
+    * clusters that parquet footer and in-memory batch statistics prune
+    * a cluster probe on. A [[rewriteAll]]. Returns files written. */
+  def indexClusters(
+      spark: SparkSession,
+      path: String,
+      clusterCol: String,
+      assign: Column,
+      idCol: String,
+      sidecars: Map[String, String]): Int =
+    rewriteAll(spark, path, "indexClusters", sidecars)(
+      _.withColumn(clusterCol, assign)
+        .repartitionByRange(spark.sparkContext.defaultParallelism, col(clusterCol), col(idCol)))
 
   /** Uniform 256-cell grid position of `v` in [lo, hi], clamped; NaN
     * (excluded from the bounds) buckets to cell 0 instead of throwing

@@ -16,7 +16,12 @@ import graft.index.Embedder
   * foreachBatch is the idiomatic sink when the write needs batch-side
   * semantics (here: the anti-join dedup); at scale each micro-batch is
   * one bounded append with exactly-once via the streaming checkpoint +
-  * idempotent ids.
+  * idempotent ids. A collection with an IVF index
+  * ([[VectorCollection.buildIvfIndex]]) stays indexed: each appended
+  * point is assigned its cluster as it is written, so the stream is
+  * also the live ANN indexer — Qdrant's background indexing of fresh
+  * upserts, which the reference approximates by re-running its indexer
+  * on a schedule.
   */
 object IncrementalIndex {
 
@@ -42,26 +47,6 @@ object IncrementalIndex {
       collection: VectorCollection,
       checkpoint: String): Long =
     runWith(spark, sfDir, checkpoint, b => { collection.upsertReplace(b); () })
-
-  /** Maintain the collection's persisted IVF ANN index from the same
-    * stream: each micro-batch upserts the collection AND appends its
-    * genuinely-new points into the cluster-partitioned index
-    * ([[VectorCollection.upsertAnnIndex]] — anti-join idempotence, so
-    * checkpoint replays and re-delivered files never duplicate index
-    * rows). The live-index loop the reference approximates by re-running
-    * its indexer on a schedule. Requires [[VectorCollection.buildIvfIndex]]
-    * to have run once (centroids are the trained constant between
-    * periodic rebuilds). */
-  def runAnnIndexing(
-      spark: SparkSession,
-      sfDir: String,
-      collection: VectorCollection,
-      checkpoint: String): Long =
-    runWith(spark, sfDir, checkpoint, b => {
-      collection.upsertIncremental(b)
-      collection.upsertAnnIndex(b)
-      ()
-    })
 
   private def runWith(
       spark: SparkSession,

@@ -22,6 +22,11 @@ class CrashFs extends RawLocalFileSystem {
   }
 }
 
+/** [[CrashFs]] for `FileContext` callers (the sidecar writer's atomic
+  * replace on a scheme other than `file`). */
+class CrashAbstractFs(uri: java.net.URI, conf: Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new CrashFs, conf, "crashfs", false)
+
 class InjectedCrash(msg: String) extends java.io.IOException(msg)
 
 object CrashFs {
@@ -31,8 +36,10 @@ object CrashFs {
 
   @volatile private var armed: Option[Op => Boolean] = None
 
-  def register(conf: Configuration): Unit =
+  def register(conf: Configuration): Unit = {
     conf.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    conf.set("fs.AbstractFileSystem.crashfs.impl", classOf[CrashAbstractFs].getName)
+  }
 
   /** A fresh collection path on the crashing filesystem. */
   def tmpPath(prefix: String): String =

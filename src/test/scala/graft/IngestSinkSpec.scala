@@ -558,23 +558,65 @@ class IngestSinkSpec extends SparkSpec {
     before.unpersist()
   }
 
-  test("crash drills: compact, compactShards, indexPayload, restoreSnapshot, upsertReplace, deleteMatching and updatePayload end in exactly the pre- or post-op rows") {
+  test("crash drills: compact, compactShards, indexPayload, buildIvfIndex, restoreSnapshot, upsertReplace, deleteMatching and updatePayload end in exactly the pre- or post-op rows") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
+    import graft.api.{CollectionConfig, VectorCollection}
     CrashFs.register(spark.sparkContext.hadoopConfiguration)
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    def rows(path: String): Seq[String] = rowsOf(spark.read.parquet(path))
+    // an IVF build changes only cluster_id, so rows compare without it
+    def rows(path: String): Seq[String] = rowsOf(spark.read.parquet(path).drop("cluster_id"))
     val base = (0L until 40L).map(i => (i, s"p$i")).toDF("id", "tag")
     // ids 0-9 replace stored points, 40-44 are new
     val edits = ((0L until 10L) ++ (40L until 45L)).map(i => (i, s"new$i")).toDF("id", "tag")
     def appended(path: String): Unit =
       (0 until 4).foreach(i => Sink.append(base.filter($"id" % 4 === i), path))
+    // a vector collection of 4 appends, IVF-indexed with `nClusters`
+    // (0: no index)
+    val vecs = t(spark, sf, "embeddings").filter($"vec_id" < 120)
+      .select("vec_id", "embedding", "label")
+    val q = vecs.filter($"vec_id" === 7).head.getSeq[Float](1)
+    def indexed(nClusters: Int)(path: String): Seq[String] = {
+      val c = VectorCollection.ensure(spark, path, vecs,
+        CollectionConfig("vec_id", "embedding", 64, multiVector = false))
+      (0 until 4).foreach(i => c.upsert(vecs.filter($"vec_id" % 4 === i)))
+      if (nClusters > 0) c.buildIvfIndex(nClusters, 1)
+      rows(path)
+    }
+    def build(nClusters: Int)(path: String): Any =
+      VectorCollection.open(spark, path).buildIvfIndex(nClusters, 1)
+    // IVF drills: the clusters the centroid sidecar holds before and
+    // after the build (0: none)
+    val builds = Map("buildIvfIndex" -> (0, 8), "buildIvfIndex 8 → 4" -> (8, 4),
+      "buildIvfIndex 4 → 8" -> (4, 8))
+    def centroidCount(path: String): Int = {
+      val sidecar = new Path(path, "_graft_centroids.txt")
+      val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(sidecar)) 0
+      else Sink.readSidecar(sidecar.toString).split("\n").count(_.nonEmpty)
+    }
+    // with every cluster probed, searchAnn answers as search does over
+    // whatever rows a crash left; without centroids it refuses by name
+    def annExact(path: String, what: String): Unit = {
+      val c = VectorCollection.open(spark, path)
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      if (centroidCount(path) > 0)
+        assert(pairs(c.searchAnn(q, 10, nprobe = 8)) === pairs(c.search(q, 10)), what)
+      else {
+        val e = intercept[IllegalArgumentException](c.searchAnn(q, 10, nprobe = 8))
+        assert(e.getMessage.contains("buildIvfIndex"), s"$what: ${e.getMessage}")
+      }
+    }
     // (op, set up a collection and return the rows the op leaves, op)
     val drills = Seq[(String, String => Seq[String], String => Any)](
       ("compact", { p => appended(p); rows(p) }, p => Sink.compact(spark, p, 15L)),
       ("indexPayload", { p => appended(p); rows(p) },
         p => Sink.indexPayload(spark, p, "tag", 15L)),
+      ("buildIvfIndex", indexed(0), build(8)),
+      ("buildIvfIndex 8 → 4", indexed(8), build(4)),
+      ("buildIvfIndex 4 → 8", indexed(4), build(8)),
       ("compactShards", { p =>
         (0 until 2).foreach(i => Sink.append(
           base.filter($"id" % 2 === i).withColumn("shard", $"id" % 4), p, Seq("shard")))
@@ -608,10 +650,17 @@ class IngestSinkSpec extends SparkSpec {
       val seen = rows(path)
       if (i == 0) assert(seen === pre, s"$what: staging must stay invisible")
       else assert(fs.exists(new Path(path, "_payload_commit")), s"$what: commit pending")
+      if (builds.contains(name)) annExact(path, what)
       assert(Sink.repairPayloadUpdate(spark, path), what)
       assert(rows(path) === (if (i == 0) pre else post), what)
       assert(!fs.exists(new Path(path, "_payload_staging")) &&
         !fs.exists(new Path(path, "_payload_commit")), what)
+      // the centroids commit with the rows: the repair leaves the
+      // build's, or the ones before it
+      builds.get(name).foreach { case (before, after) =>
+        assert(centroidCount(path) === (if (i == 0) before else after), what)
+        annExact(path, what)
+      }
     }
   }
 

@@ -165,6 +165,22 @@ class RequestCostSpec extends SparkSpec {
     assert(ids(c.search(q, 5)) === bruteTopK(dir, q, 5))
   }
 
+  test("the resident copy of a collection with fewer files than cores scans on every core") {
+    val dir = s"${tmp()}/col"
+    val c = VectorCollection.ensure(spark, dir, embeddings, cfg)
+    (0 until 4).foreach(i => c.upsert(embeddings.filter(col("vec_id") % 4 === i)))
+    assert(c.compact(1000000L) === 1)
+    val q = vecOf(7)
+    c.search(q, 5).collect() // builds the copy from the one file
+    val (hits, jobs) = jobStartsOf(ids(c.search(q, 5)))
+    assert(jobs.size === 1, s"a warm search ran ${jobs.size} Spark jobs: ${jobs.map(_._1)}")
+    // the result stage; the shuffle that spread the copy is a skipped
+    // parent stage of the job
+    val tasks = jobs.head._2.stageInfos.maxBy(_.stageId).numTasks
+    assert(tasks === spark.sparkContext.defaultParallelism, s"a warm search ran $tasks tasks")
+    assert(hits === bruteTopK(dir, q, 5))
+  }
+
   test("rewrites through a warm handle: Spark jobs per operator") {
     import spark.implicits._
     val dir = s"${tmp()}/col"

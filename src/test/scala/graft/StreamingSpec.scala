@@ -99,18 +99,18 @@ class StreamingSpec extends SparkSpec {
       CollectionConfig("point_id", "embedding", 64, multiVector = false))
     c.upsert(half)
     c.buildIvfIndex(nClusters = 8, lloydIters = 1)
-    val idxBefore = spark.read.parquet(s"$base/col_ivf").count()
-    assert(idxBefore === half.count())
-    // stream the FULL corpus: odd docs are new (collection + index
-    // grow), even docs re-deliver (anti-join keeps both idempotent)
-    IncrementalIndex.runAnnIndexing(spark, sf, c, s"$base/ckpt1")
+    assert(c.count === half.count())
+    // stream the FULL corpus: odd docs are new (the collection and its
+    // index grow), even docs re-deliver (the anti-join keeps it
+    // idempotent)
+    IncrementalIndex.run(spark, sf, c, s"$base/ckpt1")
     val total = docs.count()
-    assert(c.count === total)
-    val idxAfter = spark.read.parquet(s"$base/col_ivf").count()
-    assert(idxAfter === total, "every point exactly once in the index")
+    assert(c.count === total, "every point exactly once in the index")
+    assert(spark.read.parquet(s"$base/col").filter(col("cluster_id").isNull).count() === 0L,
+      "every streamed point carries its cluster")
     // a second full re-delivery adds nothing
-    IncrementalIndex.runAnnIndexing(spark, sf, c, s"$base/ckpt2")
-    assert(spark.read.parquet(s"$base/col_ivf").count() === total)
+    IncrementalIndex.run(spark, sf, c, s"$base/ckpt2")
+    assert(c.count === total)
     // a streamed-in (odd) doc is findable through the pruned ANN probe
     val oddDoc = docs.filter(col("doc_id") === 1).head
     val qv = spark.range(1)

@@ -140,15 +140,12 @@ class VectorCollectionSpec extends SparkSpec {
     val cfg = CollectionConfig("point_id", "embedding", 64, multiVector = false)
     VectorCollection.ensure(spark, path, pts, cfg).upsert(pts)
     // a crashed rewrite left its staged rows and commit marker inside
-    // the root, and the IVF index sits beside it
+    // the root
     pts.write.parquet(s"$path/_payload_staging")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$path/_payload_commit"), "")
-    new java.io.File(s"${path}_ivf").mkdirs()
     assert(VectorCollection.drop(spark, path))
-    Seq("", "_ivf").foreach { s =>
-      assert(!new java.io.File(path + s).exists(), s"$s must be dropped")
-    }
+    assert(!new java.io.File(path).exists(), "the collection must be dropped")
     // a NEW collection at the same path holds none of it: no pending
     // commit is finished into it, no staged row appears
     val fresh = VectorCollection.ensure(spark, path, pts, cfg)
@@ -157,7 +154,6 @@ class VectorCollectionSpec extends SparkSpec {
     Seq("_payload_staging", "_payload_commit").foreach { s =>
       assert(!new java.io.File(s"$path/$s").exists(), s"$s must not survive the drop")
     }
-    assert(!new java.io.File(s"${path}_ivf").exists())
     pts.unpersist()
   }
 
@@ -432,6 +428,8 @@ class VectorCollectionSpec extends SparkSpec {
     }
     val refusedZ = intercept[IllegalArgumentException] { re.createPayloadIndexZ("pid", "pid") }
     assert(refusedZ.getMessage.contains("createPayloadIndexZ"), refusedZ.getMessage)
+    val refusedIvf = intercept[IllegalArgumentException] { re.buildIvfIndex(4, 1) }
+    assert(refusedIvf.getMessage.contains("buildIvfIndex"), refusedIvf.getMessage)
     // unsharded, the Z layout rewrite lets the next search see the
     // rewritten files, not the copy a search before it built
     val flatDir = s"${tmp()}/flat"
@@ -446,7 +444,7 @@ class VectorCollectionSpec extends SparkSpec {
     assert(flat.count === pts.count())
   }
 
-  test("IVF index: build once, ANN probe prunes partitions and finds the query point") {
+  test("IVF index: build once, ANN probe filters clusters below the scoring and finds the query point") {
     val dir = s"${tmp()}/col"
     val e = t(spark, sf, "embeddings")
       .select(col("vec_id").as("pid"), col("embedding"), col("label"))
@@ -460,12 +458,30 @@ class VectorCollectionSpec extends SparkSpec {
     // a stored point probing its own cluster must surface itself at 1.0
     val hits = c.searchAnn(q, k = 5, nprobe = 1).collect()
     assert(hits.head.getLong(0) === 7L && hits.head.getDouble(1) === 1.0)
-    // partition pruning is real: the probe plan carries a cluster_id
-    // partition filter
-    val plan = c.searchAnn(q, k = 5, nprobe = 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cluster_id"),
-      s"ANN probe must prune cluster partitions:\n$plan")
+    // the probe is real: a cluster_id predicate (IN, or = for one
+    // cluster) sits below the scoring projection, and the rows it
+    // passes to scoring are fewer than the collection's at nprobe = 1
+    // and grow with nprobe
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    def probeFilters(p: SparkPlan): Seq[FilterExec] = p.collect {
+      case f: FilterExec if f.condition.references.exists(_.name == "cluster_id") => f
+    }
+    def scoredRows(nprobe: Int): Long = {
+      val df = c.searchAnn(q, k = 5, nprobe = nprobe)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val filters = probeFilters(plan)
+      assert(filters.size === 1, s"one cluster probe predicate:\n$plan")
+      assert(!filters.head.output.exists(_.name == "score") &&
+        plan.collect { case n if n.output.exists(_.name == "score") => n }
+          .exists(n => probeFilters(n).nonEmpty),
+        s"the probe predicate must sit below the scoring projection:\n$plan")
+      filters.head.metrics("numOutputRows").value
+    }
+    val total = c.count
+    val scored = Seq(1, 2, 4).map(scoredRows)
+    assert(scored.head > 0 && scored.head < total, s"nprobe 1 scores $scored of $total")
+    assert(scored === scored.sorted && scored.last > scored.head, s"scored rows by nprobe $scored")
     // wider probe can only add candidates (recall is monotone in nprobe)
     val r1 = c.searchAnn(q, k = 50, nprobe = 1).count()
     val r2 = c.searchAnn(q, k = 50, nprobe = 4).count()
@@ -480,6 +496,108 @@ class VectorCollectionSpec extends SparkSpec {
     // index survives reopen (sidecar centroids)
     val reopened = VectorCollection.open(spark, dir)
     assert(reopened.searchAnn(q, k = 1, nprobe = 1).head.getLong(0) === 7L)
+  }
+
+  test("IVF clusters are a column every write keeps current: after each write, searchAnn probing every cluster equals search") {
+    import spark.implicits._
+    val root = tmp()
+    val dir = s"$root/col"
+    val e = t(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"), col("label"),
+        map(lit("src"), col("label").cast("string")).as("payload"))
+    val all = e.collect()
+    val vecOf = all.map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
+    val held = e.filter(col("vec_id") >= 400)
+    val c = VectorCollection.ensure(spark, dir, e,
+      CollectionConfig("vec_id", "embedding", 64, multiVector = false))
+    c.upsert(e.filter(col("vec_id") < 400))
+    assert(c.buildIvfIndex(nClusters = 4, lloydIters = 1) === dir)
+    // the index is the collection itself: nothing beside it
+    assert(new java.io.File(root).list().toSeq === Seq("col"))
+    val cents = scala.io.Source.fromFile(s"$dir/_graft_centroids.txt").getLines()
+      .filter(_.nonEmpty).map { l =>
+        val p = l.split(","); (p.head.toLong, p.tail.map(_.toFloat))
+      }.toSeq
+    assert(cents.size === 4)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val queries = Seq(7L, 11L, 123L, 450L).map(vecOf)
+    // every stored row carries the cluster of its vector, and a full
+    // probe answers exactly as exact search does, through this handle
+    // and through a fresh one
+    def assertIndexed(after: String, filter: org.apache.spark.sql.Column = lit(true)): Unit = {
+      val rows = spark.read.parquet(dir).select("vec_id", "embedding", "cluster_id").collect()
+      rows.foreach { r =>
+        val want = graft.ops.Similarity.rankCentroids(cents, r.getSeq[Float](1).toArray).head
+        assert(r.getLong(2) === want, s"after $after: point ${r.getLong(0)}'s cluster_id")
+      }
+      Seq(c, VectorCollection.open(spark, dir)).foreach { h =>
+        queries.foreach { q =>
+          assert(pairs(h.searchAnn(q, k = 10, nprobe = 4, filter = filter)) ===
+            pairs(h.search(q, 10, filter)), s"after $after")
+        }
+      }
+    }
+    assertIndexed("buildIvfIndex")
+    c.upsert(held.filter(col("vec_id") < 420))
+    assertIndexed("upsert")
+    assert(c.upsertIncremental(held.filter(col("vec_id") < 440)) === 20L)
+    assertIndexed("upsertIncremental")
+    c.snapshot(s"$root/snap")
+    assert(c.delete(Seq(7L)) === 1L)
+    assertIndexed("delete")
+    assert(!pairs(c.searchAnn(vecOf(7L), k = 10, nprobe = 4)).exists(_._1 == 7L),
+      "a deleted point must not be found")
+    assert(c.deleteByFilter(col("vec_id").between(20L, 29L)) === 10L)
+    assertIndexed("deleteByFilter")
+    val replaced = held.filter(col("vec_id") >= 460).union(e.filter(col("vec_id") === 30L)
+      .select(col("vec_id"), transform(col("embedding"), x => -x).as("embedding"),
+        col("label"), col("payload")))
+    assert(c.upsertReplace(replaced) === 41L)
+    assertIndexed("upsertReplace")
+    val negated = vecOf(11L).map(-_)
+    assert(c.updateVectors(Map(11L -> negated)) === 1L)
+    assertIndexed("updateVectors")
+    // the point moved to its new vector's cluster: the narrowest probe
+    // finds it at 1.0, and its old vector no longer ranks it first
+    val moved = pairs(c.searchAnn(negated, k = 3, nprobe = 1))
+    assert(moved.head === ((11L, 1.0)), s"$moved")
+    assert(pairs(c.searchAnn(vecOf(11L), k = 3, nprobe = 4)).head._1 != 11L)
+    assert(c.setPayload(col("vec_id") < 100, "payload", "k", "v") > 0L)
+    assertIndexed("setPayload", filter = try_element_at(col("payload"), lit("k")) === "v")
+    c.compact(1000000L)
+    assertIndexed("compact")
+    c.restoreSnapshot(s"$root/snap")
+    assertIndexed("restoreSnapshot")
+    assert(c.count === 440L)
+    assert(pairs(c.searchAnn(vecOf(7L), k = 1, nprobe = 1)) === Seq((7L, 1.0)))
+    // a snapshot taken before the build restores an unindexed collection
+    val plain = s"$root/plain"
+    val p = VectorCollection.ensure(spark, plain, e,
+      CollectionConfig("vec_id", "embedding", 64, multiVector = false))
+    p.upsert(e)
+    p.snapshot(s"$root/plain_snap")
+    p.buildIvfIndex(nClusters = 4, lloydIters = 1)
+    p.restoreSnapshot(s"$root/plain_snap")
+    assert(!new java.io.File(s"$plain/_graft_centroids.txt").exists())
+    assert(!spark.read.parquet(plain).columns.contains("cluster_id"))
+    val err = intercept[IllegalArgumentException] { p.searchAnn(vecOf(7L)) }
+    assert(err.getMessage.contains("buildIvfIndex"), err.getMessage)
+  }
+
+  test("buildIvfIndex refuses by name to overwrite a payload column named cluster_id") {
+    val dir = s"${tmp()}/col"
+    val e = t(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"), (col("label") % 3).as("cluster_id"))
+    val c = VectorCollection.ensure(spark, dir, e,
+      CollectionConfig("vec_id", "embedding", 64, multiVector = false))
+    c.upsert(e)
+    val err = intercept[IllegalArgumentException] { c.buildIvfIndex(4, 1) }
+    assert(err.getMessage.contains("cluster_id") && err.getMessage.contains("buildIvfIndex"),
+      err.getMessage)
+    // the user's column is untouched
+    assert(spark.read.parquet(dir).select("vec_id", "cluster_id").collect().toSet ===
+      e.select("vec_id", "cluster_id").collect().toSet)
   }
 
   test("searchBatch: no requests give an empty frame; 300 random requests equal per-request search") {

@@ -16,6 +16,12 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_REPS (default 2) timed passes; stage metrics are
   * collected on the LAST pass only (steady state). Forcing matches
   * Bench exactly (`queryExecution.toRdd.count()`).
+  *
+  * Codegen: the last pass's generated-class compiles (the count of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`) and their total time
+  * (`CodeGenerator.compileTime`; the histogram only keeps a sample of
+  * its values). Both are JVM-wide, which in local mode covers the
+  * driver's and the tasks' compiles alike.
   */
 object QueryProf {
   private case class StageRow(
@@ -85,6 +91,9 @@ object QueryProf {
       if (!org.apache.spark.GraftListenerBridge.drained(spark.sparkContext, 30000))
         System.err.println(
           "[prof] listener bus not drained in 30 s - stage tables may be incomplete")
+    def compiles(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
     names.foreach { n =>
       val q = devFrames.getOrElse(n, SparkEntry.queries(n))
       // warm-up (untimed, small sf)
@@ -92,6 +101,7 @@ object QueryProf {
       catch { case _: Throwable => }
       drain()
       var last = 0.0
+      var codegen = (0L, 0L)
       (1 to reps).foreach { r =>
         stages.clear(); jobs.clear(); jobStart.clear()
         record = r == reps
@@ -101,6 +111,7 @@ object QueryProf {
         // tExec = execution incl. AQE per-stage replanning. AQE's
         // replan time is NOT separable from tExec here — what this
         // isolates is the driver-side pre-execution cost per query.
+        val c0 = compiles()
         val t0 = System.nanoTime()
         val df = q(spark, sfDir)
         val t1 = System.nanoTime()
@@ -108,7 +119,9 @@ object QueryProf {
         val t2 = System.nanoTime()
         df.queryExecution.toRdd.count()
         val t3 = System.nanoTime()
+        val c1 = compiles()
         last = (t3 - t0) / 1e9
+        codegen = (c1._1 - c0._1, c1._2 - c0._2)
         drain()
         record = false
         println(f"[prof] $n rep $r: $last%.3f s " +
@@ -118,7 +131,8 @@ object QueryProf {
           println(s"== $n executed plan ==\n" +
             df.queryExecution.executedPlan.toString)
       }
-      println(f"== $n: last rep $last%.3f s, ${jobs.size} jobs, ${stages.size} stages ==")
+      println(f"== $n: last rep $last%.3f s, ${jobs.size} jobs, ${stages.size} stages, " +
+        f"${codegen._1} codegen compiles (${codegen._2 / 1e9}%.3f s) ==")
       import scala.jdk.CollectionConverters._
       val js = jobs.asScala.toSeq.sortBy(_._1)
       println("jobs(ms): " + js.map { case (id, ms) => s"$id:$ms" }.mkString(" "))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LeafNode, LogicalPlan}
 
 /** Reliable-vs-local checkpoint switch for the iterative operators
   * (semDedup's level loop, clusters' label propagation, clustersStar's
@@ -13,7 +14,9 @@ import org.apache.spark.sql.DataFrame
   * generalized r15 to the whole iterative family). With session conf
   * `spark.graft.checkpointDir` set, every call is a RELIABLE
   * `Dataset.checkpoint` under that directory instead: executor loss
-  * re-reads checkpoint files, and nothing pins block-manager storage.
+  * re-reads checkpoint files, and nothing pins block-manager storage
+  * past the checkpoint (a lazy reliable call stores its rows only until
+  * their files are written, so they are computed once).
   *
   * Contract: the caller owns the directory's lifecycle — Spark does
   * not clean reliable checkpoints by default, and iterative loops
@@ -61,7 +64,10 @@ private[graft] object Ckpt {
               "pinned dir — setCheckpointDir is context-global and " +
               "re-pointing it mid-flight would mix two runs' " +
               "checkpoint files under one cleanup contract")
-        df.checkpoint(eager)
+        // an eager checkpoint writes its files in the job that computes
+        // the rows; a lazy one would compute them twice (see the bridge)
+        if (eager) df.checkpoint(eager = true)
+        else org.apache.spark.sql.GraftResidentBridge.storedCheckpoint(df)
       case None => df.localCheckpoint(eager)
     }
   }
@@ -158,8 +164,25 @@ private[graft] object Sizing {
         s"-Dgraft.materializeRowsMin must be a whole number of rows, got '$v'"))
     }
 
-  def approxRows(df: DataFrame): Long = {
+  def approxRows(df: DataFrame): Long = rowsOf(df.queryExecution.optimizedPlan)
+
+  /** [[approxRows]] bounded by the plan's leaves. Without CBO a join's
+    * estimate is the PRODUCT of its sides, so a join of two
+    * thousand-row relations reads as a million rows; here a join
+    * counts as its larger side and any other node as the sum of its
+    * children (a union's rows add up; a filter, project or aggregate
+    * keeps at most its child's). */
+  def boundedRows(df: DataFrame): Long = {
+    def bound(p: LogicalPlan): BigInt = p match {
+      case _: LeafNode => rowsOf(p)
+      case j: Join => j.children.map(bound).max
+      case _ => p.children.map(bound).sum
+    }
     val plan = df.queryExecution.optimizedPlan
+    bound(plan).min(rowsOf(plan)).toLong
+  }
+
+  private def rowsOf(plan: LogicalPlan): Long = {
     val st = plan.stats
     st.rowCount.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse {
       val perRow =

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Tables.t
 import graft.index.Embedder
 import graft.vector.Kernels
@@ -1562,26 +1563,115 @@ object Dedup {
     * A~C is common near the threshold), so a per-pair keeper rule
     * under-deletes.
     *
-    * Algorithm: iterative min-label propagation. Each round every node
-    * takes the min of its own label and its neighbors' labels; rounds
-    * repeat until a fixpoint (no label decreased). Cost per round is
-    * one shuffle of the (undirected) edge list joined to the label
-    * table plus a min-aggregate — both keyed shuffles that scale
-    * horizontally; rounds = graph diameter. Near-dup components are
-    * dense (near-cliques around a shared source document), so diameter
-    * is small — 2–3 rounds in practice; when a graph exhausts the
-    * round cap (chain-shaped components), the call falls back to
-    * [[clustersStar]], the O(log n)-round star contraction. Lineage is
-    * truncated every round through the [[Ckpt]] switch — eager
-    * `localCheckpoint` by default, RELIABLE `checkpoint` under
-    * session conf `spark.graft.checkpointDir` (executor loss on a
-    * long cluster run must not kill the loop) — so the plan does not
-    * grow with iteration count.
+    * Two paths, chosen from plan statistics alone (no job):
+    *  - a pair list at or under the session's broadcast bound
+    *    (`spark.sql.autoBroadcastJoinThreshold`, the size the session
+    *    already ships whole to one place) is collected in one job and
+    *    labelled on the driver by a union-find over primitive arrays
+    *    ([[componentMinima]]). No rounds, no checkpoints and no round
+    *    cap: a chain-shaped graph needs no fallback here.
+    *  - a larger pair list, a bound of -1, or ids that are not integral
+    *    run iterative min-label propagation. Each round every node
+    *    takes the min of its own label and its neighbors' labels;
+    *    rounds repeat until a fixpoint (no label decreased). Cost per
+    *    round is one shuffle of the (undirected) edge list joined to
+    *    the label table plus a min-aggregate — both keyed shuffles that
+    *    scale horizontally; rounds = graph diameter. Near-dup
+    *    components are dense (near-cliques around a shared source
+    *    document), so diameter is small — 2–3 rounds in practice; when
+    *    a graph exhausts `maxIters` (chain-shaped components), the call
+    *    falls back to [[clustersStar]], the O(log n)-round star
+    *    contraction. Lineage is truncated every round through the
+    *    [[Ckpt]] switch — eager `localCheckpoint` by default, RELIABLE
+    *    `checkpoint` under session conf `spark.graft.checkpointDir`
+    *    (executor loss on a long cluster run must not kill the loop) —
+    *    so the plan does not grow with iteration count.
     *
     * Returns (id, cluster_id), one row per node that appears in at
-    * least one pair — singletons are implicitly their own cluster. */
+    * least one pair — singletons are implicitly their own cluster. Both
+    * paths return the same rows and column types. A pair
+    * with a NULL endpoint is refused by name on both paths (a null id
+    * has no component). */
   def clusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     val edges = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+    val t = edges.schema("a").dataType
+    val integral = Set[DataType](LongType, IntegerType, ShortType, ByteType)
+    if (integral(t) && edges.schema("b").dataType == t && underBroadcastBound(edges))
+      clustersOnDriver(edges)
+    else clustersPropagated(edges, pairs, maxIters)
+  }
+
+  /** Whether the session would ship `df` whole to one place, judged as
+    * the planner judges a broadcast: optimizer statistics against
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 disables). No job. */
+  private def underBroadcastBound(df: DataFrame): Boolean = {
+    val bound = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    bound >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
+  }
+
+  private def nullEndpoint: IllegalArgumentException = new IllegalArgumentException(
+    "clusters(): the pair list has a NULL id_a or id_b — a null id has no " +
+      "component; drop or fill null ids before clustering")
+
+  /** [[clusters]] on the driver. One job collects the endpoints, each
+    * partition packed into one primitive array; the labelled nodes come
+    * back as a local relation, whose exact statistics let a downstream
+    * join broadcast it. */
+  private def clustersOnDriver(edges: DataFrame): DataFrame = {
+    val t = edges.schema("a").dataType
+    val packed = edges.select(col("a").cast(LongType), col("b").cast(LongType))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ends = Array.newBuilder[Long]
+        var nulls = false
+        rows.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+          else { ends += r.getLong(0); ends += r.getLong(1) }
+        }
+        Iterator.single((ends.result(), nulls))
+      }.collect()
+    if (packed.exists(_._2)) throw nullEndpoint
+    val (ids, minima) = componentMinima(Array.concat(packed.map(_._1).toSeq: _*))
+    val nullable = edges.schema.fields.exists(_.nullable)
+    // the propagated path's schema: `id` as nullable as the endpoints,
+    // `cluster_id` a min-aggregate (always nullable)
+    val schema = StructType(Seq(StructField("id", LongType, nullable),
+      StructField("cluster_id", LongType, nullable = true)))
+    edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), minima(i))): _*), schema)
+      .select(col("id").cast(t).as("id"), col("cluster_id").cast(t).as("cluster_id"))
+  }
+
+  /** Union-find over the endpoints of `ends` (pairs interleaved: a₀, b₀,
+    * a₁, b₁, …). Returns the distinct nodes ascending and, per node, its
+    * component's minimum. Nodes are indexed by their rank among the
+    * sorted ids, and a union always hangs the larger root under the
+    * smaller, so every root is its component's minimum; path halving
+    * keeps `find` near-constant. */
+  private[ops] def componentMinima(ends: Array[Long]): (Array[Long], Array[Long]) = {
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    for (v <- sorted) if (n == 0 || sorted(n - 1) != v) { sorted(n) = v; n += 1 }
+    val nodes = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var i = 0
+    while (i < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(nodes, ends(i)))
+      val rb = find(java.util.Arrays.binarySearch(nodes, ends(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    (nodes, Array.tabulate(n)(k => nodes(find(k))))
+  }
+
+  /** [[clusters]] by label propagation, falling back to [[clustersStar]]
+    * past `maxIters` rounds. */
+  private def clustersPropagated(edges: DataFrame, pairs: DataFrame, maxIters: Int): DataFrame = {
     val adj = edges.unionByName(edges.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("a")).cache()
     // convergence via the LABEL-SUM invariant (r18): every node's label
@@ -1602,23 +1692,32 @@ object Dedup {
     // so the per-round job that re-aggregated the freshly checkpointed
     // labels is gone (the loop is per-round-job-floor-bound at fixture
     // scale: QueryProf r19 shows 49 sub-160 ms jobs on the star twin).
-    def ckptWithSum(pre: DataFrame): (DataFrame, java.math.BigDecimal) = {
+    // The same observation counts null ids, refused after round 0.
+    def ckptWithSum(pre: DataFrame): (DataFrame, java.math.BigDecimal, Long) = {
       val named = pre.observe("graft_label_sum",
         coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("s"))
+          lit(0).cast("decimal(38,0)")).as("s"),
+        count_if(col("id").isNull).as("null_ids"))
       val ck = Ckpt(named) // eager: executes named's plan
-      (ck, named.queryExecution.observedMetrics("graft_label_sum").getDecimal(0))
+      val m = named.queryExecution.observedMetrics("graft_label_sum")
+      (ck, m.getDecimal(0), m.getLong(1))
     }
-    var (labels, prevSum) = ckptWithSum(adj.select(col("a").as("id"))
+    val (initial, initialSum, nullIds) = ckptWithSum(adj.select(col("a").as("id"))
       .distinct()
       .withColumn("cluster_id", col("id")))
+    if (nullIds > 0) {
+      adj.unpersist(); freeCheckpoint(initial)
+      throw nullEndpoint
+    }
+    var labels = initial
+    var prevSum = initialSum
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
       val prop = adj
         .join(labels.select(col("id").as("a"), col("cluster_id")), Seq("a"))
         .select(col("b").as("id"), col("cluster_id"))
-      val (next, nextSum) = ckptWithSum(labels.unionByName(prop)
+      val (next, nextSum, _) = ckptWithSum(labels.unionByName(prop)
         .groupBy(col("id"))
         .agg(min(col("cluster_id")).as("cluster_id")))
       freeCheckpoint(labels) // superseded round's blocks, see the helper

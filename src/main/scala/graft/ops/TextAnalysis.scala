@@ -800,13 +800,11 @@ object TextAnalysis {
         // real text rows, so this OVERestimates rows and can only
         // over-widen — the safe direction under the 4096 cap (an
         // exchange too wide costs small-task overhead; one too narrow
-        // was the r14 4th-decade bottleneck).
-        val st = plan.stats
-        st.rowCount.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse {
-          val perRow =
-            math.max(1L, plan.schema.map(_.dataType.defaultSize.toLong).sum + 8L)
-          (st.sizeInBytes.min(BigInt(Long.MaxValue)) / perRow).toLong
-        }
+        // was the r14 4th-decade bottleneck). Bounded by the leaves:
+        // an inner join's estimate is otherwise the product of its
+        // sides, and survivors ⋈ their quality scores planned every
+        // widened exchange at the 4096 cap (~41k reduce tasks).
+        Sizing.boundedRows(docs)
       }
     val parts =
       math.min(4096L, math.min(rows, Long.MaxValue / 300L) * 300L / 4000000L).toInt

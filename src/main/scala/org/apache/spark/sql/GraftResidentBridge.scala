@@ -73,6 +73,22 @@ object GraftResidentBridge {
       missing)
   }
 
+  /** `df` as a lazy RELIABLE checkpoint whose rows are computed once.
+    * `Dataset.checkpoint(eager = false)` computes them in the frame's
+    * first action and again in the checkpoint write Spark runs after
+    * that action. Here the first action also stores them (memory, then
+    * disk), the write reads the stored blocks, and the blocks are
+    * dropped once the written files have cut the lineage. The frame
+    * keeps the source plan's statistics and partitioning, as
+    * `checkpoint` does. Needs the context's checkpoint directory. */
+  def storedCheckpoint(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    var rdd: RDD[InternalRow] = null
+    rdd = new CutRDD(ds.queryExecution.toRdd, () => rdd.unpersist(blocking = false))
+    rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+    classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
+
   /** `first`'s rows then `second`'s as one frame, partition i of it
     * reading partition i of each: `second` adds rows to `first`'s
     * tasks, and tasks only where it has more partitions. The planner

@@ -128,80 +128,226 @@ class OpsSpec extends SparkSpec {
       s"banded LSH recall $recovered/${truth.size} below 80%")
   }
 
-  test("clusters: min-label propagation closes transitive chains") {
-    import spark.implicits._
-    // chain 1-2-3-4 (diameter 3, forces >1 propagation round) plus an
-    // isolated pair 10-11; 7 appears in no pair → absent from output
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val cc = Dedup.clusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+  /** The two paths of `Dedup.clusters`: the session's broadcast bound as
+    * it is (the pair lists below are small enough to label on the
+    * driver), and -1, which forces label propagation and its star
+    * fallback. */
+  private val clusterPaths = Seq("" -> None, " [label propagation]" -> Some("-1"))
+
+  private def withBroadcastBound[T](bound: Option[String])(body: => T): T =
+    bound.fold(body) { b =>
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, b)
+      try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
+  /** The JVM-shared pinned checkpoint dir (see TestSpark.ckptDir) as the
+    * session's reliable-checkpoint switch for `body`. */
+  private def withCheckpointDir[T](body: => T): T = {
+    spark.conf.set("spark.graft.checkpointDir", TestSpark.ckptDir)
+    try body finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
-  test("clusters: over-diameter graph falls back to star contraction, never splits") {
-    import spark.implicits._
-    // a 9-node path needs 8 propagation rounds; cap at 3 → the call
-    // must switch to star contraction and still resolve one component
-    val chain = (1L to 9L).sliding(2).map(s => (s.head, s.last)).toSeq
-      .toDF("id_a", "id_b")
-    val cc = Dedup.clusters(chain, maxIters = 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    assert(cc.length === 9 && cc.forall(_._2 === 1L))
+  /** `body`'s result and the Spark jobs it started. */
+  private def jobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
   }
 
-  test("star contraction resolves a 50-long chain min-label would exhaust") {
-    import spark.implicits._
-    // non-consecutive ids so the component min isn't an artifact of
-    // dense numbering; diameter 50 > the 25-round propagation cap
-    val ids = (0 to 50).map(i => i * 7L + 3L)
-    val chain = ids.sliding(2).map(s => (s.last, s.head)).toSeq
-      .toDF("id_a", "id_b")
-    val star = Dedup.clustersStar(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    assert(star.length === 51 && star.forall(_._2 === 3L),
-      "every chain node must label with the component minimum")
-    // the propagation entry point agrees via its internal fallback
-    val viaFallback = Dedup.clusters(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    assert(viaFallback === star)
-    // and on a shallow branchy graph the two algorithms agree too
-    val bushy = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (4L, 1L))
-      .toDF("id_a", "id_b")
-    val a = Dedup.clusters(bushy).collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val b = Dedup.clustersStar(bushy).collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    assert(a === b)
+  private def labels(cc: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+
+  for ((path, bound) <- clusterPaths) {
+    test(s"clusters: min-label propagation closes transitive chains$path") {
+      import spark.implicits._
+      // chain 1-2-3-4 (diameter 3, forces >1 propagation round) plus an
+      // isolated pair 10-11; 7 appears in no pair → absent from output
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+        .toDF("id_a", "id_b")
+      val cc = withBroadcastBound(bound)(Dedup.clusters(pairs)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
+
+    test(s"clusters: over-diameter graph falls back to star contraction, never splits$path") {
+      import spark.implicits._
+      // a 9-node path needs 8 propagation rounds; cap at 3 → label
+      // propagation must switch to star contraction and still resolve
+      // one component (the driver path has no round cap at all)
+      val chain = (1L to 9L).sliding(2).map(s => (s.head, s.last)).toSeq
+        .toDF("id_a", "id_b")
+      val cc = withBroadcastBound(bound)(Dedup.clusters(chain, maxIters = 3)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(cc.length === 9 && cc.forall(_._2 === 1L))
+    }
+
+    test(s"star contraction resolves a 50-long chain min-label would exhaust$path") {
+      import spark.implicits._
+      // non-consecutive ids so the component min isn't an artifact of
+      // dense numbering; diameter 50 > the 25-round propagation cap
+      val ids = (0 to 50).map(i => i * 7L + 3L)
+      val chain = ids.sliding(2).map(s => (s.last, s.head)).toSeq
+        .toDF("id_a", "id_b")
+      val star = labels(Dedup.clustersStar(chain))
+      assert(star.length === 51 && star.forall(_._2 === 3L),
+        "every chain node must label with the component minimum")
+      // the clusters entry point agrees (through its internal fallback
+      // under label propagation)
+      assert(withBroadcastBound(bound)(labels(Dedup.clusters(chain))) === star)
+      // and on a shallow branchy graph the two algorithms agree too
+      val bushy = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (4L, 1L))
+        .toDF("id_a", "id_b")
+      assert(withBroadcastBound(bound)(labels(Dedup.clusters(bushy))) ===
+        labels(Dedup.clustersStar(bushy)))
+    }
+
+    test(s"cluster loop internals (r18): duplicate/reversed input pairs and late-round convergence$path") {
+      import spark.implicits._
+      // clustersStar dropped its inner per-round distinct (the large-star
+      // duplicates cost nothing downstream) — duplicate AND reversed
+      // input pairs must still resolve exactly; clusters replaced its
+      // per-round probe join with the label-sum invariant — a chain that
+      // changes labels in its LAST admissible round (diameter = rounds)
+      // must converge to the same labeling, not stop early
+      val noisy = Seq((2L, 1L), (1L, 2L), (2L, 3L), (3L, 2L), (2L, 3L),
+        (3L, 4L), (4L, 5L), (20L, 21L), (21L, 20L))
+        .toDF("id_a", "id_b")
+      val viaStar = labels(Dedup.clustersStar(noisy))
+      val viaClusters = withBroadcastBound(bound)(labels(Dedup.clusters(noisy)))
+      val expected = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+        20L -> 20L, 21L -> 20L)
+      assert(viaStar === expected)
+      assert(viaClusters === expected)
+    }
+
+    test(s"clusters: empty pair set converges immediately to an empty result (r19)$path") {
+      import spark.implicits._
+      // the label-sum probe over an empty label table is SQL NULL — it
+      // must coalesce to 0 and converge round one, not NPE (r18 advisor);
+      // both algorithms return the empty (id, cluster_id) frame
+      val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+      assert(withBroadcastBound(bound)(Dedup.clusters(none)).collect().isEmpty)
+      assert(Dedup.clustersStar(none).collect().isEmpty)
+    }
+
+    test(s"clusters: a NULL endpoint is refused by name$path") {
+      import spark.implicits._
+      // a null id has no component: label propagation would label it
+      // with its neighbours' minimum without joining them, star
+      // contraction would leave it apart — both paths refuse instead
+      val pairs = Seq((Option(1L), Option(2L)), (None, Option(5L)))
+        .toDF("id_a", "id_b")
+      val e = intercept[IllegalArgumentException](
+        withBroadcastBound(bound)(Dedup.clusters(pairs)))
+      assert(e.getMessage.contains("clusters()") && e.getMessage.contains("NULL"))
+    }
   }
 
-  test("cluster loop internals (r18): duplicate/reversed input pairs and late-round convergence") {
+  test("clusters over a cached broadcast-sized pair list: 1 Spark job, no checkpoint; at bound -1 the loop gives the same rows") {
     import spark.implicits._
-    // clustersStar dropped its inner per-round distinct (the large-star
-    // duplicates cost nothing downstream) — duplicate AND reversed
-    // input pairs must still resolve exactly; clusters replaced its
-    // per-round probe join with the label-sum invariant — a chain that
-    // changes labels in its LAST admissible round (diameter = rounds)
-    // must converge to the same labeling, not stop early
-    val noisy = Seq((2L, 1L), (1L, 2L), (2L, 3L), (3L, 2L), (2L, 3L),
-      (3L, 4L), (4L, 5L), (20L, 21L), (21L, 20L))
-      .toDF("id_a", "id_b")
-    val viaStar = Dedup.clustersStar(noisy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val viaProp = Dedup.clusters(noisy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val expected = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      20L -> 20L, 21L -> 20L)
-    assert(viaStar.toSeq === expected)
-    assert(viaProp.toSeq === expected)
+    val pairs = Seq((4L, 8L), (8L, 15L), (16L, 23L), (42L, 42L), (23L, 4L), (100L, 101L))
+      .toDF("id_a", "id_b").cache()
+    pairs.count()
+    try withCheckpointDir {
+      val before = TestSpark.ckptFiles(TestSpark.ckptDir)
+      val (onDriver, jobs) = jobCount(Dedup.clusters(pairs))
+      assert(jobs === 1, "the driver path collects the pairs in one job")
+      assert(TestSpark.ckptFiles(TestSpark.ckptDir) === before,
+        "the driver path must write no checkpoint")
+      assert(onDriver.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r
+      }.isEmpty, "the driver path returns a local relation, not a checkpoint")
+      val looped = withBroadcastBound(Some("-1"))(Dedup.clusters(pairs))
+      assert(TestSpark.ckptFiles(TestSpark.ckptDir) > before,
+        "at bound -1 the propagation loop runs (and checkpoints)")
+      assert(onDriver.schema === looped.schema)
+      assert(labels(onDriver) === labels(looped))
+      assert(labels(onDriver) === Seq(4L -> 4L, 8L -> 4L, 15L -> 4L, 16L -> 4L,
+        23L -> 4L, 42L -> 42L, 100L -> 100L, 101L -> 100L))
+    } finally pairs.unpersist()
   }
 
-  test("clusters: empty pair set converges immediately to an empty result (r19)") {
+  test("clusters under the reliable-checkpoint switch: the observed label sum counts each label once") {
     import spark.implicits._
-    // the label-sum probe over an empty label table is SQL NULL — it
-    // must coalesce to 0 and converge round one, not NPE (r18 advisor);
-    // both algorithms return the empty (id, cluster_id) frame
-    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.clusters(none).collect().isEmpty)
-    assert(Dedup.clustersStar(none).collect().isEmpty)
+    import scala.jdk.CollectionConverters._
+    // the loop's convergence test compares the label sums observed on
+    // each round's checkpoint action; a checkpoint that ran its plan
+    // twice would observe every sum doubled
+    val sums = new java.util.concurrent.ConcurrentLinkedQueue[java.math.BigDecimal]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        qe.observedMetrics.get("graft_label_sum").foreach(r => sums.add(r.getDecimal(0)))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val pairs = Seq((5L, 9L), (9L, 12L), (12L, 30L), (20L, 21L), (7L, 7L))
+      .toDF("id_a", "id_b")
+    spark.listenerManager.register(listener)
+    try withCheckpointDir {
+      val cc = withBroadcastBound(Some("-1"))(labels(Dedup.clusters(pairs)))
+      org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+      assert(cc === Seq(5L -> 5L, 7L -> 7L, 9L -> 5L, 12L -> 5L, 20L -> 20L,
+        21L -> 20L, 30L -> 5L))
+      assert(!sums.isEmpty, "each round's checkpoint reports its label sum")
+      assert(sums.asScala.last.longValueExact === cc.map(_._2).sum,
+        s"observed label sums ${sums.asScala.mkString(", ")}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("clusters differential: driver union-find, label propagation and star contraction agree on seeded random graphs") {
+    import spark.implicits._
+    // components by breadth-first search, the reference none of the
+    // three algorithms shares code with
+    def reference(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+      val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+      val label = scala.collection.mutable.Map.empty[Long, Long]
+      adj.keys.toSeq.sorted.foreach { root =>
+        if (!label.contains(root)) {
+          val queue = scala.collection.mutable.Queue(root)
+          label(root) = root
+          while (queue.nonEmpty)
+            adj(queue.dequeue()).foreach { v =>
+              if (!label.contains(v)) { label(v) = root; queue.enqueue(v) }
+            }
+        }
+      }
+      label.toSeq.sortBy(_._1)
+    }
+    // chains of 9, 27 and 33 nodes: the last two are deeper than the
+    // 25-round propagation cap, so label propagation falls back to stars
+    for ((seed, chainLen) <- Seq(1 -> 9, 2 -> 27, 3 -> 33)) {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1 to 200).map(i => i * 13L + rnd.nextInt(13))).iterator
+      def take(k: Int): Seq[Long] = Seq.fill(k)(ids.next())
+      def either(a: Long, b: Long): (Long, Long) = if (rnd.nextBoolean()) (a, b) else (b, a)
+      val cliques = Seq.fill(3)(take(2 + rnd.nextInt(4)))
+        .flatMap(c => c.combinations(2).map(p => either(p(0), p(1))))
+      val stars = Seq.fill(3)(ids.next() -> take(2 + rnd.nextInt(5)))
+        .flatMap { case (hub, leaves) => leaves.map(either(hub, _)) }
+      val chain = take(chainLen).sliding(2).map(p => either(p(0), p(1))).toSeq
+      val selfPairs = take(2).map(v => (v, v))
+      val base = cliques ++ stars ++ chain ++ selfPairs
+      val pairs = rnd.shuffle(base ++ rnd.shuffle(base).take(4))
+      val df = pairs.toDF("id_a", "id_b")
+      val expected = reference(pairs)
+      assert(labels(Dedup.clusters(df)) === expected, s"driver path, seed $seed")
+      assert(withBroadcastBound(Some("-1"))(labels(Dedup.clusters(df))) === expected,
+        s"label propagation, seed $seed")
+      assert(labels(Dedup.clustersStar(df)) === expected, s"star contraction, seed $seed")
+    }
   }
 
   test("substring dedup: a shared 60-token span pairs unrelated docs; nothing else pairs") {
@@ -410,6 +556,30 @@ class OpsSpec extends SparkSpec {
       assert(TestSpark.ckptFiles(dir) > before,
         "the reliable path must have written checkpoint files")
     } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
+  test("Ckpt under the reliable-checkpoint switch computes each row once, eager or lazy") {
+    import spark.implicits._
+    // Spark writes a reliable checkpoint's files in a job after the one
+    // that computed the rows; a lazy checkpoint that does not store them
+    // computes every row twice, and an observation on it counts twice
+    val computed = spark.sparkContext.longAccumulator("graft_ckpt_rows")
+    def frame = spark.range(0, 1000, 1, 4).as[Long].map { x => computed.add(1); x }
+      .toDF("x").observe("graft_ckpt_sum", sum(col("x")).as("s"))
+    withCheckpointDir {
+      val before = TestSpark.ckptFiles(TestSpark.ckptDir)
+      for (eager <- Seq(true, false)) {
+        computed.reset()
+        val f = frame
+        val ck = graft.ops.Ckpt(f, eager)
+        assert(ck.count() === 1000L && ck.agg(sum(col("x"))).head.getLong(0) === 499500L)
+        assert(computed.value === 1000L, s"rows computed (eager = $eager)")
+        assert(f.queryExecution.observedMetrics("graft_ckpt_sum").getLong(0) === 499500L,
+          s"observed sum (eager = $eager)")
+      }
+      assert(TestSpark.ckptFiles(TestSpark.ckptDir) > before,
+        "both calls must have written checkpoint files")
+    }
   }
 
   test("Ckpt pins the first checkpoint dir per context; a conflicting second dir is kept out") {
@@ -1732,6 +1902,33 @@ class OpsSpec extends SparkSpec {
     val fixture = graft.ops.TextAnalysis.knLogprob(docs)
       .agg(max(col("avg_logp_kn"))).head.getDouble(0)
     assert(fixture < 0.0, "every KN probability is < 1")
+  }
+
+  test("kneser-ney on a join-derived input plans no wider than on the left-semi form") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the curation pipeline's inputs: cached survivors and their cached
+    // quality scores. Without CBO the inner join's size estimate is the
+    // product of its sides, which widened every sized exchange
+    def plannedReduceTasks(df: org.apache.spark.sql.DataFrame): Long = {
+      def widths(p: SparkPlan): Seq[Long] = p.collect {
+        case a: AdaptiveSparkPlanExec => widths(a.inputPlan)
+        case e: ShuffleExchangeExec => Seq(e.outputPartitioning.numPartitions.toLong)
+      }.flatten
+      widths(df.queryExecution.executedPlan).sum
+    }
+    val survivors = docs.cache()
+    val kept = graft.ops.TextAnalysis.qualityScore(survivors)
+      .filter(col("quality") >= 0.7).select(col("doc_id"), col("quality")).cache()
+    try {
+      survivors.count(); kept.count()
+      val semi = plannedReduceTasks(graft.ops.TextAnalysis.knLogprob(
+        survivors.join(kept, Seq("doc_id"), "left_semi")))
+      val inner = plannedReduceTasks(graft.ops.TextAnalysis.knLogprob(
+        survivors.join(kept, Seq("doc_id"))))
+      assert(inner <= semi, s"inner-join input plans $inner reduce tasks, left-semi $semi")
+    } finally { kept.unpersist(); survivors.unpersist() }
   }
 
   test("interpolated LM: λ=1 collapses to the pure bigram conditional score") {

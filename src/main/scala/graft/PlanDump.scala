@@ -100,7 +100,7 @@ object PlanDump {
       "r_events_funnel" -> "deadline funnel: per-stage filter + min-agg chained on user_id, conditional mins instead of per-user subqueries",
       "x_rp_distortion" -> "JL projection audit: literal +-1 matrix unrolls into the scan projection; sampled self-join is bounded; cut is TakeOrderedAndProject",
       "x_corpus_report" -> "corpus report: three bounded single-row aggregate sides crossed by broadcast — one doc pass, one token pass, one lang head",
-      "x_kn_logprob" -> "Kneser-Ney: every model quantity is a window over the corpus bigram TYPE table (one groupBy), joined back onto the doc tf on the bigram key — no countDistinct, no second corpus pass",
+      "x_kn_logprob" -> "Kneser-Ney: one corpus pass — the doc bigram tf is materialized and read by both the type table and the scoring join; a type table under the broadcast bound is collected once and its marginals counted on the driver (broadcast back), a larger one takes every model quantity as a window over itself — no countDistinct",
       "x_cluster_terms" -> "cluster topics: broadcast-centroid argmax assignment (narrow map) equi-joined to documents, then the two vocabulary-sized lift windows",
       "r_events_markov" -> "transition matrix: one user_id shuffle for the lag window, bounded (prev, next) count keys, exact integer ratios",
       "x_zipf_fit" -> "Zipf regression: four sums folded in rank order inside one vocabulary-bounded collected row — no corpus-sized float reduction",

@@ -1604,7 +1604,7 @@ object Dedup {
   /** Whether the session would ship `df` whole to one place, judged as
     * the planner judges a broadcast: optimizer statistics against
     * `spark.sql.autoBroadcastJoinThreshold` (-1 disables). No job. */
-  private def underBroadcastBound(df: DataFrame): Boolean = {
+  private[ops] def underBroadcastBound(df: DataFrame): Boolean = {
     val bound = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     bound >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
   }

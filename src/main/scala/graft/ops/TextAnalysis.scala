@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
@@ -967,51 +968,38 @@ object TextAnalysis {
     * complete", the correction that stops frequent-but-context-bound
     * words (the "Francisco" effect) from inflating the back-off.
     *
-    * Scale: the corpus bigram TYPE table (one groupBy over the doc tf)
-    * carries every model quantity as plain windows over itself —
-    * c₁ = Σc₁₂ by prefix, N₁₊ forward/backward = type counts by
-    * w₁/w₂ — so no countDistinct and no second corpus pass; the type
-    * table then joins back onto the doc tf on the bigram key (the
-    * unigramLogprob exchange-reuse shape). Per-doc sums fold a
-    * bigram-sorted list; the discount renders into the oracle from the
-    * same Scala double. */
+    * Scale: one corpus pass. The per-document bigram counts
+    * ([[knBigramCounts]]: tokenize, explode, one (doc, bigram) shuffle)
+    * are materialized through the [[Ckpt]] switch, and both the type
+    * statistics and the scoring join read them, so the tokenize +
+    * explode runs once without relying on AQE exchange reuse. The
+    * corpus bigram TYPE table (c₁₂ per bigram) then takes one of two
+    * paths, chosen from plan statistics alone (no job):
+    *  - at or under the session's broadcast bound
+    *    (`spark.sql.autoBroadcastJoinThreshold`) it is collected in one
+    *    job and c₁, N₁₊(w₁·), N₁₊(·w₂) and N₁₊(··) are counted on the
+    *    driver as exact longs, keyed by the words' bytes as Spark groups
+    *    them ([[knModelOnDriver]]); the model broadcasts back onto the
+    *    bigram counts with N₁₊(··) as a literal.
+    *  - past the bound, or at -1, every model quantity is a window over
+    *    the type table (c₁ = Σc₁₂ by prefix, N₁₊ forward/backward =
+    *    type counts by w₁/w₂, no countDistinct), joined back onto the
+    *    bigram counts on the bigram key.
+    * Both paths feed the same per-row expression over the same longs,
+    * and per-doc sums fold a bigram-sorted list, so they return the
+    * same rows. The discount renders into the oracle from the same
+    * Scala double. */
   def knLogprob(docs: DataFrame, discount: Double = 0.75): DataFrame = {
-    // tokenize once per row below the explode (Generate does no
-    // subexpression elimination — the ngramsOfToks note)
-    val toks = col("_toks")
-    val bgArr = when(size(toks) >= 2,
-      zip_with(
-        slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-      .otherwise(array().cast("array<string>"))
     val widen = gramWiden(docs)
-    // isnotnull(bg) is a semantic no-op (explode emits no nulls) but
-    // keeps canonical equality between the consumer branches the
-    // tfDoc⋈types join would otherwise fork by inferring the filter
-    // into only two of them (the dsirWeights rule).
-    val tfDoc = widen(spreadDocs(docs).withColumn("_toks", tokens(col("text")))
-        .select(col("doc_id"), explode(bgArr).as("bg"))
-        .where(col("bg").isNotNull),
-        Seq(col("doc_id"), col("bg")))
-      .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("k"))
-    val types0 = widen(tfDoc, Seq(col("bg")))
+    val tfDoc = Ckpt(knBigramCounts(docs, widen), eager = false)
+    val types = widen(tfDoc, Seq(col("bg")))
       .groupBy(col("bg")).agg(sum(col("k")).as("c12"))
-      .withColumn("w1", split(col("bg"), " ").getItem(0))
-      .withColumn("w2", split(col("bg"), " ").getItem(1))
-    val types1 = widen(types0, Seq(col("w1")))
-      .withColumn("c1", sum(col("c12")).over(Window.partitionBy(col("w1"))))
-      .withColumn("n1f", count(lit(1)).over(Window.partitionBy(col("w1"))))
-    val types = widen(types1, Seq(col("w2")))
-      .withColumn("n1b", count(lit(1)).over(Window.partitionBy(col("w2"))))
-    // count types0, not types: windows don't change the row count, and
-    // counting below them keeps the pinned window exchanges out of
-    // this branch (column pruning strips the windows anyway — this
-    // just makes the plan say what executes)
-    val n1all = types0.agg(count(lit(1)).as("nall"))
+    val modelled =
+      if (Dedup.underBroadcastBound(types))
+        tfDoc.join(broadcast(knModelOnDriver(types)), Seq("bg"))
+      else knModelWindowed(tfDoc, types, widen)
     val d = lit(discount)
-    widen(tfDoc, Seq(col("bg"))).join(widen(types, Seq(col("bg"))), Seq("bg"))
-      .crossJoin(broadcast(n1all))
+    modelled
       .select(col("doc_id"), col("bg"), col("k"),
         (col("k").cast("double") * log(
           greatest(col("c12").cast("double") - d, lit(0.0)) /
@@ -1028,6 +1016,82 @@ object TextAnalysis {
           aggregate(col("l"), lit(0.0), (a, x) => a + x.getField("v")) /
             col("n_bigrams").cast("double"),
           6).as("avg_logp_kn"))
+  }
+
+  /** [[knLogprob]]'s corpus pass, before its materialization:
+    * (doc_id, bg, k) bigram counts per document. */
+  private[graft] def knBigramCounts(docs: DataFrame): DataFrame =
+    knBigramCounts(docs, gramWiden(docs))
+
+  private def knBigramCounts(
+      docs: DataFrame, widen: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
+    // tokenize once per row below the explode (Generate does no
+    // subexpression elimination — the ngramsOfToks note)
+    val toks = col("_toks")
+    val bgArr = when(size(toks) >= 2,
+      zip_with(
+        slice(toks, lit(1), size(toks) - 1),
+        slice(toks, lit(2), size(toks) - 1),
+        (a, b) => concat(a, lit(" "), b)))
+      .otherwise(array().cast("array<string>"))
+    widen(spreadDocs(docs).withColumn("_toks", tokens(col("text")))
+        .select(col("doc_id"), explode(bgArr).as("bg")),
+        Seq(col("doc_id"), col("bg")))
+      .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("k"))
+  }
+
+  /** [[knLogprob]]'s model on the driver: one job collects the type
+    * table `(bg, c12)`, and c₁, N₁₊(w₁·), N₁₊(·w₂) and N₁₊(··) are
+    * counted exactly. Bigrams travel as bytes and the words are split
+    * at the first space byte, so two words are one key exactly when
+    * their bytes are equal — the grouping Spark applies — and no
+    * decode can merge them (tokens hold no space, so the rest of the
+    * bigram is w₂). Returns a local (bg, c12, c1, n1f, n1b, nall)
+    * relation, N₁₊(··) as a literal column. */
+  private def knModelOnDriver(types: DataFrame): DataFrame = {
+    import java.nio.ByteBuffer
+    val rows = types.select(col("bg").cast("binary"), col("c12")).collect()
+    val bgs = rows.map(_.getAs[Array[Byte]](0))
+    val c12 = rows.map(_.getLong(1))
+    val space = bgs.map(_.indexOf(' '.toByte))
+    def w1(i: Int) = ByteBuffer.wrap(bgs(i), 0, space(i))
+    def w2(i: Int) = ByteBuffer.wrap(bgs(i), space(i) + 1, bgs(i).length - space(i) - 1)
+    val c1 = scala.collection.mutable.HashMap.empty[ByteBuffer, Long]
+    val n1f = scala.collection.mutable.HashMap.empty[ByteBuffer, Long]
+    val n1b = scala.collection.mutable.HashMap.empty[ByteBuffer, Long]
+    bgs.indices.foreach { i =>
+      c1(w1(i)) = c1.getOrElse(w1(i), 0L) + c12(i)
+      n1f(w1(i)) = n1f.getOrElse(w1(i), 0L) + 1L
+      n1b(w2(i)) = n1b.getOrElse(w2(i), 0L) + 1L
+    }
+    val schema = StructType(StructField("bg", BinaryType) +:
+      Seq("c12", "c1", "n1f", "n1b").map(StructField(_, LongType)))
+    types.sparkSession.createDataFrame(java.util.Arrays.asList(bgs.indices.map(i =>
+        Row(bgs(i), c12(i), c1(w1(i)), n1f(w1(i)), n1b(w2(i)))): _*), schema)
+      .select(col("bg").cast("string").as("bg"), col("c12"), col("c1"), col("n1f"),
+        col("n1b"), lit(bgs.length.toLong).as("nall"))
+  }
+
+  /** [[knLogprob]]'s model past the broadcast bound: windows over the
+    * type table, joined back onto the bigram counts. */
+  private def knModelWindowed(
+      tfDoc: DataFrame,
+      types: DataFrame,
+      widen: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
+    val types0 = types
+      .withColumn("w1", split(col("bg"), " ").getItem(0))
+      .withColumn("w2", split(col("bg"), " ").getItem(1))
+    val types1 = widen(types0, Seq(col("w1")))
+      .withColumn("c1", sum(col("c12")).over(Window.partitionBy(col("w1"))))
+      .withColumn("n1f", count(lit(1)).over(Window.partitionBy(col("w1"))))
+    val model = widen(types1, Seq(col("w2")))
+      .withColumn("n1b", count(lit(1)).over(Window.partitionBy(col("w2"))))
+    // count types0, not the windowed table: windows don't change the
+    // row count, and counting below them keeps their exchanges out of
+    // this branch
+    val n1all = types0.agg(count(lit(1)).as("nall"))
+    widen(tfDoc, Seq(col("bg"))).join(widen(model, Seq(col("bg"))), Seq("bg"))
+      .crossJoin(broadcast(n1all))
   }
 
   /** DuckDB twin of [[knLogprob]] — discount rendered from the same

@@ -1884,24 +1884,120 @@ class OpsSpec extends SparkSpec {
       "a memoryless corpus loses little entropy to conditioning")
   }
 
-  test("kneser-ney: closed-form check on a toy corpus; scores strictly negative") {
+  /** The two model paths of `TextAnalysis.knLogprob`: the session's
+    * broadcast bound as it is (the type tables below are counted on the
+    * driver), and -1, which forces the windowed model. */
+  private val knPaths = Seq("" -> None, " [window path]" -> Some("-1"))
+
+  /** knLogprob's rows as (doc_id, n_bigrams, avg_logp_kn), by doc_id. */
+  private def knRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sortBy(_._1)
+
+  /** Whether a knLogprob result took the windowed model. */
+  private def windowed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.nonEmpty
+
+  for ((path, bound) <- knPaths) {
+    test(s"kneser-ney: closed-form check on a toy corpus; scores strictly negative$path") {
+      import spark.implicits._
+      // corpus bigrams: ab:2, ba:1, ac:1 → c1(a)=3, c1(b)=1,
+      // N1+(a·)=2, N1+(b·)=1, N1+(·b)=N1+(·a)=N1+(·c)=1, N1+(··)=3
+      val d = Seq((1L, "a b a b"), (2L, "a c")).toDF("doc_id", "text")
+      val got = withBroadcastBound(bound)(knRows(graft.ops.TextAnalysis.knLogprob(d)))
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      val pBA = (2 - 0.75) / 3 + (0.75 * 2 / 3) * (1.0 / 3) // P(b|a)
+      val pAB = (1 - 0.75) / 1 + (0.75 * 1 / 1) * (1.0 / 3) // P(a|b)
+      val pCA = (1 - 0.75) / 3 + (0.75 * 2 / 3) * (1.0 / 3) // P(c|a)
+      assert(got(1L)._1 === 3L)
+      assert(math.abs(got(1L)._2 -
+        (2 * math.log(pBA) + math.log(pAB)) / 3) < 1e-6)
+      assert(math.abs(got(2L)._2 - math.log(pCA)) < 1e-6)
+      // discounted mass never pushes a probability past 1
+      val fixture = withBroadcastBound(bound)(graft.ops.TextAnalysis.knLogprob(docs)
+        .agg(max(col("avg_logp_kn"))).head.getDouble(0))
+      assert(fixture < 0.0, "every KN probability is < 1")
+    }
+  }
+
+  test("kneser-ney: the driver-side model gives the window path's rows (seeded corpora)") {
     import spark.implicits._
-    // corpus bigrams: ab:2, ba:1, ac:1 → c1(a)=3, c1(b)=1,
-    // N1+(a·)=2, N1+(b·)=1, N1+(·b)=N1+(·a)=N1+(·c)=1, N1+(··)=3
-    val d = Seq((1L, "a b a b"), (2L, "a c")).toDF("doc_id", "text")
-    val got = graft.ops.TextAnalysis.knLogprob(d)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val pBA = (2 - 0.75) / 3 + (0.75 * 2 / 3) * (1.0 / 3) // P(b|a)
-    val pAB = (1 - 0.75) / 1 + (0.75 * 1 / 1) * (1.0 / 3) // P(a|b)
-    val pCA = (1 - 0.75) / 3 + (0.75 * 2 / 3) * (1.0 / 3) // P(c|a)
-    assert(got(1L)._1 === 3L)
-    assert(math.abs(got(1L)._2 -
-      (2 * math.log(pBA) + math.log(pAB)) / 3) < 1e-6)
-    assert(math.abs(got(2L)._2 - math.log(pCA)) < 1e-6)
-    // discounted mass never pushes a probability past 1
-    val fixture = graft.ops.TextAnalysis.knLogprob(docs)
-      .agg(max(col("avg_logp_kn"))).head.getDouble(0)
-    assert(fixture < 0.0, "every KN probability is < 1")
+    // words: ASCII, accented, CJK, emoji (one with a skin-tone modifier)
+    // and two byte strings that are not UTF-8; a small vocabulary makes
+    // bigrams repeat within and across documents
+    val vocab: Seq[Array[Byte]] =
+      Seq("a", "b", "the", "café", "naïve", "日本", "語", "🙂", "👍🏽", "x1")
+        .map(_.getBytes("UTF-8")) ++
+        Seq(Array(0x61, 0xff, 0x62), Array(0x61, 0xfe, 0x62)).map(_.map(_.toByte))
+    val space = Array(' '.toByte)
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val texts: Seq[Option[Array[Byte]]] = (1 to 60).map { i =>
+        i % 12 match {
+          case 0 => None // NULL text
+          case 1 => Some(vocab(rnd.nextInt(vocab.size))) // one token
+          case 2 => Some(Array.emptyByteArray)
+          case 3 => Some("   ".getBytes("UTF-8")) // spaces only
+          case 4 => Some("a b a b a b a b".getBytes("UTF-8")) // repeats
+          case _ =>
+            val n = 2 + rnd.nextInt(12)
+            Some(Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).reduce(_ ++ space ++ _))
+        }
+      }
+      val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "b")
+        .select(col("doc_id"), col("b").cast("string").as("text"))
+      val onDriver = graft.ops.TextAnalysis.knLogprob(d)
+      val looped = withBroadcastBound(Some("-1")) {
+        val w = graft.ops.TextAnalysis.knLogprob(d)
+        assert(windowed(w), "at bound -1 the model is windowed")
+        knRows(w)
+      }
+      assert(!windowed(onDriver), "a broadcast-sized type table is modelled on the driver")
+      val rows = knRows(onDriver)
+      assert(rows.nonEmpty)
+      assert(rows === looped, s"seed $seed")
+    }
+    // an empty corpus gives no rows on either path
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    for ((_, bound) <- knPaths)
+      assert(withBroadcastBound(bound)(knRows(graft.ops.TextAnalysis.knLogprob(none))).isEmpty)
+  }
+
+  test("kneser-ney over the curation pipeline's cached inputs tokenizes the corpus once") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // Generate nodes in the plans that executed, a reused stage counted
+    // once: the bigram explode runs once per node
+    def generates(p: SparkPlan): Int = p.collect {
+      case a: AdaptiveSparkPlanExec => generates(a.executedPlan)
+      case s: QueryStageExec => generates(s.plan)
+      case _: GenerateExec => 1
+    }.sum
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = n.addAndGet(generates(qe.executedPlan))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val survivors = docs.cache()
+    val kept = graft.ops.TextAnalysis.qualityScore(survivors)
+      .filter(col("quality") >= 0.7).select(col("doc_id"), col("quality")).cache()
+    try {
+      survivors.count(); kept.count()
+      val sc = spark.sparkContext
+      org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+      spark.listenerManager.register(listener)
+      val rows = try {
+        val r = knRows(graft.ops.TextAnalysis.knLogprob(
+          survivors.join(kept, Seq("doc_id"), "left_semi")))
+        org.apache.spark.GraftTestBridges.waitUntilListenerBusEmpty(sc, 30000)
+        r
+      } finally spark.listenerManager.unregister(listener)
+      assert(rows.nonEmpty)
+      assert(n.get === 1, s"the bigram explode executed ${n.get} times")
+    } finally { kept.unpersist(); survivors.unpersist() }
   }
 
   test("kneser-ney on a join-derived input plans no wider than on the left-semi form") {
@@ -1918,15 +2014,19 @@ class OpsSpec extends SparkSpec {
       }.flatten
       widths(df.queryExecution.executedPlan).sum
     }
+    // the corpus pass is materialized inside knLogprob, so its sized
+    // exchanges are read from the pass itself, the rest from the result
+    def planned(in: org.apache.spark.sql.DataFrame): Long =
+      plannedReduceTasks(graft.ops.TextAnalysis.knBigramCounts(in)) +
+        plannedReduceTasks(graft.ops.TextAnalysis.knLogprob(in))
     val survivors = docs.cache()
     val kept = graft.ops.TextAnalysis.qualityScore(survivors)
       .filter(col("quality") >= 0.7).select(col("doc_id"), col("quality")).cache()
     try {
       survivors.count(); kept.count()
-      val semi = plannedReduceTasks(graft.ops.TextAnalysis.knLogprob(
-        survivors.join(kept, Seq("doc_id"), "left_semi")))
-      val inner = plannedReduceTasks(graft.ops.TextAnalysis.knLogprob(
-        survivors.join(kept, Seq("doc_id"))))
+      val semi = planned(survivors.join(kept, Seq("doc_id"), "left_semi"))
+      val inner = planned(survivors.join(kept, Seq("doc_id")))
+      assert(semi > 0)
       assert(inner <= semi, s"inner-join input plans $inner reduce tasks, left-semi $semi")
     } finally { kept.unpersist(); survivors.unpersist() }
   }

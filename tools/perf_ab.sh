@@ -7,7 +7,10 @@
 # For each seed it runs `python3 perfbench/run.py --workload <workload>
 # --seed <seed> --seconds 8 --trace 0` once in each checkout (each builds
 # from its own sources), alternating which side runs first: the parent
-# leads on the 1st, 3rd, ... seed, the change on the others. Then it
+# leads on the 1st, 3rd, ... seed, the change on the others. Before the
+# first seed, each checkout gets one untimed run of the first seed, so
+# that no measured run pays for the build or for the class-data archive
+# a build's first run dumps at exit. Then it
 # prints, per end-to-end metric, each side's median and quartiles and how
 # many seed pairs the change won (its value better than the parent's in
 # the metric's direction, taken from the parent's BENCHMARK.json), plus
@@ -31,7 +34,7 @@
 set -u
 
 if [ "$#" -lt 4 ]; then
-  sed -n '2,30p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,33p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 parent=$(cd "$1" && pwd) || exit 2
@@ -41,16 +44,22 @@ shift 3
 out=$(mktemp -d -t perf_ab.XXXXXX)
 echo "raw results: $out"
 
-run_side() { # side seed
-  local dir
+run_side() { # side seed [warm]
+  local dir name=$1-$2${3:+-$3}
   if [ "$1" = parent ]; then dir=$parent; else dir=$change; fi
   (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$2" \
-    --seconds 8 --trace 0) >"$out/$1-$2.out" 2>"$out/$1-$2.err"
+    --seconds 8 --trace 0) >"$out/$name.out" 2>"$out/$name.err"
   local code=$?
-  tail -n 1 "$out/$1-$2.out" >"$out/$1-$2.json"
-  tail -n 2 "$out/$1-$2.out" | head -n 1 >"$out/$1-$2.detail.json"
-  echo "seed $2 $1: exit $code $(head -c 160 "$out/$1-$2.json")"
+  tail -n 1 "$out/$name.out" >"$out/$name.json"
+  tail -n 2 "$out/$name.out" | head -n 1 >"$out/$name.detail.json"
+  echo "seed $2 $1${3:+ ($3, untimed)}: exit $code $(head -c 160 "$out/$name.json")"
 }
+
+# the untimed runs: their results are kept beside the others but never
+# tallied
+for side in parent change; do
+  run_side "$side" "$1" warm
+done
 
 i=0
 for seed in "$@"; do
